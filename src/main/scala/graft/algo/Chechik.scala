@@ -13,13 +13,20 @@ import org.apache.spark.sql.functions._
   *     (A9, ChechikEstimator.java:52,151-160)
   *  3. keep-probability p_v = min(1, K·λ_v), K = ⌈ln n / ε²⌉
   *     (A10, ChechikEstimator.java:46,166-172)
-  *  4. Bernoulli sample S by p_v; multi-source BFS from S; Horvitz–Thompson
-  *     farness estimate apxF(v) = Σ_{s∈S} d(s,v)/p_s
+  *  4. Bernoulli sample S by p_v; ONE multi-source BFS from S yields each
+  *     source's exact farness and, for v ∉ S, the Horvitz–Thompson estimate
+  *     apxF(v) = Σ_{s∈S} d(s,v)/p_s
   *     (A8, ChechikFarnessEstimator.java:143,158-161)
-  *  5. certification loop (T7, ChechikTopCloseness.java:148-153,182-219):
-  *     exact-BFS candidates in ascending apxF batches; certify processed v
-  *     once exactCloseness(v) ≥ (1+ε)·max apxCloseness of the unprocessed;
-  *     stop at ≥ k certified.
+  *  5. certification loop (T7, ChechikTopCloseness.java:148-153,182-219)
+  *     over V∖S only — S starts out processed with its exact farness, so no
+  *     vertex is BFS'd twice: exact-BFS candidates in ascending apxF
+  *     batches; certify processed v once
+  *     exactCloseness(v) ≥ (1+ε)·max apxCloseness of the unprocessed; stop
+  *     at ≥ k certified.
+  *
+  * When K ≥ n, λ_v ≥ 1/n makes every p_v = 1, so steps 1-3 are skipped and
+  * S = V (the sample they would draw, since the uniform is < 1): the run is
+  * one n-source BFS, every farness exact, and step 5 has nothing to do.
   *
   * Determinism: the reference uses Math.random() (ChechikEstimator.java:60);
   * we use xxhash64-derived uniforms keyed by (seed, vertex id) — fully
@@ -80,7 +87,7 @@ object Chechik {
       forceBitset: Option[Boolean] = None,
       prep: BitsetBfs.Prep = null): DataFrame = {
     val p = pivots.select(col("pivot").cast("long").as("pivot")).distinct()
-      .localCheckpoint(true)
+      .localCheckpoint(eager = false)
     val nPiv = p.count()
     val maxr =
       if (forceBitset.getOrElse(useBitset(nPiv, n))) {
@@ -123,125 +130,149 @@ object Chechik {
     var supersteps = 0L
     val countStep = (_: Int, _: Long) => supersteps += 1
 
-    val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(true)
+    // lazy checkpoint: the count is the one job that materializes it
+    val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(eager = false)
     val n = verts.count()
-    // chunk-keyed visit inputs shared across EVERY bitset visit of the run
-    // (estimator, sample, one per certification batch) — built once here
-    // instead of an arcs-row repartition per visit
-    val bprep = BitsetBfs.prepare(adjacency)
-    val nPivots = math.max(math.ceil(math.log(n.toDouble) / math.log(2)).toLong, 2L).min(n)
-
-    // 1. uniform pivot sample without replacement, seeded (R1)
-    val pivots = verts
-      .orderBy(xxhash64(lit(seed), col("id")))
-      .limit(nPivots.toInt)
-      .select(col("id").as("pivot"))
-
-    // 2-3. λ coefficients + keep probabilities from the pivot BFS (A9/A10)
-    val probs = estimatorCoefficients(spark, adjacency, pivots, verts, n, eps, countStep,
-        prep = bprep)
-      .select(col("id"), col("p"))
-
-    // 4. Bernoulli sample S (R2), HT farness estimate apxF(v) = Σ_s d(s,v)/p_s.
-    // The sample is the web-scale cardinality (K·E[λ]·n), so past the
-    // useBitset cap the row-BFS O(S·n) relation must never materialize:
-    // bitset visit + divisor-array reverse sum keeps it O(n·maskCols)/wave
-    val sample = probs.where(u01(seed + 1, col("id")) < col("p")).localCheckpoint(true)
-    val sampleSize = sample.count()
-
-    val apxFarness =
-      if (useBitset(sampleSize, n)) {
-        val vSample = BitsetBfs.visit(spark, adjacency,
-          sample.select(col("id").as("pivot")),
-          maskCols = maskColsFor(sampleSize), onSuperstep = countStep,
-          prep = bprep)
-        val out = BitsetBfs.reverseSum(
-            vSample, sample.select(col("id").as("pivot"), col("p").as("div")))
-          .select(col("id"), col("value").as("apxF"))
-          .localCheckpoint(true)
-        vSample.release()
-        out
-      } else {
-        MultiBfs.run(spark, adjacency, sample.select(col("id").as("pivot")),
-            onSuperstep = countStep)
-          .join(sample.select(col("id").as("pivot"), col("p")), "pivot")
-          .groupBy("id")
-          .agg(sum(col("dist").cast("double") / col("p")).as("apxF"))
-      }
-
-    // 5. certification loop. Schedule position via distributed range minting
-    // (Rank.globalRank) — the schedule is n rows and a global row_number
-    // window would sort all n through ONE task at scale.
-    val schedule = graft.core.Rank.globalRank(
-      verts
-        .join(apxFarness, Seq("id"), "left")
-        .select(col("id"), coalesce(col("apxF"), lit(Double.MaxValue)).as("apxF")),
-      "pos", asc("apxF"), asc("id"))
-      .localCheckpoint(true)
-
-    // Reference batches 10 BFS between re-sorts (TopCloseness.java:22); under
-    // level-synchronous execution a batch is ONE multi-source BFS, so larger
-    // batches amortize per-superstep job overhead — the certification
-    // guarantee is unchanged, at most one batch of extra exact BFS work.
-    val batch = math.max(k, batchSize)
-    var processed: Option[DataFrame] = None
-    var l = 0L
-    var certified = 0L
-    var exactBfs = 0L
-    while (certified < k && l < n) {
-      val batchIds = schedule.where(col("pos") >= l && col("pos") < l + batch)
-        .select(col("id").as("pivot"))
-      // exact farness per batch pivot; past the useBitset cap a batch is one
-      // wave-packed visit, O(n·maskCols) rows/superstep, not O(batch·n)
-      val (exactF, releaseBatch) =
-        if (useBitset(batch, n)) {
-          // the shared chunk-keyed `bprep` saves an arcs-row repartition +
-          // checkpoint per batch — the loop runs one visit per batch
-          val vb = BitsetBfs.visit(spark, adjacency, batchIds,
-            maskCols = maskColsFor(batch), onSuperstep = countStep,
-            prep = bprep)
-          (BitsetBfs.farness(vb).select(col("id"), col("farness")),
-            () => vb.release())
-        } else
-          (MultiBfs.run(spark, adjacency, batchIds, onSuperstep = countStep)
-            .groupBy(col("pivot").as("id"))
-            .agg(sum("dist").cast("long").as("farness")),
-            () => ())
-      processed = Some(mat.iterate(
-        processed.map(_.unionAll(exactF)).getOrElse(exactF), (l / batch).toInt, certified.toDouble))
-      // `processed` is materialized (mat.iterate is eager) — the batch
-      // visit's cached superstep states are dead now; without this each
-      // certification batch leaked its whole state history for the rest of
-      // the run (round-3 advice)
-      releaseBatch()
-      // batch size is derivable from the dense schedule bounds — positions
-      // are 0..n-1, so [l, l+batch) holds min(batch, n−l) ids; a count()
-      // here was a full scan job inside the flagship's hot loop (round-2
-      // verdict #3)
-      exactBfs += math.min(batch, n - l)
-      l += batch
-      // ONE aggregate job per batch (round-3 verdict #4 merged the former
-      // threshold job + certified-count job): the 1-row remainder aggregate
-      // — the largest possible true closeness among unprocessed candidates —
-      // broadcasts into a crossJoin and the certified count folds over it in
-      // the same action.
-      val remAgg = schedule.where(col("pos") >= l)
-        .agg(coalesce(max(lit(1.0) / nullif(col("apxF"), lit(0.0))), lit(0.0))
-          .as("maxRem"))
-      certified = processed.get
-        .crossJoin(broadcast(remAgg))
-        .agg(count(when(
-          col("farness") > 0 &&
-            lit(1.0) / col("farness") >= lit(1.0 + eps) * col("maxRem"), 1)))
-        .head().getLong(0)
+    // chunk-keyed visit inputs shared across every bitset visit of the run
+    // (estimator, sample, one per certification batch), built on the first
+    // visit that takes the bitset path — a row-path-only run never pays for it
+    var bprep: BitsetBfs.Prep = null
+    def prep(): BitsetBfs.Prep = {
+      if (bprep == null) bprep = BitsetBfs.prepare(adjacency)
+      bprep
     }
 
-    // top-k among certified, ties on the k-th farness extended (T5,
+    // steps 1-3 and the Bernoulli draw are skipped when K ≥ n: λ_v ≥ 1/n
+    // makes every p_v = min(1, K·λ_v) equal to 1, and u01 < 1, so the
+    // sample is all of V
+    val allSampled = kCoefficient(n, eps) >= n
+    val nPivots =
+      if (allSampled) 0L
+      else math.max(math.ceil(math.log(n.toDouble) / math.log(2)).toLong, 2L).min(n)
+
+    val (sample, sampleSize) =
+      if (allSampled) (verts.select(col("id"), lit(1.0).as("p")), n)
+      else {
+        // 1. uniform pivot sample without replacement, seeded (R1)
+        val pivots = verts
+          .orderBy(xxhash64(lit(seed), col("id")))
+          .limit(nPivots.toInt)
+          .select(col("id").as("pivot"))
+        // 2-3. λ coefficients + keep probabilities from the pivot BFS (A9/A10)
+        val probs = estimatorCoefficients(spark, adjacency, pivots, verts, n, eps, countStep,
+            prep = if (useBitset(nPivots, n)) prep() else null)
+          .select(col("id"), col("p"))
+        // 4. Bernoulli sample S (R2)
+        val s = probs.where(u01(seed + 1, col("id")) < col("p")).localCheckpoint(eager = false)
+        (s, s.count())
+      }
+    val unsampled = n - sampleSize
+
+    // 4. ONE visit from S feeds two consumers: every source's EXACT farness
+    // (seeds `processed` — no vertex of S is ever BFS'd again) and, for the
+    // vertices outside S, the Horvitz–Thompson estimate
+    // apxF(v) = Σ_s d(s,v)/p_s. The sample is the web-scale cardinality
+    // (K·E[λ]·n), so past the useBitset cap the row-BFS O(S·n) relation must
+    // never materialize: bitset visit + histogram / divisor-array reverse sum
+    // keep it O(n·maskCols) per wave.
+    val sources = sample.select(col("id").as("pivot"))
+    val (sampleFarness, apxFarness) =
+      if (useBitset(sampleSize, n)) {
+        val vSample = BitsetBfs.visit(spark, adjacency, sources,
+          maskCols = maskColsFor(sampleSize), onSuperstep = countStep,
+          prep = prep())
+        // both checkpoints are eager: the visit's states are freed below
+        val f = BitsetBfs.farness(vSample).localCheckpoint(true)
+        val apx = if (unsampled == 0) None else Some(
+          BitsetBfs.reverseSum(vSample, sample.select(col("id").as("pivot"), col("p").as("div")))
+            .select(col("id"), col("value").as("apxF"))
+            .localCheckpoint(true))
+        vSample.release()
+        (f, apx)
+      } else {
+        val dist = MultiBfs.run(spark, adjacency, sources, onSuperstep = countStep)
+        val f = dist.groupBy(col("pivot").as("id")).agg(sum("dist").cast("long").as("farness"))
+        val apx = if (unsampled == 0) None else Some(
+          dist.join(sample.select(col("id").as("pivot"), col("p")), "pivot")
+            .groupBy("id")
+            .agg(sum(col("dist").cast("double") / col("p")).as("apxF")))
+        (f, apx)
+      }
+
+    // 5. certification loop over V∖S only (nothing to certify when S = V)
+    var processed = sampleFarness
+    var exactBfs = 0L
+    apxFarness.foreach { apx =>
+      // Schedule position via distributed range minting (Rank.globalRank) —
+      // the schedule is |V∖S| rows and a global row_number window would sort
+      // all of them through ONE task at scale.
+      val schedule = graft.core.Rank.globalRank(
+        verts
+          .join(sample.select("id"), Seq("id"), "left_anti")
+          .join(apx, Seq("id"), "left")
+          .select(col("id"), coalesce(col("apxF"), lit(Double.MaxValue)).as("apxF")),
+        "pos", asc("apxF"), asc("id"))
+        .localCheckpoint(true)
+
+      // processed vertices whose exact closeness is ≥ (1+ε)·the largest
+      // estimated closeness among unprocessed positions ≥ l. ONE aggregate
+      // job: the 1-row remainder aggregate broadcasts into a crossJoin and
+      // the certified count folds over it in the same action.
+      def certifiedFrom(l: Long): Long = {
+        val remAgg = schedule.where(col("pos") >= l)
+          .agg(coalesce(max(lit(1.0) / nullif(col("apxF"), lit(0.0))), lit(0.0))
+            .as("maxRem"))
+        processed
+          .crossJoin(broadcast(remAgg))
+          .agg(count(when(
+            col("farness") > 0 &&
+              lit(1.0) / col("farness") >= lit(1.0 + eps) * col("maxRem"), 1)))
+          .head().getLong(0)
+      }
+
+      // Reference batches 10 BFS between re-sorts (TopCloseness.java:22);
+      // under level-synchronous execution a batch is ONE multi-source BFS,
+      // so larger batches amortize per-superstep job overhead — the
+      // certification guarantee is unchanged, at most one batch of extra
+      // exact BFS work.
+      val batch = math.max(k, batchSize)
+      var l = 0L
+      var certified = certifiedFrom(0L)
+      while (certified < k && l < unsampled) {
+        val batchIds = schedule.where(col("pos") >= l && col("pos") < l + batch)
+          .select(col("id").as("pivot"))
+        // exact farness per batch pivot; past the useBitset cap a batch is
+        // one wave-packed visit, O(n·maskCols) rows/superstep, not O(batch·n)
+        val (exactF, releaseBatch) =
+          if (useBitset(batch, n)) {
+            val vb = BitsetBfs.visit(spark, adjacency, batchIds,
+              maskCols = maskColsFor(batch), onSuperstep = countStep,
+              prep = prep())
+            (BitsetBfs.farness(vb).select(col("id"), col("farness")),
+              () => vb.release())
+          } else
+            (MultiBfs.run(spark, adjacency, batchIds, onSuperstep = countStep)
+              .groupBy(col("pivot").as("id"))
+              .agg(sum("dist").cast("long").as("farness")),
+              () => ())
+        processed = mat.iterate(processed.unionAll(exactF), (l / batch).toInt, certified.toDouble)
+        // `processed` is materialized (mat.iterate is eager): the batch
+        // visit's cached superstep states are dead now
+        releaseBatch()
+        // positions are dense 0..|V∖S|-1, so [l, l+batch) holds
+        // min(batch, |V∖S|−l) ids — no count job in the loop
+        exactBfs += math.min(batch, unsampled - l)
+        l += batch
+        certified = certifiedFrom(l)
+      }
+    }
+
+    // top-k among processed, ties on the k-th farness extended (T5,
     // GTLoader.java:45-52); farness is an integer ⇒ ranking is float-free
     // farness 0 = isolated vertex = closeness 0: ranks LAST, not first.
     // Distributed top-k (TakeOrderedAndProject boundary + tie filter), not
     // an unpartitioned rank() window — `processed` can grow to n rows.
-    val ranked = processed.get
+    val ranked = processed
       .withColumn("frank", when(col("farness") > 0, col("farness")).otherwise(Long.MaxValue))
     val topk = graft.core.Rank.topkWithTies(ranked, Seq(asc("frank")), k)(
         _.getAs[Long]("frank"))(b => col("frank") <= b.asInstanceOf[Long])
@@ -250,7 +281,7 @@ object Chechik {
         when(col("farness") > 0, lit(1.0) / col("farness")).otherwise(0.0).as("closeness"))
       .orderBy(asc("farness"), asc("id"))
 
-    bprep.release()
+    if (bprep != null) bprep.release()
     val telemetry = Telemetry(
       n = n, initialPivots = nPivots, sampleSize = sampleSize,
       exactBfs = exactBfs, totalBfs = nPivots + sampleSize + exactBfs,

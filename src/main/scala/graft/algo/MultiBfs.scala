@@ -24,15 +24,17 @@ import org.apache.spark.sql.functions._
   * V.dist ≤ d < M.dist = d+1 wherever both sides match, so the coalesce IS
   * the min-dist/first-discovery rule, and a NULL state side is the
   * distributed `distance[s] == -1` test
-  * (GeometricCentralities.java:165,176-178). One job, ONE exchange of
-  * Σ deg(frontier) message rows per superstep: the message aggregate lands
-  * on hash(pivot, id), and the merge is a co-partitioned shuffled-hash
-  * full-outer join whose state side re-enters NO exchange — the accumulated
-  * |V| rows never re-shuffle. Keeping the state side exchange-free needs an
-  * ASSERTED partitioning: the full-outer USING join emits
-  * `coalesce(l.k, r.k) AS k`, which Catalyst cannot trace to either input,
-  * so the checkpoint records UnknownPartitioning even though every row
-  * physically sits in its hash(pivot, id) partition —
+  * (GeometricCentralities.java:165,176-178). One job per superstep with no
+  * state-side exchange: the message aggregate lands on hash(pivot, id), and
+  * the merge is a co-partitioned shuffled-hash full-outer join whose state
+  * side re-enters NO exchange — the accumulated |V| rows never re-shuffle.
+  * The exchanges that remain are frontier- and message-sized (the
+  * Σ deg(frontier) message aggregate, plus a frontier-side one when the
+  * adjacency is too large to broadcast into the frontier join). Keeping the
+  * state side exchange-free needs an ASSERTED partitioning: the full-outer
+  * USING join emits `coalesce(l.k, r.k) AS k`, which Catalyst cannot trace
+  * to either input, so the checkpoint records UnknownPartitioning even
+  * though every row physically sits in its hash(pivot, id) partition —
   * [[org.apache.spark.sql.graft.CheckpointStats.stripHashPartitioned]]
   * restores the truth, and the loop pins AQE off for its duration (capture/
   * restore, as BitsetBfs.waves does for its two confs) so no runtime
@@ -64,6 +66,9 @@ object MultiBfs {
     *                   persisted by the caller (reused every superstep).
     * @param sources    one column `pivot: Long`.
     * @return Dist(pivot, id, dist) for every vertex reachable from each pivot.
+    *
+    * The AQE capture/restore around the loop assumes one driver thread: no
+    * concurrent runs (or other queries) on a shared session.
     */
   def run(
       spark: SparkSession,

@@ -73,8 +73,15 @@ object CheckpointStats {
     * `HashPartitioning` — asserting one over them would silently misjoin).
     * Used by the MultiBfs superstep loop, which pins AQE off for its
     * duration. No-op for plans that are not a bare `LogicalRDD`.
+    *
+    * @throws IllegalStateException if `spark.sql.adaptive.enabled` is true
+    *         at call time — the misuse that would otherwise misjoin silently.
     */
-  def stripHashPartitioned(df: DataFrame, keys: Seq[String]): DataFrame =
+  def stripHashPartitioned(df: DataFrame, keys: Seq[String]): DataFrame = {
+    if (df.sparkSession.asInstanceOf[ClassicSession].sessionState.conf.adaptiveExecutionEnabled)
+      throw new IllegalStateException(
+        "stripHashPartitioned: spark.sql.adaptive.enabled is true; the asserted " +
+          "hash partitioning is only valid for frames planned with AQE off")
     df.queryExecution.logical match {
       case lr: LogicalRDD =>
         val spark = df.sparkSession.asInstanceOf[ClassicSession]
@@ -93,4 +100,5 @@ object CheckpointStats {
             lr.stream)(spark, None, None))
       case _ => df
     }
+  }
 }

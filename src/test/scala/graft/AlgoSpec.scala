@@ -127,14 +127,39 @@ class AlgoSpec extends SparkTestBase {
     val k = 5
     val (topk, tel) = Chechik.topkCloseness(spark, adj, k = k)
     val got = topk.collect().map(_.getAs[Long]("id"))
-    // exact oracle: farness ascending with rank-tie extension
+    val expected = exactTopk(edges, k)
+    assert(got.toSet === expected, s"got ${got.toSet} vs $expected")
+    // ε = 0.1 ⇒ K = ⌈ln 80 / 0.01⌉ ≥ n: every keep-probability is 1, so the
+    // estimator is skipped and the one n-source sample visit is the whole run
+    assert(tel.n === InMemoryOracle.nodes(edges).size.toLong)
+    assert(tel.initialPivots === 0L && tel.exactBfs === 0L)
+    assert(tel.sampleSize === tel.n && tel.totalBfs === tel.n)
+    assert(tel.supersteps > 0)
+  }
+
+  test("chechik with keep-probabilities < 1: exact top-k, no vertex BFS'd twice") {
+    val edges = erGraph(80, 0.06, seed = 8)
+    val adj = adjOf(edges)
+    val k = 5
+    // ε = 0.5 ⇒ K = 18 < n; batchSize = k makes the certification loop
+    // schedule the unsampled vertices over several batches
+    val (topk, tel) = Chechik.topkCloseness(spark, adj, k = k, eps = 0.5, batchSize = k)
+    val got = topk.collect().map(_.getAs[Long]("id"))
+    val expected = exactTopk(edges, k)
+    assert(got.toSet === expected, s"got ${got.toSet} vs $expected; $tel")
+    assert(tel.initialPivots > 0, tel)
+    assert(tel.sampleSize < tel.n, tel)
+    assert(tel.exactBfs <= tel.n - tel.sampleSize, tel)
+    assert(tel.totalBfs === tel.initialPivots + tel.sampleSize + tel.exactBfs)
+  }
+
+  /** Exact closeness top-k: farness ascending, ties on the k-th extended. */
+  private def exactTopk(edges: Seq[(Long, Long)], k: Int): Set[Long] = {
     val a = InMemoryOracle.adj(edges)
     val far = InMemoryOracle.nodes(edges)
       .map(v => v -> InMemoryOracle.geometric(a, v).farness).sortBy(x => (x._2, x._1))
     val kth = far(k - 1)._2
-    val expected = far.takeWhile(_._2 <= kth).map(_._1).toSet
-    assert(got.toSet === expected, s"got ${got.toSet} vs $expected")
-    assert(tel.totalBfs > 0 && tel.supersteps > 0)
+    far.takeWhile(_._2 <= kth).map(_._1).toSet
   }
 
   test("chechik estimator coefficients: closed form on path P3") {

@@ -97,6 +97,11 @@ class PlanSpec extends SparkTestBase {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s.conf.set("spark.sql.shuffle.partitions", "4")
+    // the broadcast regime is part of the claim: the tiny cached adjacency
+    // broadcasts into the frontier join, leaving the message aggregate as the
+    // only exchange. A non-broadcastable adjacency would add a frontier-side
+    // exchange; the state side stays exchange-free either way.
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", (10L << 20).toString)
     import s.implicits._
     val adj = graft.core.Graph.adjacency(graft.core.Graph.symmetrize(
       Seq(0L -> 1L, 1L -> 2L, 2L -> 3L, 3L -> 0L).toDF("src", "dst"))).persist()
@@ -126,5 +131,16 @@ class PlanSpec extends SparkTestBase {
     assert(got == Map(
       0L -> ((0, false)), 1L -> ((1, false)), 3L -> ((1, false)),
       2L -> ((2, true))), got)
+  }
+
+  test("stripHashPartitioned refuses to assert a partitioning under AQE") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    import s.implicits._
+    val st = Seq((0L, 0L, 0, true)).toDF("pivot", "id", "dist", "isNew")
+      .localCheckpoint(true)
+    intercept[IllegalStateException](graft.algo.MultiBfs.stripState(st))
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    assert(graft.algo.MultiBfs.stripState(st).collect().length == 1)
   }
 }
