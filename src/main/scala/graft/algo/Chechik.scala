@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *     (A8, ChechikFarnessEstimator.java:143,158-161)
   *  5. certification loop (T7, ChechikTopCloseness.java:148-153,182-219)
   *     over V∖S only — S starts out processed with its exact farness, so no
-  *     vertex is BFS'd twice: exact-BFS candidates in ascending apxF
+  *     vertex of S is BFS'd again: exact-BFS candidates in ascending apxF
   *     batches; certify processed v once
   *     exactCloseness(v) ≥ (1+ε)·max apxCloseness of the unprocessed; stop
   *     at ≥ k certified.
@@ -191,7 +191,10 @@ object Chechik {
         (f, apx)
       } else {
         val dist = MultiBfs.run(spark, adjacency, sources, onSuperstep = countStep)
+        // eager: certification, the top-k boundary and the caller's action
+        // all read it — aggregate the S·n relation once
         val f = dist.groupBy(col("pivot").as("id")).agg(sum("dist").cast("long").as("farness"))
+          .localCheckpoint(true)
         val apx = if (unsampled == 0) None else Some(
           dist.join(sample.select(col("id").as("pivot"), col("p")), "pivot")
             .groupBy("id")

@@ -1,7 +1,8 @@
 package graft
 
 import graft.algo.{PageRank, Components, LabelProp, Triangles, Chechik, MultiBfs, BitsetBfs, Geometric}
-import graft.core.{Graph, DirMaterializer}
+import graft.core.{Graph, DirMaterializer, LocalMaterializer, Materializer}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class AlgoSpec extends SparkTestBase {
@@ -137,19 +138,44 @@ class AlgoSpec extends SparkTestBase {
     assert(tel.supersteps > 0)
   }
 
-  test("chechik with keep-probabilities < 1: exact top-k, no vertex BFS'd twice") {
+  test("chechik with keep-probabilities < 1: exact top-k, each source's farness computed once") {
     val edges = erGraph(80, 0.06, seed = 8)
     val adj = adjOf(edges)
     val k = 5
+    // every certification batch hands the processed set — the sample
+    // visit's exact farness rows plus one row per batch source so far — to
+    // the materializer: record what it holds
+    val seen = collection.mutable.Buffer.empty[Seq[(Long, Long)]]
+    val recording = new Materializer {
+      private val inner = new LocalMaterializer(window = 0)
+      override def iterate(df: DataFrame, iter: Int, metric: Double): DataFrame = {
+        val out = inner.iterate(df, iter, metric)
+        seen += out.select("id", "farness").collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+        out
+      }
+    }
     // ε = 0.5 ⇒ K = 18 < n; batchSize = k makes the certification loop
     // schedule the unsampled vertices over several batches
-    val (topk, tel) = Chechik.topkCloseness(spark, adj, k = k, eps = 0.5, batchSize = k)
+    val (topk, tel) = Chechik.topkCloseness(spark, adj, k = k, eps = 0.5, batchSize = k,
+      mat = recording)
     val got = topk.collect().map(_.getAs[Long]("id"))
     val expected = exactTopk(edges, k)
     assert(got.toSet === expected, s"got ${got.toSet} vs $expected; $tel")
     assert(tel.initialPivots > 0, tel)
     assert(tel.sampleSize < tel.n, tel)
-    assert(tel.exactBfs <= tel.n - tel.sampleSize, tel)
+    assert(seen.nonEmpty, s"certification loop never ran; $tel")
+    // a vertex both sampled and scheduled for certification, or scheduled
+    // twice, would show up as a repeated id
+    seen.foreach { rows =>
+      val ids = rows.map(_._1)
+      assert(ids.distinct.size === ids.size, s"farness computed twice for ${ids.diff(ids.distinct)}")
+    }
+    assert(seen.last.size.toLong === tel.sampleSize + tel.exactBfs, tel)
+    // the reused sample-visit farness is exact, like the batch farness
+    val a = InMemoryOracle.adj(edges)
+    seen.last.foreach { case (v, f) =>
+      assert(f === InMemoryOracle.geometric(a, v).farness, s"farness($v)")
+    }
     assert(tel.totalBfs === tel.initialPivots + tel.sampleSize + tel.exactBfs)
   }
 
