@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * m-arc graph shuffle O(P·m) message rows per full visit. This variant
   * packs pivots into Long bitmasks — `maskCols` Longs of 64 bits each, so up
   * to 64·maskCols pivots advance in ONE wave — and packs VERTICES into
-  * chunks of [[ChunkSize]] (default 256, env `GRAFT_CHUNK_BITS`): state is
+  * chunks of [[ChunkSize]] = 256: state is
   * one row per chunk `(chunk, ns, vs)` where `ns`/`vs` are dense
   * `array<long>` TILES of ChunkSize·maskCols elements, element
   * `pos·maskCols + j` holding mask column j of vertex `chunk·ChunkSize + pos`
@@ -37,7 +37,8 @@ import org.apache.spark.sql.functions._
   * adjacency via [[prepare]], the messages via the tile groupBy — so both
   * joins are exchange-free shuffled-hash.
   *
-  * WHY TILES (round-4 StageProbe finding): the per-vertex form's message
+  * WHY TILES (round-4 per-stage measurement, BASELINE.md "the residual is
+  * DRAM work inflation"): the per-vertex form's message
   * aggregate keyed on id has map-side-combine output ∝ map tasks × n — at
   * 2 vs 8 cores the 8-core leg shuffled 3× the rows (13.5M vs 4.0M per
   * superstep at n=2M) at ~1μs/row of task time, the entire N→4N scaling
@@ -64,27 +65,10 @@ import org.apache.spark.sql.functions._
 object BitsetBfs {
 
   /** log2 of the vertex-chunk width (tile rows hold ChunkSize vertices;
-    * a chunk's tile indexes as `pos·maskCols + j`). Env-overridable for
-    * chunk-granularity A/B probes; all layouts in one JVM must agree, so it
-    * is read once.
+    * a chunk's tile indexes as `pos·maskCols + j`).
     */
-  private val ChunkBits = sys.env.getOrElse("GRAFT_CHUNK_BITS", "8").toInt
+  private val ChunkBits = 8
   private[graft] val ChunkSize = 1 << ChunkBits
-
-  /** Message-aggregation placement (`GRAFT_SUPERSTEP_AGG`):
-    *  - `combine` (default): map-side partial tile aggregation before the
-    *    exchange — shuffle rows bounded at map tasks × populated chunks,
-    *    but every map task's partial map spans the FULL n·maskCols·8 B tile
-    *    space (concurrent random RMW working set ∝ cores × n — the term
-    *    StageProbe pinned the 2→8-core residual on).
-    *  - `repart`: exchange the RAW (chunk, pos, masks) message rows first,
-    *    then aggregate — each task's tile map holds only ITS hash(chunk)
-    *    range (total live RMW working set = n·maskCols·8 B, core-count-
-    *    INDEPENDENT), and the shuffle becomes sequential serialize/
-    *    deserialize traffic ∝ Σ deg(frontier) rows.
-    * Env-switchable for same-window A/B probes (round-5 scaling lever).
-    */
-  private val AggForm = sys.env.getOrElse("GRAFT_SUPERSTEP_AGG", "combine")
 
   /** Pivot count at or below which the pivot index is numbered on the driver
     * (ONE bounded collect) instead of via distributed rank minting — see
@@ -95,26 +79,9 @@ object BitsetBfs {
     */
   private[graft] var smallPivotCap = 65536
 
-  /** All-zero tiles stored as NULL (round 6 default): quiet chunks (no new
-    * bits this superstep / never visited) carry NULL instead of a
-    * materialized ChunkSize·maskCols zero array — less checkpoint DRAM
-    * traffic on the non-peak supersteps and no allocation churn in the seed
-    * stage. `0` restores the dense-array form for same-window A/B probes.
-    */
-  private val NullTiles = sys.env.getOrElse("GRAFT_NULL_TILES", "1") != "0"
-
-  /** Message-aggregate form: mask columns as direct unboxed-ordinal children
-    * (default; see [[org.apache.spark.sql.graft.TileAggs.tileOrCols]]) vs
-    * one `array(...)` child. Same-window A/B (BASELINE.md): the unboxed
-    * column form won every rotated pair by 0.5–1.6%; a boxed-eval column
-    * form had LOST the mirror-image A/B by 1–2%. Env-overridable for A/B
-    * probes only.
-    */
-  private val TileCols = sys.env.getOrElse("GRAFT_TILE_COLS", "1") != "0"
-
   /** Chunk-keyed visit inputs, built once and reused across visits over the
     * same graph (a Chechik certification run is one visit per batch; the
-    * bench legs build it as untimed prep like the adjacency load itself):
+    * benchmark builds and times it separately from the visit):
     *   - `cadj`: (chunk, pos, neighbors) of each adjacency (src, slice) row,
     *     hash(chunk)-partitioned — the frontier join side.
     *   - `chunks`: distinct source chunks — the dense state universe.
@@ -224,37 +191,22 @@ object BitsetBfs {
     // load-bearing (see CheckpointStats scaladoc), and SMJ would re-sort
     // the checkpointed adjacency every superstep.
     val fr = frontier.hint("shuffle_hash")
-    // per-arc message rows: under GRAFT_TILE_COLS the mask columns feed the
-    // tile aggregate DIRECTLY (unboxed ordinal reads) instead of being
-    // packed into an array per arc row — no UnsafeArrayData alloc + copy on
-    // the hottest projection in the engine (A/B: BASELINE.md).
-    val arcs = fr
+    // per-arc message rows: the mask columns feed the tile aggregate
+    // (`TileAggs.tileOrCols`) DIRECTLY as unboxed ordinal reads instead of
+    // being packed into an array per arc row — no UnsafeArrayData alloc +
+    // copy on the hottest projection in the engine (A/B: BASELINE.md).
+    // Map-side partial tile aggregation runs before THE exchange, so shuffle
+    // rows are bounded at map tasks × populated chunks.
+    val msgs = fr
       .join(cadj, Seq("chunk", "pos"))
       .select(explode(col("neighbors")).as("dst") +: ms.map(col): _*)
-    // under `repart` the raw message rows are exchanged BEFORE aggregation:
-    // the groupBy's distribution requirement is then already satisfied, so
-    // Catalyst plans partial+final aggregation together in the post-shuffle
-    // stage and each task's tile map covers only its own hash(chunk) range
-    // (see [[AggForm]]). Plan still has exactly ONE Exchange per superstep.
-    def keyed(df: DataFrame): DataFrame =
-      if (AggForm == "repart") df.repartition(col("chunk")) else df
-    val msgs =
-      (if (TileCols)
-        keyed(arcs.select(
-            shiftright(col("dst"), ChunkBits).as("chunk") +:
-              col("dst").bitwiseAND(lit((ChunkSize - 1).toLong)).cast("int").as("pos") +:
-              ms.map(col): _*))
-          .groupBy("chunk")
-          .agg(org.apache.spark.sql.graft.TileAggs
-            .tileOrCols(col("pos"), ms.map(col), ChunkSize).as("atile"))
-      else
-        keyed(arcs.select(
-            shiftright(col("dst"), ChunkBits).as("chunk"),
-            col("dst").bitwiseAND(lit((ChunkSize - 1).toLong)).cast("int").as("pos"),
-            array(ms.map(col): _*).as("masks")))
-          .groupBy("chunk")
-          .agg(org.apache.spark.sql.graft.TileAggs
-            .tileOr(col("pos"), col("masks"), maskCols, ChunkSize).as("atile")))
+      .select(
+        shiftright(col("dst"), ChunkBits).as("chunk") +:
+          col("dst").bitwiseAND(lit((ChunkSize - 1).toLong)).cast("int").as("pos") +:
+          ms.map(col): _*)
+      .groupBy("chunk")
+      .agg(org.apache.spark.sql.graft.TileAggs
+        .tileOrCols(col("pos"), ms.map(col), ChunkSize).as("atile"))
     // visited test + visited update, fused into the co-partitioned merge
     // join (both sides hash(chunk)): two codegen'd zip_with lambdas over the
     // tiles, left outer keeps the state side's partitioning for the NEXT
@@ -265,24 +217,17 @@ object BitsetBfs {
     // vs = NULL — the checkpointed state then carries ~2–32 KB per QUIET
     // chunk less per superstep (most chunks are quiet outside the 2–3 peak
     // supersteps), and the init/seed stage allocates no zero arrays at all
-    // (StageProbe r5 measured that stage at 19–49 % GC from exactly this
-    // churn). `tileNonZero` treats NULL like zero, so frontier extraction,
-    // increments, idRows and the wave loop see the identical row sets.
-    val joined = state.join(msgs.hint("shuffle_hash"), Seq("chunk"), "left")
-    if (NullTiles)
-      joined.select(col("chunk"),
+    // (BASELINE.md round 5 measured that stage at 19–49 % GC from exactly
+    // this churn). `tileNonZero` treats NULL like zero, so frontier
+    // extraction, increments, idRows and the wave loop see the identical row
+    // sets.
+    state.join(msgs.hint("shuffle_hash"), Seq("chunk"), "left")
+      .select(col("chunk"),
         when(col("atile").isNull, lit(null))
           .when(col("vs").isNull, col("atile"))
           .otherwise(expr("zip_with(atile, vs, (a, v) -> a & ~v)")).as("ns"),
         when(col("atile").isNull, col("vs"))
           .when(col("vs").isNull, col("atile"))
-          .otherwise(expr("zip_with(vs, atile, (v, a) -> v | a)")).as("vs"))
-    else
-      // pre-round-6 dense form, byte-for-byte (A/B only; init0 is dense too)
-      joined.select(col("chunk"),
-        when(col("atile").isNull, array_repeat(lit(0L), ChunkSize * maskCols))
-          .otherwise(expr("zip_with(atile, vs, (a, v) -> a & ~v)")).as("ns"),
-        when(col("atile").isNull, col("vs"))
           .otherwise(expr("zip_with(vs, atile, (v, a) -> v | a)")).as("vs"))
   }
 
@@ -290,7 +235,7 @@ object BitsetBfs {
     * [[Materializer.chainCapacity]]). BFS visit state is accumulating
     * (window = 0 keeps everything until the visit's aggregates run), so
     * chaining holds no more intermediate state than the eager loop already
-    * keeps. Override per call for probes/specs.
+    * keeps. Override per call for specs.
     */
   val DefaultChain: Int = Materializer.DefaultChain
 
@@ -334,8 +279,7 @@ object BitsetBfs {
       put(FallbackKey, priorFallback)
       put(CoPartKey, priorCoPart)
     }
-    spark.conf.set(FallbackKey,
-      sys.env.getOrElse("GRAFT_AGG_FALLBACK", (1 << 22).toString))
+    spark.conf.set(FallbackKey, (1 << 22).toString)
     spark.conf.set(CoPartKey, "false")
     try wavesBody(spark, adjacency, pivots, maskCols, maxIter, mat,
       onSuperstep, onWaveVisited, prepIn, chain)
@@ -421,11 +365,8 @@ object BitsetBfs {
         .distinct()
       // non-pivot chunks init as NULL tiles (= all-zero; see superstep) —
       // the seed stage materializes no zero arrays
-      def initTile =
-        if (NullTiles) col("ptile")
-        else coalesce(col("ptile"), array_repeat(lit(0L), ChunkSize * maskCols))
       val init0 = allChunks.join(broadcast(pivotTiles), Seq("chunk"), "left")
-        .select(col("chunk"), initTile.as("ns"), initTile.as("vs"))
+        .select(col("chunk"), col("ptile").as("ns"), col("ptile").as("vs"))
       // a vertex can be several pivots only across waves, never within (idx
       // distinct). NOTE: state frames carry NO dist column — the superstep d
       // lives in the `incs` tuples (see superstep scaladoc).
@@ -459,10 +400,11 @@ object BitsetBfs {
           // state persists the first time a stage computes it (later
           // references hit its checkpoint blocks) — and returns every
           // substep's exact frontier-chunk count. u supersteps now cost ONE
-          // job submission + driver roundtrip instead of u: JobProbe
-          // measured the per-superstep driver gap at ~0.2-0.3 s, serial and
-          // core-count-independent — precisely the term that caps the
-          // N→4N scaling legs.
+          // job submission + driver roundtrip instead of u: the
+          // per-superstep driver gap measured ~0.2-0.3 s, serial and
+          // core-count-independent (BASELINE.md round 4, "fixed-cost
+          // decomposition") — precisely the term that caps the N→4N
+          // scaling legs.
           var built = Vector.empty[DataFrame]
           var s = state
           for (k <- 1 to u) {
@@ -683,9 +625,9 @@ object BitsetBfs {
     * wave for ANY pivot count, vs the O(P·n) rows of a row-BFS
     * accumulation. History (round-4 verdict #5): this fold was an
     * `aggregate` higher-order-function lambda, which is `CodegenFallback`
-    * (interpreted) — `graft.tools.ReverseProbe` measured it at 96.8 s
-    * against the 28.7 s visit feeding it (n=2M, 512 pivots, 8 cores); the
-    * byte-LUT form replaced it, same-window A/B in BASELINE.md round 5.
+    * (interpreted) — measured at 96.8 s against the 28.7 s visit feeding
+    * it (n=2M, 512 pivots, 8 cores); the byte-LUT form replaced it,
+    * same-window A/B in BASELINE.md round 5.
     * Ratios are dist · (1/div) in double — equal to the row form's
     * d / div up to FP re-association (the byte tables pre-reduce on the
     * driver; the row form's shuffle `sum` is order-nondeterministic anyway,
@@ -735,9 +677,9 @@ object BitsetBfs {
         // a 64-step `aggregate` lambda: higher-order functions are
         // CodegenFallback (interpreted), while element_at on an array
         // literal is codegen'd — 8 compiled lookups per mask column keep
-        // the row term inside whole-stage codegen. ReverseProbe (n=2M,
-        // 512 pivots, 8 cores) measured the lambda form at 96.8 s against
-        // the 28.7 s visit feeding it; see BASELINE.md round 5.
+        // the row term inside whole-stage codegen. The lambda form measured
+        // 96.8 s against the 28.7 s visit feeding it (n=2M, 512 pivots,
+        // 8 cores); see BASELINE.md round 5.
         val term = ms.zipWithIndex.map { case (m, j) =>
           val inv = (0 until 64).map { b =>
             val dv = divs.getOrElse((j, b), 0.0)

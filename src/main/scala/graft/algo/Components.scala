@@ -57,11 +57,15 @@ object Components {
       .where(col("src") > col("dst"))
       .distinct()
 
-    var (iter, resumedState) = mat.resumeIncrements().lastOption.getOrElse {
-      (0, mat.iterate(init, 0, -1.0))
+    // a fresh run materializes and counts the initial edge state in one job
+    var (iter, edges, edgeCount) = mat.resumeIncrements().lastOption match {
+      case Some((i, st)) =>
+        val e = st.select("src", "dst")
+        (i, e, e.count())
+      case None =>
+        val (e, n) = mat.iterateCounted(init, 0, -1.0)
+        (0, e, n)
     }
-    var edges = resumedState.select("src", "dst")
-    var edgeCount = edges.count()
 
     val wSrc = Window.partitionBy("src")
     var converged = edgeCount == 0L

@@ -157,8 +157,9 @@ object MultiBfs {
   }
 
   /** One superstep over the previous state (see object scaladoc). Package-
-    * visible so PlanDump and PlanSpec exercise the EXACT loop body instead
-    * of a drift-prone copy. The superstep references `prev` TWICE (frontier
+    * visible so PlanSpec exercises the EXACT loop body instead of a
+    * drift-prone copy (the recorded plans behind OPTIMIZATION_r06.md §1 were
+    * dumped from it too). The superstep references `prev` TWICE (frontier
     * extraction + the merge join), so inherited checkpoint stats would
     * SQUARE each iteration — every materialized state goes through
     * [[stripState]] — and because stripped frames carry defaultSizeInBytes
@@ -190,10 +191,4 @@ object MultiBfs {
   private[graft] def stripState(df: DataFrame): DataFrame =
     org.apache.spark.sql.graft.CheckpointStats.stripHashPartitioned(
       df, Seq("pivot", "id"))
-
-  /** Single-source convenience. */
-  def fromSource(spark: SparkSession, adjacency: DataFrame, source: Long, maxIter: Int = 256): DataFrame = {
-    import spark.implicits._
-    run(spark, adjacency, Seq(source).toDF("pivot"), maxIter)
-  }
 }

@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
   * — SURVEY.md §2.12 G3).
   *
   * Superstep: contributions = ranks ⋈ adjacency (explode neighbor slices,
-  * rank/degree each) → groupBy(dst).sum → new rank = (1−d)/n + d·(msg +
-  * danglingMass/n). The salted adjacency is safe here: each neighbor lives in
-  * exactly one slice and `degree` carries the FULL degree, so per-slice
-  * contributions never double-count.
+  * rank/degree each) → groupBy(dst).sum → new rank = (1−d)/n + d·msg. The
+  * vertex set is the adjacency's sources, so no vertex dangles (every rank
+  * flows out along its arcs). The salted adjacency is safe here: each
+  * neighbor lives in exactly one slice and `degree` carries the FULL
+  * degree, so per-slice contributions never double-count.
   *
   * Convergence: L∞(new − old) < tol, checked as a scalar between supersteps
   * (the reference's `volatile stop` analogue, SURVEY.md §3.4); or fixed
@@ -29,21 +30,13 @@ object PageRank {
       maxIter: Int = 100,
       tol: Double = 1e-6,
       mat: Materializer = new LocalMaterializer(window = Materializer.DefaultChain),
-      vertices: Option[DataFrame] = None,
       onSuperstep: (Int, Double) => Unit = (_, _) => (),
       chain: Int = Materializer.DefaultChain): Result = {
 
-    val adjSrcs = adjacency.select(col("src").as("id")).distinct()
-    val verts = vertices.getOrElse(adjSrcs).localCheckpoint(true)
+    // lazy checkpoint: the count is the materializing action (one job)
+    val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(false)
     val n = verts.count()
     val nInv = 1.0 / n
-
-    // dangling vertices (no out-edges) never occur after symmetrize, and the
-    // set is fixed across supersteps either way: resolve it ONCE so the
-    // common symmetric case pays zero per-iteration jobs for it, while
-    // directed inputs (verts ⊋ adj sources) still redistribute the mass.
-    val danglingIds = verts.join(adjSrcs, Seq("id"), "left_anti").localCheckpoint(true)
-    val hasDangling = danglingIds.count() > 0
 
     val resumed = mat.resumeIncrements()
     var (iter, ranks) = resumed.lastOption.getOrElse {
@@ -57,7 +50,7 @@ object PageRank {
     // exactly ONE reference to `prev` in the checkpointed plan; the L∞
     // delta joins two already-checkpointed frames and yields a scalar, so
     // its (large) join stats die with the job.
-    def step(prev: DataFrame, danglingMass: Double): DataFrame = {
+    def step(prev: DataFrame): DataFrame = {
       val msgs = prev.join(adjacency, prev("id") === adjacency("src"))
         .select(explode(col("neighbors")).as("id"), (col("pr") / col("degree")).as("w"))
         .groupBy("id")
@@ -66,37 +59,27 @@ object PageRank {
         .join(msgs, Seq("id"), "left")
         .select(
           col("id"),
-          (lit((1 - damping) * nInv) +
-            lit(damping) * (coalesce(col("msg"), lit(0.0)) + lit(danglingMass * nInv))).as("pr"))
+          (lit((1 - damping) * nInv) + lit(damping) * coalesce(col("msg"), lit(0.0))).as("pr"))
     }
 
     // Chained loop (see Materializer.chainCapacity): u supersteps built as
     // lazy checkpoints over each other, then ONE union job computes every
     // substep's L∞ delta — u message exchanges per job submission + driver
     // roundtrip instead of one each. Requires tol > 0 (the fixed-iteration
-    // oracle mode never runs a per-step job at all) and no dangling mass
-    // (its redistribution is a per-step SCALAR the chain can't know lazily;
-    // never present after symmetrize). Convergence stops at the FIRST
-    // substep with delta ≤ tol and keeps THAT state — results and reported
-    // (iter, delta) telemetry identical to the eager loop; overshoot
-    // substeps are computed but discarded.
-    val chainLen =
-      if (tol <= 0 || hasDangling) 1
-      else math.max(1, math.min(chain, mat.chainCapacity))
+    // oracle mode never runs a per-step job at all). Convergence stops at
+    // the FIRST substep with delta ≤ tol and keeps THAT state — results and
+    // reported (iter, delta) telemetry identical to the eager loop;
+    // overshoot substeps are computed but discarded.
+    val chainLen = if (tol <= 0) 1 else math.max(1, math.min(chain, mat.chainCapacity))
 
     var delta = Double.MaxValue
     while (iter < maxIter && (tol <= 0 || delta > tol)) {
       val u = math.min(chainLen, maxIter - iter)
       if (u <= 1) {
         iter += 1
-        val dangling =
-          if (!hasDangling) 0.0
-          else ranks.join(danglingIds, Seq("id"), "left_semi")
-            .agg(coalesce(sum("pr"), lit(0.0)))
-            .head().getDouble(0)
         // deferred checkpoint: the delta aggregate below is the materializing
         // action — one job per superstep instead of checkpoint + delta
-        val state = mat.iterateDeferred(step(ranks, dangling), iter, -1.0)
+        val state = mat.iterateDeferred(step(ranks), iter, -1.0)
         delta =
           if (tol <= 0) Double.MaxValue
           else state.join(ranks.select(col("id"), col("pr").as("prevPr")), "id")
@@ -108,7 +91,7 @@ object PageRank {
         var built = Vector.empty[DataFrame]
         var prev = ranks
         for (k <- 1 to u) {
-          prev = mat.iterateDeferred(step(prev, 0.0), iter + k, -1.0)
+          prev = mat.iterateDeferred(step(prev), iter + k, -1.0)
           built :+= prev
         }
         val deltas = built.zipWithIndex.map { case (st, i) =>

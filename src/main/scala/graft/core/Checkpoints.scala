@@ -31,9 +31,10 @@ import scala.collection.mutable
 object Materializer {
   /** Default supersteps per materializing job for chain-capable loops
     * (BitsetBfs, PageRank): 4 amortizes the ~0.2-0.3 s serial driver gap
-    * per job submission (measured by graft.tools.JobProbe, core-count-
-    * independent) over four supersteps; same-session A/B (ChainProbe)
-    * selects the value. Loops clamp it to [[Materializer.chainCapacity]].
+    * per job submission (core-count-independent; BASELINE.md round 4,
+    * "fixed-cost decomposition") over four supersteps; the chained-loop
+    * bench is under "chained supersteps" there. Loops clamp it to
+    * [[Materializer.chainCapacity]].
     */
   val DefaultChain = 4
 
@@ -183,7 +184,9 @@ final class DirMaterializer(spark: SparkSession, dir: String) extends Materializ
   override def iterate(df: DataFrame, iter: Int, metric: Double): DataFrame = {
     val d = iterDir(iter)
     df.write.mode("overwrite").parquet(d)
-    val out = spark.read.parquet(d)
+    // the schema is known: reading it back with it skips Parquet's footer
+    // inference job (resumeIncrements has no schema and still infers)
+    val out = spark.read.schema(df.schema).parquet(d)
     val parts = out.rdd.getNumPartitions
     // written only after the parquet commit ⇒ doubles as a completion flag
     Files.writeString(
