@@ -1,6 +1,6 @@
 package graft.algo
 
-import graft.core.{Materializer, LocalMaterializer}
+import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * (GeometricCentralities.java:151-207): bit b of mask column j of vertex v
   * set at superstep d  ⇔  d(pivot_{j·64+b}, v) = d.
   *
-  * Superstep = ONE fused job, ONE shuffle whose row count is
+  * Superstep = ONE fused plan, ONE shuffle whose row count is
   * PARTITION-INDEPENDENT:
   *
   *   frontier = explode state tiles → (chunk, pos, m0..)  [no shuffle]
@@ -72,7 +72,7 @@ object BitsetBfs {
 
   /** Pivot count at or below which the pivot index is numbered on the driver
     * (ONE bounded collect) instead of via distributed rank minting — see
-    * [[waves]]. Package-private VAR so specs can lower it to force the
+    * [[visit]]. Package-private VAR so specs can lower it to force the
     * large-P branch on a small pivot set and assert branch parity; both
     * branches produce identical output, so a concurrent suite observing a
     * lowered cap stays correct (just takes the distributed path).
@@ -231,72 +231,41 @@ object BitsetBfs {
           .otherwise(expr("zip_with(vs, atile, (v, a) -> v | a)")).as("vs"))
   }
 
-  /** Supersteps materialized per job on chain-capable strategies (see
-    * [[Materializer.chainCapacity]]). BFS visit state is accumulating
-    * (window = 0 keeps everything until the visit's aggregates run), so
-    * chaining holds no more intermediate state than the eager loop already
-    * keeps. Override per call for specs.
+  /** Run the wave BFS and return the [[Visit]] handle for histogram/reverse
+    * consumers. Parameters as for [[run]].
+    *
+    * Two session confs the tile loop NEEDS while its supersteps plan and run
+    * are pinned for the visit and restored on exit
+    * ([[graft.core.Supersteps.withConfs]]; a permanent mutation silently
+    * changed spill/co-partition behavior of unrelated queries on the shared
+    * session). Restoring at the end is safe: every superstep plan is
+    * materialized inside the loop, and the Visit's lazy increment/visited
+    * projections are plain scans + aggregates over checkpointed frames —
+    * neither conf affects them.
+    *  - fallbackThreshold: the tile aggregate's map-side hash map
+    *    legitimately holds up to n/ChunkSize keys per task; the default
+    *    ObjectHashAggregate fallback (128 keys) would silently degrade every
+    *    superstep to sort-based aggregation — sorting the raw message rows
+    *    each superstep.
+    *  - requireAllClusterKeysForCoPartition=false: frontier ⋈ cadj joins on
+    *    (chunk, pos) with BOTH sides hash(chunk)-partitioned — a key-subset
+    *    co-partitioning Spark only accepts with this (conservative-by-
+    *    default) flag off; without it EnsureRequirements re-exchanges both
+    *    sides on (chunk, pos) every superstep, exactly the n-row reshuffle
+    *    the tile layout removes.
     */
-  val DefaultChain: Int = Materializer.DefaultChain
-
-  private def waves(
+  def visit(
       spark: SparkSession,
       adjacency: DataFrame,
       pivots: DataFrame,
-      maskCols: Int,
-      maxIter: Int,
-      mat: Materializer,
-      onSuperstep: (Int, Long) => Unit,
-      onWaveVisited: (Int, DataFrame) => Unit,
-      prepIn: Prep,
-      chain: Int): Visit = {
-
-    // Two session confs the tile loop NEEDS while its supersteps plan+run;
-    // prior values are captured and restored on exit (round-4 advice: a
-    // permanent mutation silently changed spill/co-partition behavior of
-    // unrelated queries on the shared session). Restore is safe at the end
-    // of waves(): every superstep plan is materialized inside the loop, and
-    // the Visit's lazy increment/visited projections are plain scans +
-    // aggregates over checkpointed frames — neither conf affects them.
-    //  - fallbackThreshold: the tile aggregate's map-side hash map
-    //    legitimately holds up to n/ChunkSize keys per task; the default
-    //    ObjectHashAggregate fallback (128 keys) would silently degrade
-    //    every superstep to sort-based aggregation — sorting the raw
-    //    message rows each superstep.
-    //  - requireAllClusterKeysForCoPartition=false: frontier ⋈ cadj joins on
-    //    (chunk, pos) with BOTH sides hash(chunk)-partitioned — a key-subset
-    //    co-partitioning Spark only accepts with this (conservative-by-
-    //    default) flag off; without it EnsureRequirements re-exchanges both
-    //    sides on (chunk, pos) every superstep, exactly the n-row reshuffle
-    //    the tile layout removes.
-    val FallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val CoPartKey = "spark.sql.requireAllClusterKeysForCoPartition"
-    val priorFallback = spark.conf.getOption(FallbackKey)
-    val priorCoPart = spark.conf.getOption(CoPartKey)
-    def restoreConfs(): Unit = {
-      def put(k: String, v: Option[String]): Unit =
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-      put(FallbackKey, priorFallback)
-      put(CoPartKey, priorCoPart)
-    }
-    spark.conf.set(FallbackKey, (1 << 22).toString)
-    spark.conf.set(CoPartKey, "false")
-    try wavesBody(spark, adjacency, pivots, maskCols, maxIter, mat,
-      onSuperstep, onWaveVisited, prepIn, chain)
-    finally restoreConfs()
-  }
-
-  private def wavesBody(
-      spark: SparkSession,
-      adjacency: DataFrame,
-      pivots: DataFrame,
-      maskCols: Int,
-      maxIter: Int,
-      mat: Materializer,
-      onSuperstep: (Int, Long) => Unit,
-      onWaveVisited: (Int, DataFrame) => Unit,
-      prepIn: Prep,
-      chain: Int): Visit = {
+      maskCols: Int = 16,
+      maxIter: Int = 256,
+      mat: Materializer = new LocalMaterializer(window = 0),
+      onSuperstep: (Int, Long) => Unit = (_, _) => (),
+      onWaveVisited: (Int, DataFrame) => Unit = (_, _) => (),
+      prep: Prep = null): Visit = Supersteps.withConfs(spark,
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> (1 << 22).toString,
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false") {
 
     val waveBits = 64L * maskCols
     val ms = (0 until maskCols).map(j => s"m$j")
@@ -336,9 +305,9 @@ object BitsetBfs {
     def strip(df: DataFrame): DataFrame =
       org.apache.spark.sql.graft.CheckpointStats.strip(df)
 
-    val prep =
+    val inputs =
       if (nWaves == 0) null
-      else if (prepIn != null) prepIn
+      else if (prep != null) prep
       else prepare(adjacency)
 
     var incs = Vector.empty[(Int, Int, DataFrame)]
@@ -360,7 +329,7 @@ object BitsetBfs {
               .otherwise(lit(0L))): _*).as("masks"))
         .groupBy("chunk").agg(org.apache.spark.sql.graft.TileAggs
           .tileOr(col("pos"), col("masks"), maskCols, ChunkSize).as("ptile"))
-      val allChunks = prep.chunks
+      val allChunks = inputs.chunks
         .unionAll(wavePivots.select(shiftright(col("pivot"), ChunkBits).as("chunk")))
         .distinct()
       // non-pivot chunks init as NULL tiles (= all-zero; see superstep) —
@@ -371,96 +340,29 @@ object BitsetBfs {
       // distinct). NOTE: state frames carry NO dist column — the superstep d
       // lives in the `incs` tuples (see superstep scaladoc).
       val (state0, rows0) = mat.iterateCountedWhere(init0, 0, -1.0, tileNonZero("ns"))
-      var state = strip(state0)
-      statesAcc :+= state
-      incs :+= ((w, 0, newlyTiles(state)))
-      var d = 0
-      var frontierRows = rows0
-      val chainLen = math.max(1, math.min(chain, mat.chainCapacity))
-
-      while (frontierRows > 0 && d < maxIter) {
-        val u = math.min(chainLen, maxIter - d)
-        if (u <= 1) {
-          // eager path: one lazy-checkpoint-plus-filtered-count job per
-          // superstep (also the DirMaterializer path, which wants the real
-          // frontier count in each iteration's resume metadata)
-          d += 1
-          val next = superstep(state, prep.cadj, maskCols)
-          val (st, cnt) = mat.iterateCountedWhere(next, d, frontierRows.toDouble, tileNonZero("ns"))
-          state = strip(st)
-          statesAcc :+= state
-          frontierRows = cnt
-          if (frontierRows > 0) incs :+= ((w, d, newlyTiles(state)))
-          onSuperstep(d, frontierRows)
-        } else {
-          // chained path: build u supersteps LAZILY (each localCheckpoint
-          // truncates the plan immediately but materializes on first use),
-          // then ONE union-multicount job computes the whole chain — the
-          // stage graph covers all u message exchanges, each intermediate
-          // state persists the first time a stage computes it (later
-          // references hit its checkpoint blocks) — and returns every
-          // substep's exact frontier-chunk count. u supersteps now cost ONE
-          // job submission + driver roundtrip instead of u: the
-          // per-superstep driver gap measured ~0.2-0.3 s, serial and
-          // core-count-independent (BASELINE.md round 4, "fixed-cost
-          // decomposition") — precisely the term that caps the N→4N
-          // scaling legs.
-          var built = Vector.empty[DataFrame]
-          var s = state
-          for (k <- 1 to u) {
-            val next = superstep(s, prep.cadj, maskCols)
-            s = strip(mat.iterateDeferred(next, d + k, -1.0))
-            built :+= s
-          }
-          val counts = built.zipWithIndex
-            .map { case (st, i) => st.where(tileNonZero("ns")).select(lit(i + 1).as("k")) }
-            .reduce(_ unionAll _)
-            .groupBy("k").agg(count(lit(1)).as("c"))
-            .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-          statesAcc ++= built
-          // report supersteps up to and including the first empty frontier —
-          // identical telemetry to the eager loop (counts are monotone to
-          // zero within a chain: an empty frontier sends no messages)
-          var k = 1
-          var stop = false
-          while (k <= u && !stop) {
-            val cnt = counts.getOrElse(k, 0L)
-            if (cnt > 0) incs :+= ((w, d + k, newlyTiles(built(k - 1))))
-            onSuperstep(d + k, cnt)
-            frontierRows = cnt
-            if (cnt == 0) stop = true
-            k += 1
-          }
-          d += u
-          state = built.last
-        }
-      }
+      val start = strip(state0)
+      statesAcc :+= start
+      incs :+= ((w, 0, newlyTiles(start)))
+      // the loop is Supersteps.run: each chunk's one union-multicount job
+      // returns every substep's exact frontier-chunk count, and the visit
+      // stops at the first empty frontier
+      val end = Supersteps.run(mat, start, 0, maxIter, superstep(_, inputs.cadj, maskCols),
+        settle = strip, metric = Some(Supersteps.Count(tileNonZero("ns"))),
+        m0 = rows0.toDouble, stop = _ == 0, onStep = (d, st, c) => {
+          statesAcc :+= st
+          if (c > 0) incs :+= ((w, d, newlyTiles(st)))
+          onSuperstep(d, c.toLong)
+        })
       // per-vertex visited masks for this wave — a lazy idRows projection,
       // so its row set matches the sparse form exactly (never-reached
       // vertices and phantom chunk slots carry all-zero masks and drop)
-      val vis = idRows(state, "vs", maskCols)
+      val vis = idRows(end.state, "vs", maskCols)
       visitedOut :+= ((w, vis))
       onWaveVisited(w, vis)
     }
-    if (prep != null && prepIn == null) prep.release()
+    if (inputs != null && prep == null) inputs.release()
     Visit(idx, ms, incs, visitedOut, statesAcc)
   }
-
-  /** Run the wave BFS and return the [[Visit]] handle for histogram/reverse
-    * consumers. Parameters as for [[run]].
-    */
-  def visit(
-      spark: SparkSession,
-      adjacency: DataFrame,
-      pivots: DataFrame,
-      maskCols: Int = 16,
-      maxIter: Int = 256,
-      mat: Materializer = new LocalMaterializer(window = 0),
-      onSuperstep: (Int, Long) => Unit = (_, _) => (),
-      onWaveVisited: (Int, DataFrame) => Unit = (_, _) => (),
-      prep: Prep = null,
-      chain: Int = DefaultChain): Visit =
-    waves(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, onWaveVisited, prep, chain)
 
   /** @param adjacency output of Graph.adjacency over SYMMETRIZED edges,
     *                  persisted by the caller (only read when no `prep` is
@@ -491,10 +393,9 @@ object BitsetBfs {
       mat: Materializer = new LocalMaterializer(window = 0),
       onSuperstep: (Int, Long) => Unit = (_, _) => (),
       onWaveVisited: (Int, DataFrame) => Unit = (_, _) => (),
-      prep: Prep = null,
-      chain: Int = DefaultChain): DataFrame = {
+      prep: Prep = null): DataFrame = {
 
-    val raw = waves(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, onWaveVisited, prep, chain)
+    val raw = visit(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, onWaveVisited, prep)
     val ms = raw.maskNames
 
     if (raw.increments.isEmpty)
@@ -543,10 +444,9 @@ object BitsetBfs {
       mat: Materializer = new LocalMaterializer(window = 0),
       onSuperstep: (Int, Long) => Unit = (_, _) => (),
       onWaveVisited: (Int, DataFrame) => Unit = (_, _) => (),
-      prep: Prep = null,
-      chain: Int = DefaultChain): DataFrame = {
+      prep: Prep = null): DataFrame = {
 
-    harmonic(waves(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, onWaveVisited, prep, chain))
+    harmonic(visit(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, onWaveVisited, prep))
   }
 
   /** Per-pivot harmonic from a completed [[Visit]] (see the other overload). */

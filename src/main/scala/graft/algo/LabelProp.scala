@@ -1,6 +1,6 @@
 package graft.algo
 
-import graft.core.{Materializer, LocalMaterializer}
+import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,10 +21,9 @@ object LabelProp {
       spark: SparkSession,
       adjacency: DataFrame,
       rounds: Int,
-      mat: Materializer = new LocalMaterializer(window = Materializer.DefaultChain),
-      chain: Int = Materializer.DefaultChain): DataFrame = {
+      mat: Materializer = new LocalMaterializer(window = Materializer.DefaultChain)): DataFrame = {
 
-    var (iter, labels) = mat.resumeIncrements().lastOption.getOrElse {
+    val (iter, labels) = mat.resumeIncrements().lastOption.getOrElse {
       val init = adjacency.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("label"))
       (0, mat.iterate(init, 0, -1.0))
@@ -49,27 +48,10 @@ object LabelProp {
         .agg(max_by(col("label"), struct(col("c"), negate(col("label")))).as("label"))
     }
 
-    // Rounds are FIXED (no per-round convergence decision), so chaining is
-    // unconditional: build u rounds as lazy checkpoints over each other and
-    // let ONE count() materialize the chunk — each intermediate persists the
-    // first time the chunk job's stages compute it (see
-    // Materializer.chainCapacity) — amortizing the job-submission driver gap
-    // over u rounds.
-    val chainLen = math.max(1, math.min(chain, mat.chainCapacity))
-    while (iter < rounds) {
-      val u = math.min(chainLen, rounds - iter)
-      if (u <= 1) {
-        iter += 1
-        labels = mat.iterate(step(labels), iter, -1.0)
-      } else {
-        var s = labels
-        for (k <- 1 to u) s = mat.iterateDeferred(step(s), iter + k, -1.0)
-        s.count()
-        labels = s
-        iter += u
-      }
-    }
-    labels
+    // Rounds are FIXED (no per-round metric): Supersteps.run builds each
+    // chunk's rounds as lazy checkpoints and checkpoints its last round
+    // eagerly, one job per chunk.
+    Supersteps.run(mat, labels, iter, rounds, step).state
   }
 
   /** DuckDB oracle: the same synchronous rounds unrolled in SQL. */

@@ -1,6 +1,6 @@
 package graft.algo
 
-import graft.core.{Materializer, LocalMaterializer}
+import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * thread per source (GeometricCentralities.java:151-207,
   * ChechikTopCloseness.java:143-190). We invert the loop nesting
   * (SURVEY.md §3.4): ALL pivots advance one hop per superstep, so each
-  * superstep is ONE Catalyst-planned job, and the driver only ever sees
+  * superstep is ONE Catalyst plan, and the driver only ever sees
   * scalar frontier counts.
   *
   * State relation: V(pivot, id, dist, isNew) — the full distance relation so
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * V.dist ≤ d < M.dist = d+1 wherever both sides match, so the coalesce IS
   * the min-dist/first-discovery rule, and a NULL state side is the
   * distributed `distance[s] == -1` test
-  * (GeometricCentralities.java:165,176-178). One job per superstep with no
+  * (GeometricCentralities.java:165,176-178). One plan per superstep with no
   * state-side exchange: the message aggregate lands on hash(pivot, id), and
   * the merge is a co-partitioned shuffled-hash full-outer join whose state
   * side re-enters NO exchange — the accumulated |V| rows never re-shuffle.
@@ -36,9 +36,9 @@ import org.apache.spark.sql.functions._
   * to either input, so the checkpoint records UnknownPartitioning even
   * though every row physically sits in its hash(pivot, id) partition —
   * [[org.apache.spark.sql.graft.CheckpointStats.stripHashPartitioned]]
-  * restores the truth, and the loop pins AQE off for its duration (capture/
-  * restore, as BitsetBfs.waves does for its two confs) so no runtime
-  * coalesce/skew rewrite can invalidate the assertion. The pre-round-6
+  * restores the truth, and the loop pins AQE off for its duration
+  * ([[graft.core.Supersteps.withConfs]]) so no runtime coalesce/skew rewrite
+  * can invalidate the assertion. The pre-round-6
   * shape (state ∪ messages → one big groupBy) re-shuffled AND re-aggregated
   * |V| + Σ deg rows every superstep: at a 1266-pivot Chechik sample visit
   * over the sf0.1 sparse graph that was ~19M state rows × 11 supersteps of
@@ -46,6 +46,10 @@ import org.apache.spark.sql.functions._
   * exchange (OPTIMIZATION_r06.md). The round-2 shape (message groupBy +
   * anti-join + separate visited-consolidation job) paid two jobs and
   * roughly twice again that traffic.
+  *
+  * The loop itself is [[graft.core.Supersteps.run]]: chunks of lazily
+  * checkpointed supersteps, one job per chunk counting every substep's
+  * frontier, stopping at the first empty one.
   *
   * The dist=0 row is the source itself (the reference excludes the source
   * from distance sums but counts it as reachable —
@@ -55,7 +59,8 @@ import org.apache.spark.sql.functions._
   * hash(src) partitioning; dist advances as `frontier.dist + 1` so the loop
   * plan carries NO per-superstep literal (codegen caches hit from superstep
   * 2 on — a varying `lit(d)` would force a janino recompile per superstep,
-  * serial driver time). State checkpoints are REPLACED, window 2, so live
+  * serial driver time). State checkpoints are REPLACED (window
+  * [[graft.core.Materializer.DefaultChain]] by default), so live
   * memory is O(|V|), not O(supersteps·|V|); with a DirMaterializer the
   * per-iteration state parquet is self-contained, so resume needs only the
   * last completed iteration.
@@ -76,11 +81,10 @@ object MultiBfs {
       sources: DataFrame,
       maxIter: Int = 256,
       mat: Materializer = new LocalMaterializer(window = Materializer.DefaultChain),
-      onSuperstep: (Int, Long) => Unit = (_, _) => (),
-      chain: Int = Materializer.DefaultChain): DataFrame = {
+      onSuperstep: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
 
     val resumed = mat.resumeIncrements().lastOption
-    var (d, state, frontierRows) = resumed match {
+    val (d, state, frontierRows) = resumed match {
       case Some((i, st)) =>
         val s = st.select("pivot", "id", "dist", "isNew")
         (i, s, s.where(col("isNew")).count())
@@ -94,66 +98,18 @@ object MultiBfs {
         (0, st, n)
     }
 
-    // Chained loop (see Materializer.chainCapacity): u supersteps built as
-    // lazy checkpoints over each other, ONE union-multicount job materializes
-    // them all and returns every substep's exact frontier count — u message
-    // exchanges per job submission + driver roundtrip instead of one each.
-    // An empty frontier sends no messages, so counts are monotone to zero
-    // within a chunk; the loop keeps the state at the FIRST zero count and
-    // reports (d, count) telemetry identical to the eager loop (overshoot
-    // substeps are identity maps on (pivot, id, dist) and are discarded).
-    val chainLen = math.max(1, math.min(chain, mat.chainCapacity))
-
-    // AQE off while the loop's supersteps plan AND materialize (captured/
-    // restored like BitsetBfs.waves' confs): stripState's asserted
-    // hash(pivot, id) placement is exactly what the merge join's static plan
-    // produces; an AQE-coalesced or skew-split shuffle would place rows by a
-    // partitioning that HashPartitioning cannot describe, and the assertion
-    // would silently misjoin the next superstep. Every state is materialized
-    // inside the loop (iterateCountedWhere counts / the chain multicount),
-    // so restoring on exit leaves no lazy superstep to plan under AQE.
-    val AqeKey = "spark.sql.adaptive.enabled"
-    val priorAqe = spark.conf.getOption(AqeKey)
-    spark.conf.set(AqeKey, "false")
-    try {
-    while (frontierRows > 0 && d < maxIter) {
-      val u = math.min(chainLen, maxIter - d)
-      if (u <= 1) {
-        // eager path (also DirMaterializer, which wants the real frontier
-        // count in each iteration's resume metadata): one lazy-checkpoint-
-        // plus-filtered-count job per superstep
-        d += 1
-        val (st, cnt) = mat.iterateCountedWhere(step(state, adjacency), d, frontierRows.toDouble, col("isNew"))
-        state = stripState(st)
-        frontierRows = cnt
-        onSuperstep(d, frontierRows)
-      } else {
-        var built = Vector.empty[DataFrame]
-        var s = state
-        for (k <- 1 to u) {
-          s = stripState(mat.iterateDeferred(step(s, adjacency), d + k, -1.0))
-          built :+= s
-        }
-        val counts = built.zipWithIndex
-          .map { case (st, i) => st.where(col("isNew")).select(lit(i + 1).as("k")) }
-          .reduce(_ unionAll _)
-          .groupBy("k").agg(count(lit(1)).as("c"))
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-        var k = 1
-        var stop = false
-        while (k <= u && !stop) {
-          val cnt = counts.getOrElse(k, 0L)
-          state = built(k - 1)
-          frontierRows = cnt
-          onSuperstep(d + k, cnt)
-          if (cnt == 0) stop = true
-          k += 1
-        }
-        d += k - 1
-      }
-    }
-    } finally priorAqe.fold(spark.conf.unset(AqeKey))(spark.conf.set(AqeKey, _))
-    state.select("pivot", "id", "dist")
+    // AQE off while the loop's supersteps plan AND materialize: stripState's
+    // asserted hash(pivot, id) placement is exactly what the merge join's
+    // static plan produces; an AQE-coalesced or skew-split shuffle would
+    // place rows by a partitioning that HashPartitioning cannot describe,
+    // and the assertion would silently misjoin the next superstep. The
+    // driver materializes every state it keeps, so restoring on exit leaves
+    // no lazy superstep to plan under AQE.
+    Supersteps.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
+      Supersteps.run(mat, state, d, maxIter, step(_, adjacency), settle = stripState,
+        metric = Some(Supersteps.Count(col("isNew"))), m0 = frontierRows.toDouble,
+        stop = _ == 0, onStep = (i, _, c) => onSuperstep(i, c.toLong))
+    }.state.select("pivot", "id", "dist")
   }
 
   /** One superstep over the previous state (see object scaladoc). Package-

@@ -1,6 +1,6 @@
 package graft.algo
 
-import graft.core.{Materializer, LocalMaterializer}
+import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,8 +30,7 @@ object PageRank {
       maxIter: Int = 100,
       tol: Double = 1e-6,
       mat: Materializer = new LocalMaterializer(window = Materializer.DefaultChain),
-      onSuperstep: (Int, Double) => Unit = (_, _) => (),
-      chain: Int = Materializer.DefaultChain): Result = {
+      onSuperstep: (Int, Double) => Unit = (_, _) => ()): Result = {
 
     // lazy checkpoint: the count is the materializing action (one job)
     val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(false)
@@ -39,7 +38,7 @@ object PageRank {
     val nInv = 1.0 / n
 
     val resumed = mat.resumeIncrements()
-    var (iter, ranks) = resumed.lastOption.getOrElse {
+    val (iter, ranks) = resumed.lastOption.getOrElse {
       (0, mat.iterate(verts.select(col("id"), lit(nInv).as("pr")), 0, Double.MaxValue))
     }
 
@@ -62,58 +61,17 @@ object PageRank {
           (lit((1 - damping) * nInv) + lit(damping) * coalesce(col("msg"), lit(0.0))).as("pr"))
     }
 
-    // Chained loop (see Materializer.chainCapacity): u supersteps built as
-    // lazy checkpoints over each other, then ONE union job computes every
-    // substep's L∞ delta — u message exchanges per job submission + driver
-    // roundtrip instead of one each. Requires tol > 0 (the fixed-iteration
-    // oracle mode never runs a per-step job at all). Convergence stops at
-    // the FIRST substep with delta ≤ tol and keeps THAT state — results and
-    // reported (iter, delta) telemetry identical to the eager loop;
-    // overshoot substeps are computed but discarded.
-    val chainLen = if (tol <= 0) 1 else math.max(1, math.min(chain, mat.chainCapacity))
-
-    var delta = Double.MaxValue
-    while (iter < maxIter && (tol <= 0 || delta > tol)) {
-      val u = math.min(chainLen, maxIter - iter)
-      if (u <= 1) {
-        iter += 1
-        // deferred checkpoint: the delta aggregate below is the materializing
-        // action — one job per superstep instead of checkpoint + delta
-        val state = mat.iterateDeferred(step(ranks), iter, -1.0)
-        delta =
-          if (tol <= 0) Double.MaxValue
-          else state.join(ranks.select(col("id"), col("pr").as("prevPr")), "id")
-            .agg(max(abs(col("pr") - col("prevPr"))))
-            .head().getDouble(0)
-        ranks = state
-        onSuperstep(iter, delta)
-      } else {
-        var built = Vector.empty[DataFrame]
-        var prev = ranks
-        for (k <- 1 to u) {
-          prev = mat.iterateDeferred(step(prev), iter + k, -1.0)
-          built :+= prev
-        }
-        val deltas = built.zipWithIndex.map { case (st, i) =>
-          val before = if (i == 0) ranks else built(i - 1)
-          st.join(before.select(col("id"), col("pr").as("prevPr")), "id")
-            .agg(max(abs(col("pr") - col("prevPr"))).as("d"))
-            .select(lit(i + 1).as("k"), col("d"))
-        }.reduce(_ unionAll _)
-          .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-        var k = 1
-        var stop = false
-        while (k <= u && !stop) {
-          iter += 1
-          delta = deltas(k)
-          ranks = built(k - 1)
-          onSuperstep(iter, delta)
-          if (delta <= tol) stop = true
-          k += 1
-        }
-      }
-    }
-    Result(ranks, iter, delta)
+    // the loop is Supersteps.run: one union job per chunk computes every
+    // substep's delta and the loop stops at the first delta ≤ tol.
+    // Fixed-iteration mode (tol <= 0) has no metric: fixed rounds, as in
+    // LabelProp.
+    val delta = (prev: DataFrame, next: DataFrame) =>
+      next.join(prev.select(col("id"), col("pr").as("prevPr")), "id")
+        .agg(max(abs(col("pr") - col("prevPr"))).as("d"))
+    val end = Supersteps.run(mat, ranks, iter, maxIter, step,
+      metric = if (tol > 0) Some(Supersteps.Aggregate(delta)) else None,
+      m0 = Double.MaxValue, stop = _ <= tol, onStep = (i, _, d) => onSuperstep(i, d))
+    Result(end.state, end.iter, end.metric)
   }
 
   /** DuckDB oracle: the identical recurrence unrolled as plain SQL CTEs

@@ -29,12 +29,11 @@ import scala.collection.mutable
   *     per-partition lineage unit a resumed run re-reads.
   */
 object Materializer {
-  /** Default supersteps per materializing job for chain-capable loops
-    * (BitsetBfs, PageRank): 4 amortizes the ~0.2-0.3 s serial driver gap
-    * per job submission (core-count-independent; BASELINE.md round 4,
-    * "fixed-cost decomposition") over four supersteps; the chained-loop
-    * bench is under "chained supersteps" there. Loops clamp it to
-    * [[Materializer.chainCapacity]].
+  /** Supersteps per materializing job in [[Supersteps.run]], clamped to
+    * [[Materializer.chainCapacity]]: 4 amortizes the ~0.2-0.3 s serial
+    * driver gap per job submission (core-count-independent; BASELINE.md
+    * round 4, "fixed-cost decomposition") over four supersteps; the
+    * chained-loop bench is under "chained supersteps" there.
     */
   val DefaultChain = 4
 
@@ -84,29 +83,26 @@ trait Materializer {
 
   /** Materialize lazily where the strategy allows: the returned frame's
     * FIRST action completes materialization, so a loop whose convergence
-    * check immediately aggregates the new state (PageRank L∞ delta, CC
-    * changed-count) pays ONE job per superstep, not checkpoint + check.
-    * Default: eager (Dir strategy must write parquet regardless).
+    * check immediately aggregates the new state (CC changed-count, the
+    * metric job of [[Supersteps.run]]) pays ONE job per superstep, not
+    * checkpoint + check. Default: eager (Dir strategy must write parquet
+    * regardless).
     */
   def iterateDeferred(df: DataFrame, iter: Int, metric: Double): DataFrame =
     iterate(df, iter, metric)
 
   /** How many [[iterateDeferred]] frames may be CHAINED — each built over
     * the previous — with no intervening action, so one downstream job
-    * materializes them all (superstep unrolling: U supersteps share one
-    * job's stage graph instead of paying U job submissions + driver gaps,
-    * the core-count-independent serial cost that caps N→4N scaling).
-    * 1 by default (no chaining): `DirMaterializer` writes eagerly with a
-    * per-iteration convergence metric the chain can't know yet, and
-    * `LocalMaterializer` with an eviction window is only safe up to the
-    * window length — a longer chain could evict a frame the chunk's job
-    * still needs (either not yet materialized, or the chunk input whose
-    * lineage was truncated), silently forfeiting its checkpoint.
+    * materializes them all. [[Supersteps.run]] chunks its supersteps at
+    * `min(DefaultChain, chainCapacity)`. 1 by default
+    * (no chaining): `DirMaterializer` writes eagerly with a per-iteration
+    * metric a chain cannot know yet, and `LocalMaterializer` with an
+    * eviction window is only safe up to the window length — a longer chain
+    * could evict a frame the chunk's job still needs (either not yet
+    * materialized, or the chunk input whose lineage was truncated),
+    * silently forfeiting its checkpoint.
     */
   def chainCapacity: Int = 1
-
-  /** Whether [[iterateDeferred]] frames may be chained at all. */
-  final def chainSafe: Boolean = chainCapacity > 1
 
   /** Previously completed increments (iter → frame), ascending, for resume. */
   def resumeIncrements(): Seq[(Int, DataFrame)] = Seq.empty

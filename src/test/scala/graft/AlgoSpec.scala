@@ -30,23 +30,33 @@ class AlgoSpec extends SparkTestBase {
     // convergence lands mid-chunk (first delta ≤ tol picked INSIDE a chain
     // of 4): ranks, iteration count, final delta and per-step (iter, delta)
     // telemetry must all match the eager loop bit-for-bit — the chained
-    // path computes the same recurrence, just u supersteps per job.
+    // path computes the same recurrence, just u supersteps per job. The
+    // eager leg's materializer has chain capacity 1.
     val adj = adjOf(erGraph(60, 0.08, seed = 4))
-    def leg(chain: Int) = {
+    def leg(mat: Materializer, maxIter: Int = 200, tol: Double = 1e-6) = {
       var tel = Vector.empty[(Int, Double)]
-      val res = PageRank.run(spark, adj, maxIter = 200, tol = 1e-6,
-        onSuperstep = (i, d) => tel :+= ((i, d)), chain = chain)
+      val res = PageRank.run(spark, adj, maxIter = maxIter, tol = tol, mat = mat,
+        onSuperstep = (i, d) => tel :+= ((i, d)))
       val ranks = res.ranks.collect()
         .map(x => x.getAs[Long]("id") -> x.getAs[Double]("pr")).toMap
       (ranks, res.iterations, res.finalDelta, tel)
     }
-    val (eagerRanks, eagerIters, eagerDelta, eagerTel) = leg(1)
-    val (chainRanks, chainIters, chainDelta, chainTel) = leg(4)
+    val (eagerRanks, eagerIters, eagerDelta, eagerTel) = leg(new LocalMaterializer(window = 1))
+    val (chainRanks, chainIters, chainDelta, chainTel) = leg(new LocalMaterializer(window = 4))
     assert(chainIters === eagerIters)
     assert(chainDelta === eagerDelta)
     assert(chainTel === eagerTel)
     assert(chainRanks === eagerRanks)
     assert(eagerIters % 4 !== 0, "want convergence mid-chunk to exercise overshoot")
+
+    // fixed-iteration mode (tol = 0): fixed rounds on both materializers
+    val fixedEager = leg(new LocalMaterializer(window = 1), maxIter = 10, tol = 0.0)
+    val fixedChain = leg(new LocalMaterializer(window = 4), maxIter = 10, tol = 0.0)
+    assert(fixedEager._2 === 10 && fixedChain._2 === 10)
+    fixedEager._1.foreach { case (v, e) =>
+      assert(java.lang.Double.doubleToLongBits(fixedChain._1(v)) ===
+        java.lang.Double.doubleToLongBits(e), s"fixed-iteration rank differs at $v")
+    }
   }
 
   test("components: exact labels on twocomp and disconnected ER") {
@@ -80,29 +90,31 @@ class AlgoSpec extends SparkTestBase {
   }
 
   test("label propagation chained rounds: identical labels to the eager loop") {
-    // rounds = 6 with chain = 4 exercises a full chunk plus a partial one
+    // rounds = 6 in chunks of 4 exercises a full chunk plus a partial one;
+    // the eager leg's materializer has chain capacity 1
     val adj = adjOf(erGraph(50, 0.08, seed = 6))
-    def leg(chain: Int) = LabelProp.run(spark, adj, rounds = 6, chain = chain)
+    def leg(mat: Materializer) = LabelProp.run(spark, adj, rounds = 6, mat = mat)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
-    assert(leg(4) === leg(1))
+    assert(leg(new LocalMaterializer(window = 4)) === leg(new LocalMaterializer(window = 1)))
   }
 
   test("row-bfs chained supersteps: identical dists and telemetry to the eager loop") {
-    // 29-hop path from both endpoints: BFS depth 29 ends mid-chunk at
-    // chain = 4 — dist rows and per-step (d, frontier-count) telemetry must
-    // match the eager loop exactly, including the observed zero frontier
+    // 29-hop path from both endpoints: BFS depth 29 ends mid-chunk in
+    // chunks of 4 — dist rows and per-step (d, frontier-count) telemetry
+    // must match the eager loop (chain capacity 1) exactly, including the
+    // observed zero frontier
     val path = (0L until 29L).map(i => i -> (i + 1))
     val adj = adjOf(path)
     val pivots = Seq(0L, 29L).toDF("pivot")
-    def leg(chain: Int) = {
+    def leg(mat: Materializer) = {
       var tel = Vector.empty[(Int, Long)]
-      val rows = MultiBfs.run(spark, adj, pivots,
-        onSuperstep = (d, c) => tel :+= ((d, c)), chain = chain)
+      val rows = MultiBfs.run(spark, adj, pivots, mat = mat,
+        onSuperstep = (d, c) => tel :+= ((d, c)))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       (rows, tel)
     }
-    val (eagerRows, eagerTel) = leg(1)
-    val (chainRows, chainTel) = leg(4)
+    val (eagerRows, eagerTel) = leg(new LocalMaterializer(window = 1))
+    val (chainRows, chainTel) = leg(new LocalMaterializer(window = 4))
     assert(chainRows === eagerRows)
     assert(chainTel === eagerTel)
     assert(eagerTel.last._2 === 0L)
@@ -290,22 +302,29 @@ class AlgoSpec extends SparkTestBase {
   }
 
   test("chained supersteps: identical results and telemetry to the eager loop") {
-    // long path ⇒ many supersteps; chain=4 chunks overshoot past the empty
+    // long path ⇒ many supersteps; chunks of 4 overshoot past the empty
     // frontier on the final chunk — results and reported (step, count)
     // telemetry must still match the eager loop exactly (counts within a
-    // chunk are monotone to zero: an empty frontier sends no messages)
+    // chunk are monotone to zero: an empty frontier sends no messages).
+    // The visit reads every superstep state after its loop, so a windowed
+    // LocalMaterializer would evict states it still needs: the eager leg's
+    // materializer checkpoints eagerly, keeps everything and has the
+    // default chain capacity of 1.
     val path = (0L until 29L).map(i => i -> (i + 1))
     val adj = adjOf(path)
     val pivots = Seq(0L, 29L).toDF("pivot")
-    def leg(chain: Int) = {
+    val eager = new Materializer {
+      def iterate(df: DataFrame, iter: Int, metric: Double): DataFrame = df.localCheckpoint(true)
+    }
+    def leg(mat: Materializer) = {
       var tel = Vector.empty[(Int, Long)]
-      val rows = BitsetBfs.run(spark, adj, pivots, maskCols = 1,
-        onSuperstep = (d, c) => tel :+= ((d, c)), chain = chain)
+      val rows = BitsetBfs.run(spark, adj, pivots, maskCols = 1, mat = mat,
+        onSuperstep = (d, c) => tel :+= ((d, c)))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       (rows, tel)
     }
-    val (eagerRows, eagerTel) = leg(1)
-    val (chainRows, chainTel) = leg(4)
+    val (eagerRows, eagerTel) = leg(eager)
+    val (chainRows, chainTel) = leg(new LocalMaterializer(window = 0))
     assert(chainRows === eagerRows)
     assert(chainTel === eagerTel)
     assert(eagerTel.last._2 === 0L) // both observed the converged frontier

@@ -1,6 +1,7 @@
 package graft
 
-import graft.core.DirMaterializer
+import graft.algo.{BitsetBfs, LabelProp, MultiBfs, PageRank}
+import graft.core.{DirMaterializer, LocalMaterializer, Supersteps}
 import org.apache.spark.graft.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
@@ -36,5 +37,61 @@ class MaterializerSpec extends SparkTestBase {
     assert(out.schema === inferred.schema)
     assert(out.orderBy("id").collect().toSeq === inferred.orderBy("id").collect().toSeq)
     assert(out.count() === 200L)
+  }
+
+  /** Jobs of a loop's SECOND run: the first pays any first-use set-up jobs. */
+  private def loopJobs(run: () => Any): Int = { run(); jobsDuring(run())._2 }
+
+  test("superstep loops: Spark jobs per run pinned for each loop and materializer") {
+    import spark.implicits._
+    // 29-hop path from both endpoints: BFS depth 29, the last chunk of 4
+    // overshoots. The session runs with AQE on, so the counts include the
+    // query-stage jobs of every loop that does not pin AQE off.
+    val adj = adjOf((0L until 29L).map(i => i -> (i + 1)))
+    adj.count()
+    val pivots = Seq(0L, 29L).toDF("pivot")
+    assert(loopJobs(() => MultiBfs.run(spark, adj, pivots)) === 43, "row BFS")
+    assert(loopJobs(() => MultiBfs.run(spark, adj, pivots,
+      mat = new LocalMaterializer(window = 1))) === 63, "row BFS, window = 1")
+    assert(loopJobs(() => BitsetBfs.visit(spark, adj, pivots, maskCols = 1)) === 153, "bitset BFS")
+    assert(loopJobs(() => PageRank.run(spark, adj, maxIter = 2, tol = 1e-6)) === 15, "PageRank")
+    assert(loopJobs(() => LabelProp.run(spark, adj, rounds = 1,
+      mat = new DirMaterializer(spark,
+        java.nio.file.Files.createTempDirectory("graft_lpa_jobs").toString))) === 5, "LabelProp")
+  }
+
+  test("withConfs restores prior values, unsets new keys, also when the body throws") {
+    val conf = spark.conf
+    val set = "spark.sql.shuffle.partitions"
+    val unset = "spark.graft.test.unsetKey"
+    val prior = conf.get(set)
+    assert(conf.getOption(unset).isEmpty)
+    val seen = Supersteps.withConfs(spark, set -> "7", unset -> "x") {
+      (conf.get(set), conf.get(unset))
+    }
+    assert(seen === (("7", "x")))
+    assert(conf.get(set) === prior && conf.getOption(unset).isEmpty)
+    intercept[IllegalStateException] {
+      Supersteps.withConfs(spark, set -> "9", unset -> "y") {
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(conf.get(set) === prior && conf.getOption(unset).isEmpty)
+  }
+
+  test("MultiBfs.run and BitsetBfs.visit leave the session confs they pin as they found them") {
+    import spark.implicits._
+    val keys = Seq("spark.sql.adaptive.enabled",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+      "spark.sql.requireAllClusterKeysForCoPartition")
+    def confs() = keys.map(spark.conf.getOption)
+    val before = confs()
+    assert(before.head === Some("true"), "the suite session runs with AQE on")
+    val adj = adjOf(path4)
+    val pivots = Seq(0L).toDF("pivot")
+    MultiBfs.run(spark, adj, pivots)
+    assert(confs() === before, "after MultiBfs.run")
+    BitsetBfs.visit(spark, adj, pivots, maskCols = 1)
+    assert(confs() === before, "after BitsetBfs.visit")
   }
 }
