@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{Graph, DirMaterializer}
-import graft.algo.{MultiBfs, Geometric, PageRank, Components, LabelProp, Triangles, Chechik, Progressive}
+import graft.algo.{MultiBfs, Geometric, PageRank, Components, LabelProp, Triangles, Chechik, Progressive, Visit}
 import graft.data.Tpch
 import graft.ingest.{FilesTable, EdgeDeriver, ArcList, ResultsMerge}
 import graft.text.{TextOps, Dedup}
@@ -363,8 +363,12 @@ object SparkEntry {
       val verts = Graph.vertices(sym).localCheckpoint(true)
       val n = verts.count()
       val pivots = verts.orderBy("id").limit(16).select(col("id").as("pivot"))
-      Chechik.estimatorCoefficients(s, adj, pivots, verts, n)
-        .select(col("id"), round(col("lambda"), 6).as("lambda"), round(col("p"), 6).as("p"))
+      val visits = new Visit.Selector(s, adj, n)
+      val v = visits(pivots, math.min(16L, n))
+      val coef = Chechik.estimatorCoefficients(v, verts, n)
+      v.release()
+      visits.release()
+      coef.select(col("id"), round(col("lambda"), 6).as("lambda"), round(col("p"), 6).as("p"))
         .orderBy("id")
     }),
 
@@ -514,8 +518,7 @@ object SparkEntry {
       val pivots = vmap.select(col("nid").as("pivot"))
       // all-vertex exact farness via the bitset histogram — the explode-free
       // O(n·maskCols) path; closeness = 1/farness (ExactCloseness semantics)
-      val far = graft.algo.BitsetBfs.farness(
-        graft.algo.BitsetBfs.visit(s, adj, pivots, maskCols = 8))
+      val far = graft.algo.BitsetBfs.visit(s, adj, pivots, maskCols = 8).farness
       val scores = far.select(col("id"),
         when(col("farness") > 0, lit(1.0) / col("farness")).otherwise(0.0).as("closeness"),
         col("farness"))

@@ -54,13 +54,13 @@ import org.apache.spark.sql.functions._
   * Consumers never see tiles unless they want them:
   *  - [[run]] explodes tiles back to the (pivot, id, dist) relation — once,
   *    after the iteration. O(P·n) output rows.
-  *  - [[harmonic]]/[[farness]] aggregate the tile increments DIRECTLY —
+  *  - [[Visit.harmonic]]/[[Visit.farness]] aggregate the tile increments DIRECTLY —
   *    64·maskCols counting cells per (wave, dist) via [[org.apache.spark.sql.graft.TileBitCountAgg]] over
   *    n/ChunkSize-row frames, so the per-pivot score costs O(n·maskCols/ChunkSize) rows
   *    regardless of P — the 100 TB shape of "all per-source running sums
   *    become aggregates" (SURVEY.md §2.4 A3).
-  *  - [[reverseSum]]/[[reverseMax]] and per-wave visited frames use
-  *    [[idRows]], a lazy tile → (id, m0..) projection.
+  *  - [[Visit.reverseSum]]/[[Visit.reverseMax]] use [[idRows]], a lazy
+  *    tile → (id, m0..) projection.
   */
 object BitsetBfs {
 
@@ -108,27 +108,26 @@ object BitsetBfs {
     Prep(cadj, chunks)
   }
 
-  /** Handle to a completed bitset visit: pivot→(wave,mcol,mbit) index map,
-    * per-superstep newly-bit TILE frames (wave, dist, frame(chunk, tile)) —
-    * filtered projections of the cached per-superstep state — and per-wave
-    * final visited (id, m0..) frames. Consumed by the histogram/reverse
-    * aggregates below; obtain one via [[visit]] and reuse it across several
-    * aggregates (one BFS, many consumers — e.g. Chechik needs farness AND
-    * the λ ratio from the same pivot visit).
+  /** Handle to a completed bitset visit: pivot→(wave,mcol,mbit) index map
+    * and per-superstep newly-bit TILE frames (wave, dist, frame(chunk, tile))
+    * — filtered projections of the cached per-superstep state. Per-pivot
+    * aggregates come from [[histogram]], per-target ones from [[reverseAgg]].
     */
   case class Visit(
       idx: DataFrame,
       maskNames: Seq[String],
       increments: Vector[(Int, Int, DataFrame)],
-      visited: Vector[(Int, DataFrame)],
-      states: Vector[DataFrame]) {
-    /** Free every cached superstep state frame (and the pivot index). The
-      * visit's increment/visited frames are lazy projections of these states
-      * and become UNUSABLE — call only after all aggregates over the visit
-      * have been materialized. Without this, a long certification loop
-      * (Chechik runs estimator + sample + one visit per exact batch) keeps
-      * every superstep of every visit live in RAM-backed storage for the
-      * whole run (round-3 advice).
+      states: Vector[DataFrame]) extends graft.algo.Visit {
+    /** Per-pivot harmonic centrality (see `harmonic(spark, …)`). */
+    def harmonic: DataFrame = histogram(this, "harmonic", lit(0.0))(d => lit(1.0) / d)
+    def farness: DataFrame = histogram(this, "farness", lit(0L))(d => d.cast("long"))
+    def reverseSum(divisors: DataFrame): DataFrame = reverseAgg(this, divisors, max = false)
+    def reverseMax(divisors: DataFrame): DataFrame = reverseAgg(this, divisors, max = true)
+
+    /** Free every cached superstep state frame and the pivot index. Without
+      * this, a long certification loop (Chechik runs estimator + sample + one
+      * visit per exact batch) keeps every superstep of every visit live in
+      * RAM-backed storage for the whole run (round-3 advice).
       */
     def release(): Unit = {
       states.foreach(Materializer.unpersistCheckpoint(_))
@@ -234,14 +233,20 @@ object BitsetBfs {
   /** Run the wave BFS and return the [[Visit]] handle for histogram/reverse
     * consumers. Parameters as for [[run]].
     *
-    * Two session confs the tile loop NEEDS while its supersteps plan and run
-    * are pinned for the visit and restored on exit
+    * The Visit's increments read the superstep states after the loop, so a
+    * materializer that evicts iterations is refused before any Spark job.
+    *
+    * Three session confs the tile loop NEEDS while its supersteps plan and
+    * run are pinned for the visit and restored on exit
     * ([[graft.core.Supersteps.withConfs]]; a permanent mutation silently
     * changed spill/co-partition behavior of unrelated queries on the shared
     * session). Restoring at the end is safe: every superstep plan is
-    * materialized inside the loop, and the Visit's lazy increment/visited
+    * materialized inside the loop, and the Visit's lazy increment
     * projections are plain scans + aggregates over checkpointed frames —
-    * neither conf affects them.
+    * none of the confs affects them.
+    *  - adaptive execution off: as in [[MultiBfs.run]], the loop's plans are
+    *    the static ones PlanSpec asserts, and AQE would submit each query
+    *    stage of a chunk as its own Spark job.
     *  - fallbackThreshold: the tile aggregate's map-side hash map
     *    legitimately holds up to n/ChunkSize keys per task; the default
     *    ObjectHashAggregate fallback (128 keys) would silently degrade every
@@ -262,10 +267,13 @@ object BitsetBfs {
       maxIter: Int = 256,
       mat: Materializer = new LocalMaterializer(window = 0),
       onSuperstep: (Int, Long) => Unit = (_, _) => (),
-      onWaveVisited: (Int, DataFrame) => Unit = (_, _) => (),
       prep: Prep = null): Visit = Supersteps.withConfs(spark,
+    "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> (1 << 22).toString,
     "spark.sql.requireAllClusterKeysForCoPartition" -> "false") {
+    require(!mat.evictsIterations,
+      "BitsetBfs.visit reads every superstep state after its loop; a materializer " +
+        "that evicts iterations (LocalMaterializer with window > 0) would free them")
 
     val waveBits = 64L * maskCols
     val ms = (0 until maskCols).map(j => s"m$j")
@@ -311,7 +319,6 @@ object BitsetBfs {
       else prepare(adjacency)
 
     var incs = Vector.empty[(Int, Int, DataFrame)]
-    var visitedOut = Vector.empty[(Int, DataFrame)]
     var statesAcc = Vector.empty[DataFrame]
     for (w <- 0 until nWaves) {
       // init: the pivot's own bit set (newly AND visited) in its chunk's
@@ -346,22 +353,16 @@ object BitsetBfs {
       // the loop is Supersteps.run: each chunk's one union-multicount job
       // returns every substep's exact frontier-chunk count, and the visit
       // stops at the first empty frontier
-      val end = Supersteps.run(mat, start, 0, maxIter, superstep(_, inputs.cadj, maskCols),
+      Supersteps.run(mat, start, 0, maxIter, superstep(_, inputs.cadj, maskCols),
         settle = strip, metric = Some(Supersteps.Count(tileNonZero("ns"))),
         m0 = rows0.toDouble, stop = _ == 0, onStep = (d, st, c) => {
           statesAcc :+= st
           if (c > 0) incs :+= ((w, d, newlyTiles(st)))
           onSuperstep(d, c.toLong)
         })
-      // per-vertex visited masks for this wave — a lazy idRows projection,
-      // so its row set matches the sparse form exactly (never-reached
-      // vertices and phantom chunk slots carry all-zero masks and drop)
-      val vis = idRows(end.state, "vs", maskCols)
-      visitedOut :+= ((w, vis))
-      onWaveVisited(w, vis)
     }
     if (inputs != null && prep == null) inputs.release()
-    Visit(idx, ms, incs, visitedOut, statesAcc)
+    Visit(idx, ms, incs, statesAcc)
   }
 
   /** @param adjacency output of Graph.adjacency over SYMMETRIZED edges,
@@ -374,12 +375,6 @@ object BitsetBfs {
     *                  vertices — ~ChunkSize smaller than the row-BFS
     *                  frontier size; cross-telemetry comparisons with
     *                  pre-round-4 data must account for the unit change.
-    * @param onWaveVisited called once per completed wave with the final
-    *                  consolidated visited frame (id, m0..) — lets callers
-    *                  derive whole-visit aggregates (e.g.
-    *                  Σ deg(v)·popcount(masks) = exact visited-arc count,
-    *                  the reference's visitedArcs counter,
-    *                  GeometricCentralities.java:179-181) without the explode.
     * @param prep      chunk-keyed inputs from [[prepare]], reusable across
     *                  visits over the same graph; null → built per visit.
     * @return Dist(pivot, id, dist) — same relation as [[MultiBfs.run]].
@@ -392,10 +387,9 @@ object BitsetBfs {
       maxIter: Int = 256,
       mat: Materializer = new LocalMaterializer(window = 0),
       onSuperstep: (Int, Long) => Unit = (_, _) => (),
-      onWaveVisited: (Int, DataFrame) => Unit = (_, _) => (),
       prep: Prep = null): DataFrame = {
 
-    val raw = visit(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, onWaveVisited, prep)
+    val raw = visit(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, prep)
     val ms = raw.maskNames
 
     if (raw.increments.isEmpty)
@@ -443,24 +437,8 @@ object BitsetBfs {
       maxIter: Int = 256,
       mat: Materializer = new LocalMaterializer(window = 0),
       onSuperstep: (Int, Long) => Unit = (_, _) => (),
-      onWaveVisited: (Int, DataFrame) => Unit = (_, _) => (),
-      prep: Prep = null): DataFrame = {
-
-    harmonic(visit(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, onWaveVisited, prep))
-  }
-
-  /** Per-pivot harmonic from a completed [[Visit]] (see the other overload). */
-  def harmonic(v: Visit): DataFrame =
-    histogram(v, "harmonic", lit(0.0))(d => lit(1.0) / d)
-
-  /** Per-pivot farness Σ_v d(pivot, v) from a completed [[Visit]] — exact
-    * integer sums (Long end to end, GeometricCentralities.java:187 widened
-    * per SURVEY.md §1.1), same distributed histogram assembly as
-    * [[harmonic]]. Identical to
-    * `run(...).groupBy(pivot).agg(sum(dist))` without the mask explode.
-    */
-  def farness(v: Visit): DataFrame =
-    histogram(v, "farness", lit(0L))(d => d.cast("long"))
+      prep: Prep = null): DataFrame =
+    visit(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, prep).harmonic
 
   /** Shared histogram assembly in two stages. The expensive pass reduces
     * each (wave, dist) group of tile increments to 64·maskCols integer bit
@@ -501,23 +479,9 @@ object BitsetBfs {
     }
   }
 
-  /** Per-TARGET Σ_s d(s, v) / div(s) over all pivots s (the accumulation
-    * direction of the sampling estimators: Horvitz–Thompson apxFarness with
-    * div = p_s, ChechikFarnessEstimator.java:143,158-161; plain reverse
-    * farness with div = 1) WITHOUT the (pivot, id) row explosion — see
-    * [[reverseAgg]]. Returns (id, value); targets visited by no pivot are
-    * absent.
-    */
-  def reverseSum(v: Visit, divisors: DataFrame): DataFrame =
-    reverseAgg(v, divisors, max = false)
-
-  /** Per-TARGET max_s d(s, v) / div(s) — the λ estimator ratio with
-    * div = F(s) (ChechikEstimator.java:151-160). Returns (id, value).
-    */
-  def reverseMax(v: Visit, divisors: DataFrame): DataFrame =
-    reverseAgg(v, divisors, max = true)
-
-  /** The reverse-direction aggregate: per wave, the ≤ 64·maskCols per-pivot
+  /** The reverse-direction aggregate (Horvitz–Thompson apxFarness with
+    * div = p_s, ChechikFarnessEstimator.java:143,158-161; the λ ratio with
+    * div = F(s), ChechikEstimator.java:151-160): per wave, the ≤ 64·maskCols per-pivot
     * divisors are collected (bounded by the WAVE width, never the pivot
     * count) into per-byte lookup-table literals, and each increment row
     * (via the [[idRows]] projection) folds its set bits through the tables

@@ -28,6 +28,10 @@ import org.apache.spark.sql.functions._
   * S = V (the sample they would draw, since the uniform is < 1): the run is
   * one n-source BFS, every farness exact, and step 5 has nothing to do.
   *
+  * Every BFS of a run — estimator, sample, one per certification batch —
+  * comes from one [[Visit.Selector]], which picks its physical form and
+  * states what the forms agree on.
+  *
   * Determinism: the reference uses Math.random() (ChechikEstimator.java:60);
   * we use xxhash64-derived uniforms keyed by (seed, vertex id) — fully
   * deterministic and partition-independent (SURVEY.md §4.2.4), unlike
@@ -47,70 +51,22 @@ object Chechik {
   def kCoefficient(n: Long, eps: Double): Double =
     math.ceil(math.log(n.toDouble) / (eps * eps))
 
-  /** Mask columns sized to the pivot count (≤ 16, the [[BitsetBfs]] cap). */
-  private def maskColsFor(p: Long): Int =
-    math.max(1L, math.min(16L, (p + 63) / 64)).toInt
-
-  /** Cost-based path switch for a P-pivot visit over an n-vertex graph: the
-    * row path materializes the O(P·n) (pivot, id, dist) relation — trivially
-    * cheap while it fits (simple 4-column plans, no per-wave fixed cost);
-    * the bitset path keeps every superstep and aggregate at O(n·maskCols)
-    * rows regardless of P, but pays fixed per-visit plan/codegen cost for
-    * its 64·maskCols-expression histograms — measured ~3× SLOWER at
-    * P·n ≈ 2·10⁷ on this host, and the only shape that survives when
-    * P·n is 10¹²⁺. Same decision structure as broadcast-vs-shuffle join
-    * planning; both paths produce bit-identical doubles (spec-asserted), so
-    * the switch can never change results.
-    */
-  private def useBitset(pivotCount: Long, n: Long): Boolean =
-    pivotCount * n > (1L << 25)
-
-  /** Estimator coefficients from a pivot multi-source BFS
+  /** Estimator coefficients from a pivot visit `v`
     * (ChechikEstimator.java:51-65, SURVEY.md A9/A10): per vertex,
     * λ(w) = max(1/n, max_s d(s,w)/F(s)) over pivots s with total farness
     * F(s) > 0, and Bernoulli keep-probability p(w) = min(1, K·λ(w)).
     * Returns (id, lambda, p) for EVERY vertex of `verts`.
     *
-    * Scale path (see [[useBitset]]): ONE bitset visit feeds both halves —
-    * F(s) per pivot via the farness histogram, then the per-target max ratio
-    * via [[BitsetBfs.reverseMax]] with the F(s) divisors — O(n·maskCols)
-    * rows per superstep instead of the O(P·n) row relation.
+    * The one visit feeds both halves: F(s) per pivot from its farness, then
+    * the per-target max ratio with the F(s) divisors. The ratios are
+    * checkpointed, so the result no longer reads `v`: the caller may
+    * release it.
     */
-  def estimatorCoefficients(
-      spark: SparkSession,
-      adjacency: DataFrame,
-      pivots: DataFrame,
-      verts: DataFrame,
-      n: Long,
-      eps: Double = 0.1,
-      onSuperstep: (Int, Long) => Unit = (_, _) => (),
-      forceBitset: Option[Boolean] = None,
-      prep: BitsetBfs.Prep = null): DataFrame = {
-    val p = pivots.select(col("pivot").cast("long").as("pivot")).distinct()
-      .localCheckpoint(eager = false)
-    val nPiv = p.count()
-    val maxr =
-      if (forceBitset.getOrElse(useBitset(nPiv, n))) {
-        val v = BitsetBfs.visit(spark, adjacency, p,
-          maskCols = maskColsFor(nPiv), onSuperstep = onSuperstep,
-          prep = prep)
-        val divisors = BitsetBfs.farness(v)
-          .where(col("farness") > 0)
-          .select(col("id").as("pivot"), col("farness").cast("double").as("div"))
-        // checkpoint the n-row result so the visit's superstep states can be
-        // freed NOW instead of living until the caller's last action
-        val out = BitsetBfs.reverseMax(v, divisors).localCheckpoint(true)
-        v.release()
-        out
-      } else {
-        val pivotDist = MultiBfs.run(spark, adjacency, p, onSuperstep = onSuperstep)
-          .localCheckpoint(true)
-        val totals = pivotDist.groupBy("pivot").agg(sum("dist").as("total"))
-        pivotDist
-          .join(totals.where(col("total") > 0), "pivot")
-          .select(col("id"), (col("dist").cast("double") / col("total")).as("r"))
-          .groupBy("id").agg(max("r").as("value"))
-      }
+  def estimatorCoefficients(v: Visit, verts: DataFrame, n: Long, eps: Double = 0.1): DataFrame = {
+    val divisors = v.farness
+      .where(col("farness") > 0)
+      .select(col("id").as("pivot"), col("farness").cast("double").as("div"))
+    val maxr = v.reverseMax(divisors).localCheckpoint(true)
     val kCoef = kCoefficient(n, eps)
     verts
       .join(maxr, Seq("id"), "left")
@@ -128,19 +84,11 @@ object Chechik {
       mat: Materializer = new LocalMaterializer(window = 0)): (DataFrame, Telemetry) = {
 
     var supersteps = 0L
-    val countStep = (_: Int, _: Long) => supersteps += 1
 
     // lazy checkpoint: the count is the one job that materializes it
     val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(eager = false)
     val n = verts.count()
-    // chunk-keyed visit inputs shared across every bitset visit of the run
-    // (estimator, sample, one per certification batch), built on the first
-    // visit that takes the bitset path — a row-path-only run never pays for it
-    var bprep: BitsetBfs.Prep = null
-    def prep(): BitsetBfs.Prep = {
-      if (bprep == null) bprep = BitsetBfs.prepare(adjacency)
-      bprep
-    }
+    val visits = new Visit.Selector(spark, adjacency, n, (_, _) => supersteps += 1)
 
     // steps 1-3 and the Bernoulli draw are skipped when K ≥ n: λ_v ≥ 1/n
     // makes every p_v = min(1, K·λ_v) equal to 1, and u01 < 1, so the
@@ -159,9 +107,9 @@ object Chechik {
           .limit(nPivots.toInt)
           .select(col("id").as("pivot"))
         // 2-3. λ coefficients + keep probabilities from the pivot BFS (A9/A10)
-        val probs = estimatorCoefficients(spark, adjacency, pivots, verts, n, eps, countStep,
-            prep = if (useBitset(nPivots, n)) prep() else null)
-          .select(col("id"), col("p"))
+        val vPivots = visits(pivots, nPivots)
+        val probs = estimatorCoefficients(vPivots, verts, n, eps).select(col("id"), col("p"))
+        vPivots.release()
         // 4. Bernoulli sample S (R2)
         val s = probs.where(u01(seed + 1, col("id")) < col("p")).localCheckpoint(eager = false)
         (s, s.count())
@@ -171,36 +119,16 @@ object Chechik {
     // 4. ONE visit from S feeds two consumers: every source's EXACT farness
     // (seeds `processed` — no vertex of S is ever BFS'd again) and, for the
     // vertices outside S, the Horvitz–Thompson estimate
-    // apxF(v) = Σ_s d(s,v)/p_s. The sample is the web-scale cardinality
-    // (K·E[λ]·n), so past the useBitset cap the row-BFS O(S·n) relation must
-    // never materialize: bitset visit + histogram / divisor-array reverse sum
-    // keep it O(n·maskCols) per wave.
-    val sources = sample.select(col("id").as("pivot"))
-    val (sampleFarness, apxFarness) =
-      if (useBitset(sampleSize, n)) {
-        val vSample = BitsetBfs.visit(spark, adjacency, sources,
-          maskCols = maskColsFor(sampleSize), onSuperstep = countStep,
-          prep = prep())
-        // both checkpoints are eager: the visit's states are freed below
-        val f = BitsetBfs.farness(vSample).localCheckpoint(true)
-        val apx = if (unsampled == 0) None else Some(
-          BitsetBfs.reverseSum(vSample, sample.select(col("id").as("pivot"), col("p").as("div")))
-            .select(col("id"), col("value").as("apxF"))
-            .localCheckpoint(true))
-        vSample.release()
-        (f, apx)
-      } else {
-        val dist = MultiBfs.run(spark, adjacency, sources, onSuperstep = countStep)
-        // eager: certification, the top-k boundary and the caller's action
-        // all read it — aggregate the S·n relation once
-        val f = dist.groupBy(col("pivot").as("id")).agg(sum("dist").cast("long").as("farness"))
-          .localCheckpoint(true)
-        val apx = if (unsampled == 0) None else Some(
-          dist.join(sample.select(col("id").as("pivot"), col("p")), "pivot")
-            .groupBy("id")
-            .agg(sum(col("dist").cast("double") / col("p")).as("apxF")))
-        (f, apx)
-      }
+    // apxF(v) = Σ_s d(s,v)/p_s. Both checkpoints are eager: certification,
+    // the top-k boundary and the caller's action all read the farness, and
+    // the visit is released below.
+    val vSample = visits(sample.select(col("id").as("pivot")), sampleSize)
+    val sampleFarness = vSample.farness.localCheckpoint(true)
+    val apxFarness = if (unsampled == 0) None else Some(
+      vSample.reverseSum(sample.select(col("id").as("pivot"), col("p").as("div")))
+        .select(col("id"), col("value").as("apxF"))
+        .localCheckpoint(true))
+    vSample.release()
 
     // 5. certification loop over V∖S only (nothing to certify when S = V)
     var processed = sampleFarness
@@ -244,24 +172,13 @@ object Chechik {
       while (certified < k && l < unsampled) {
         val batchIds = schedule.where(col("pos") >= l && col("pos") < l + batch)
           .select(col("id").as("pivot"))
-        // exact farness per batch pivot; past the useBitset cap a batch is
-        // one wave-packed visit, O(n·maskCols) rows/superstep, not O(batch·n)
-        val (exactF, releaseBatch) =
-          if (useBitset(batch, n)) {
-            val vb = BitsetBfs.visit(spark, adjacency, batchIds,
-              maskCols = maskColsFor(batch), onSuperstep = countStep,
-              prep = prep())
-            (BitsetBfs.farness(vb).select(col("id"), col("farness")),
-              () => vb.release())
-          } else
-            (MultiBfs.run(spark, adjacency, batchIds, onSuperstep = countStep)
-              .groupBy(col("pivot").as("id"))
-              .agg(sum("dist").cast("long").as("farness")),
-              () => ())
-        processed = mat.iterate(processed.unionAll(exactF), (l / batch).toInt, certified.toDouble)
+        // exact farness per batch pivot
+        val vBatch = visits(batchIds, batch)
+        processed = mat.iterate(processed.unionAll(vBatch.farness), (l / batch).toInt,
+          certified.toDouble)
         // `processed` is materialized (mat.iterate is eager): the batch
-        // visit's cached superstep states are dead now
-        releaseBatch()
+        // visit's cached state is dead now
+        vBatch.release()
         // positions are dense 0..|V∖S|-1, so [l, l+batch) holds
         // min(batch, |V∖S|−l) ids — no count job in the loop
         exactBfs += math.min(batch, unsampled - l)
@@ -284,7 +201,7 @@ object Chechik {
         when(col("farness") > 0, lit(1.0) / col("farness")).otherwise(0.0).as("closeness"))
       .orderBy(asc("farness"), asc("id"))
 
-    if (bprep != null) bprep.release()
+    visits.release()
     val telemetry = Telemetry(
       n = n, initialPivots = nPivots, sampleSize = sampleSize,
       exactBfs = exactBfs, totalBfs = nPivots + sampleSize + exactBfs,

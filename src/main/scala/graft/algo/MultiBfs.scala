@@ -112,6 +112,30 @@ object MultiBfs {
     }.state.select("pivot", "id", "dist")
   }
 
+  /** [[run]] as a [[graft.algo.Visit]]: its aggregates group the
+    * (pivot, id, dist) relation by pivot (farness) or, joined to the
+    * divisors on pivot, by id (reverse sum and max of d / div).
+    * `release` frees the final superstep state the relation reads.
+    */
+  def visit(
+      spark: SparkSession,
+      adjacency: DataFrame,
+      sources: DataFrame,
+      onSuperstep: (Int, Long) => Unit = (_, _) => ()): Visit = {
+    val dist = run(spark, adjacency, sources, onSuperstep = onSuperstep)
+    def reverse(divisors: DataFrame, agg: Column => Column): DataFrame =
+      dist.join(divisors.select("pivot", "div"), "pivot")
+        .groupBy("id")
+        .agg(agg(col("dist").cast("double") / col("div")).as("value"))
+    new Visit {
+      def farness: DataFrame =
+        dist.groupBy(col("pivot").as("id")).agg(sum("dist").cast("long").as("farness"))
+      def reverseSum(divisors: DataFrame): DataFrame = reverse(divisors, sum)
+      def reverseMax(divisors: DataFrame): DataFrame = reverse(divisors, max)
+      def release(): Unit = Materializer.unpersistCheckpoint(dist)
+    }
+  }
+
   /** One superstep over the previous state (see object scaladoc). Package-
     * visible so PlanSpec exercises the EXACT loop body instead of a
     * drift-prone copy (the recorded plans behind OPTIMIZATION_r06.md §1 were

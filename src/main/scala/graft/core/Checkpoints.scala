@@ -104,6 +104,9 @@ trait Materializer {
     */
   def chainCapacity: Int = 1
 
+  /** Whether later iterations free earlier ones (see [[LocalMaterializer]]). */
+  private[graft] def evictsIterations: Boolean = false
+
   /** Previously completed increments (iter → frame), ascending, for resume. */
   def resumeIncrements(): Seq[(Int, DataFrame)] = Seq.empty
 
@@ -171,6 +174,8 @@ final class LocalMaterializer(window: Int = 0) extends Materializer {
     * ever reach the dequeue (see trait scaladoc).
     */
   override def chainCapacity: Int = if (window == 0) Int.MaxValue else window
+
+  override private[graft] def evictsIterations: Boolean = window > 0
 }
 
 final class DirMaterializer(spark: SparkSession, dir: String) extends Materializer {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.algo.{PageRank, Components, LabelProp, Triangles, Chechik, MultiBfs, BitsetBfs, Geometric}
+import graft.algo.{PageRank, Components, LabelProp, Triangles, Chechik, MultiBfs, BitsetBfs, Geometric, Visit}
 import graft.core.{Graph, DirMaterializer, LocalMaterializer, Materializer}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -151,6 +151,26 @@ class AlgoSpec extends SparkTestBase {
   }
 
   test("chechik with keep-probabilities < 1: exact top-k, each source's farness computed once") {
+    keepProbabilitiesBelowOne()
+  }
+
+  test("chechik with keep-probabilities < 1 on bitset visits: same assertions") {
+    // lowering the selector's threshold sends every visit of the run —
+    // estimator, sample and certification batches — to the bitset form
+    val prior = Visit.bitsetAbove
+    try {
+      Visit.bitsetAbove = 0L
+      val adj = adjOf(path4)
+      assert(new Visit.Selector(spark, adj, n = 4)(Seq(0L).toDF("pivot"), 1L)
+        .isInstanceOf[BitsetBfs.Visit])
+      keepProbabilitiesBelowOne()
+    } finally Visit.bitsetAbove = prior
+  }
+
+  /** ε = 0.5 Chechik run on ER(80): exact top-k, and the certification
+    * loop's processed set holds each source's exact farness exactly once.
+    */
+  private def keepProbabilitiesBelowOne(): Unit = {
     val edges = erGraph(80, 0.06, seed = 8)
     val adj = adjOf(edges)
     val k = 5
@@ -210,14 +230,18 @@ class AlgoSpec extends SparkTestBase {
     val adj = Graph.adjacency(sym)
     val verts = Graph.vertices(sym)
     val pivots = verts.select(col("id").as("pivot"))
-    // both cost-switch paths must produce the same coefficients
-    Seq(Some(false), Some(true)).foreach { force =>
-      val got = Chechik.estimatorCoefficients(spark, adj, pivots, verts, n = 3,
-          forceBitset = force)
+    // both visit forms must produce the same coefficients
+    Seq[(String, () => Visit)](
+      "row" -> (() => MultiBfs.visit(spark, adj, pivots)),
+      "bitset" -> (() => BitsetBfs.visit(spark, adj, pivots, maskCols = 1))
+    ).foreach { case (form, visit) =>
+      val v = visit()
+      val got = Chechik.estimatorCoefficients(v, verts, n = 3)
         .collect().map(r => r.getAs[Long]("id") -> (r.getAs[Double]("lambda"), r.getAs[Double]("p"))).toMap
-      assert(approxEqual(got(0L)._1, 2.0 / 3), s"force=$force")
-      assert(approxEqual(got(1L)._1, 1.0 / 3), s"force=$force")
-      assert(approxEqual(got(2L)._1, 2.0 / 3), s"force=$force")
+      v.release()
+      assert(approxEqual(got(0L)._1, 2.0 / 3), s"form=$form")
+      assert(approxEqual(got(1L)._1, 1.0 / 3), s"form=$form")
+      assert(approxEqual(got(2L)._1, 2.0 / 3), s"form=$form")
       got.values.foreach { case (_, p) => assert(approxEqual(p, 1.0)) }
     }
   }
@@ -339,7 +363,7 @@ class AlgoSpec extends SparkTestBase {
 
     val farRow = dist.groupBy("pivot").agg(sum("dist").cast("long").as("f"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val farBits = BitsetBfs.farness(v)
+    val farBits = v.farness
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("farness")).toMap
     (0L until 70L).foreach { p =>
       assert(farBits(p) === farRow.getOrElse(p, 0L), s"farness($p)")
@@ -349,7 +373,7 @@ class AlgoSpec extends SparkTestBase {
     val sumRow = dist.join(divs, "pivot")
       .groupBy("id").agg(sum(col("dist").cast("double") / col("div")).as("s"))
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Double]("s")).toMap
-    val sumBits = BitsetBfs.reverseSum(v, divs)
+    val sumBits = v.reverseSum(divs)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Double]("value")).toMap
     assert(sumBits.keySet === sumRow.keySet)
     sumRow.foreach { case (i, s) => assert(approxEqual(s, sumBits(i)), s"revSum($i)") }
@@ -357,7 +381,7 @@ class AlgoSpec extends SparkTestBase {
     val maxRow = dist.join(divs, "pivot")
       .groupBy("id").agg(max(col("dist").cast("double") / col("div")).as("s"))
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Double]("s")).toMap
-    val maxBits = BitsetBfs.reverseMax(v, divs)
+    val maxBits = v.reverseMax(divs)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Double]("value")).toMap
     assert(maxBits.keySet === maxRow.keySet)
     maxRow.foreach { case (i, s) => assert(approxEqual(s, maxBits(i)), s"revMax($i)") }
@@ -370,11 +394,11 @@ class AlgoSpec extends SparkTestBase {
     val rowOnly0 = dist.join(divsOnly0, "pivot")
       .groupBy("id").agg(sum(col("dist").cast("double") / col("div")).as("s"))
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Double]("s")).toMap
-    val bitsOnly0 = BitsetBfs.reverseSum(v, divsOnly0)
+    val bitsOnly0 = v.reverseSum(divsOnly0)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Double]("value")).toMap
     assert(bitsOnly0.keySet === rowOnly0.keySet)
     rowOnly0.foreach { case (i, s) => assert(approxEqual(s, bitsOnly0(i)), s"revSumOnly0($i)") }
-    val maxOnly0 = BitsetBfs.reverseMax(v, divsOnly0)
+    val maxOnly0 = v.reverseMax(divsOnly0)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Double]("value")).toMap
     assert(maxOnly0.keySet === rowOnly0.keySet)
   }
@@ -395,20 +419,6 @@ class AlgoSpec extends SparkTestBase {
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Double]("harmonic")).toMap
     assert(viaHist.keySet === viaRows.keySet)
     viaRows.foreach { case (v, h) => assert(approxEqual(h, viaHist(v)), s"hist harmonic($v)") }
-
-    // visited-mask popcount edge accounting == Σ deg over the dist relation
-    val degs = Graph.degrees(Graph.symmetrize(edgeDf(edges)))
-    var maskEdges = 0L
-    BitsetBfs.run(spark, adj, pivots, maskCols = 1,
-      onWaveVisited = (_, vis) => {
-        val bits = vis.columns.filter(_ != "id")
-          .map(c => expr(s"bit_count($c)").cast("long")).reduce(_ + _)
-        maskEdges += vis.join(degs, vis("id") === degs("id"))
-          .agg(coalesce(sum(col("degree") * bits), lit(0L))).head().getLong(0)
-      }).count()
-    val rowEdges = MultiBfs.run(spark, adj, pivots)
-      .join(degs, Seq("id")).agg(sum("degree")).head().getLong(0)
-    assert(maskEdges === rowEdges)
   }
 
   test("sparse tile serialization round-trips dense, sparse, and empty buffers") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.algo.{BitsetBfs, LabelProp, MultiBfs, PageRank}
+import graft.algo.{BitsetBfs, Chechik, LabelProp, MultiBfs, PageRank}
 import graft.core.{DirMaterializer, LocalMaterializer, Supersteps}
 import org.apache.spark.graft.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -53,11 +53,33 @@ class MaterializerSpec extends SparkTestBase {
     assert(loopJobs(() => MultiBfs.run(spark, adj, pivots)) === 43, "row BFS")
     assert(loopJobs(() => MultiBfs.run(spark, adj, pivots,
       mat = new LocalMaterializer(window = 1))) === 63, "row BFS, window = 1")
-    assert(loopJobs(() => BitsetBfs.visit(spark, adj, pivots, maskCols = 1)) === 153, "bitset BFS")
+    assert(loopJobs(() => BitsetBfs.visit(spark, adj, pivots, maskCols = 1)) === 13, "bitset BFS")
     assert(loopJobs(() => PageRank.run(spark, adj, maxIter = 2, tol = 1e-6)) === 15, "PageRank")
     assert(loopJobs(() => LabelProp.run(spark, adj, rounds = 1,
       mat = new DirMaterializer(spark,
         java.nio.file.Files.createTempDirectory("graft_lpa_jobs").toString))) === 5, "LabelProp")
+  }
+
+  test("chechik with keep-probabilities < 1: Spark jobs per run pinned") {
+    // ε = 0.5 on ER(80): estimator, sample visit and several certification
+    // batches of k = 5, then the caller's collect
+    val adj = adjOf(erGraph(80, 0.06, seed = 8))
+    adj.count()
+    val jobs = loopJobs(() =>
+      Chechik.topkCloseness(spark, adj, k = 5, eps = 0.5, batchSize = 5)._1.collect())
+    assert(jobs === 254)
+  }
+
+  test("BitsetBfs.visit refuses an evicting materializer before any Spark job") {
+    import spark.implicits._
+    val adj = adjOf((0L until 29L).map(i => i -> (i + 1)))
+    adj.count()
+    val pivots = Seq(0L, 29L).toDF("pivot")
+    val (err, jobs) = jobsDuring(intercept[IllegalArgumentException] {
+      BitsetBfs.run(spark, adj, pivots, maskCols = 1, mat = new LocalMaterializer(window = 1))
+    })
+    assert(jobs === 0)
+    assert(err.getMessage.contains("evicts iterations"), err.getMessage)
   }
 
   test("withConfs restores prior values, unsets new keys, also when the body throws") {
