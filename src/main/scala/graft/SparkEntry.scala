@@ -314,8 +314,8 @@ object SparkEntry {
       val sym = sparseSym(s, dir)
       val adj = Graph.adjacency(sym).persist()
       val sources = Graph.vertices(sym).orderBy("id").limit(16).select(col("id").as("pivot"))
-      MultiBfs.run(s, adj, sources)
-        .groupBy("id").agg(sum("dist").cast("long").as("rev_farness"))
+      Geometric.reverseFarness(MultiBfs.visit(s, adj, sources), sources)
+        .select(col("id"), col("revFarness").as("rev_farness"))
         .orderBy("id")
     }),
 
@@ -385,10 +385,8 @@ object SparkEntry {
       val pivots = Graph.degrees(sym)
         .orderBy(desc("degree"), asc("id")).limit(kDone.toInt)
         .select(col("id").as("pivot"))
-      val dist = MultiBfs.run(s, adj, pivots).localCheckpoint(true)
-      val exactF = dist.groupBy(col("pivot").as("id")).agg(sum("dist").cast("long").as("farness"))
-      val revF = Geometric.reverseFarness(dist)
-      Geometric.mergeAndSort(exactF, revF, verts, n, kDone)
+      val v = MultiBfs.visit(s, adj, pivots)
+      Geometric.mergeAndSort(v.farness, Geometric.reverseFarness(v, pivots), verts, n, kDone)
         .select(col("id"), col("exact").cast("long").as("exact"),
           round(col("score"), 6).as("score"))
         .orderBy(desc("score"), desc("id"))
@@ -465,9 +463,8 @@ object SparkEntry {
       val pivots = Graph.degrees(sym)
         .orderBy(desc("degree"), asc("id")).limit(16)
         .select(col("id").as("pivot"))
-      val dist = MultiBfs.run(s, adj, pivots).localCheckpoint(true)
-      val exactF = dist.groupBy(col("pivot").as("id")).agg(sum("dist").cast("long").as("farness"))
-      val est10 = Geometric.mergeAndSort(exactF, Geometric.reverseFarness(dist), verts, n, 16L)
+      val v = MultiBfs.visit(s, adj, pivots)
+      val est10 = Geometric.mergeAndSort(v.farness, Geometric.reverseFarness(v, pivots), verts, n, 16L)
         .orderBy(desc("score"), desc("id")).limit(10).select("id")
       val exact10 = Chechik.topkCloseness(s, adj, k = 10)._1
         .orderBy("farness", "id").limit(10).select("id")

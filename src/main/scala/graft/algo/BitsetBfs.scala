@@ -1,7 +1,7 @@
 package graft.algo
 
 import graft.core.{Materializer, LocalMaterializer, Supersteps}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Bitset multi-source BFS — the scale path for many-pivot visits.
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *
   *   frontier = explode state tiles → (chunk, pos, m0..)  [no shuffle]
   *   msgs     = frontier ⋈ cadj on (chunk, pos) → explode neighbors
-  *              → groupBy(dst chunk).agg(TileOr)           [THE shuffle]
+  *              → groupBy(dst chunk).agg(tileOrCols)       [THE shuffle]
   *   state'   = state ⟕ msgs on chunk:
   *              ns = zip_with(atile, vs, (a,v) -> a & ~v)
   *              vs = zip_with(vs, atile, (v,a) -> v | a)   [co-partitioned]
@@ -52,8 +52,6 @@ import org.apache.spark.sql.functions._
   * `maxPartitionBytes` at larger n, or shrink chunks).
   *
   * Consumers never see tiles unless they want them:
-  *  - [[run]] explodes tiles back to the (pivot, id, dist) relation — once,
-  *    after the iteration. O(P·n) output rows.
   *  - [[Visit.harmonic]]/[[Visit.farness]] aggregate the tile increments DIRECTLY —
   *    64·maskCols counting cells per (wave, dist) via [[org.apache.spark.sql.graft.TileBitCountAgg]] over
   *    n/ChunkSize-row frames, so the per-pivot score costs O(n·maskCols/ChunkSize) rows
@@ -231,7 +229,20 @@ object BitsetBfs {
   }
 
   /** Run the wave BFS and return the [[Visit]] handle for histogram/reverse
-    * consumers. Parameters as for [[run]].
+    * consumers.
+    *
+    * @param adjacency output of Graph.adjacency over SYMMETRIZED edges,
+    *                  persisted by the caller (only read when no `prep` is
+    *                  supplied — the visit then builds and frees its own).
+    * @param pivots    one column `pivot: Long`.
+    * @param maskCols  Long mask columns per wave (64 pivots each).
+    * @param onSuperstep (d, count) per superstep. NOTE: `count` is frontier
+    *                  CHUNK rows (tiles with any new bit), not frontier
+    *                  vertices — ~ChunkSize smaller than the row-BFS
+    *                  frontier size; cross-telemetry comparisons with
+    *                  pre-round-4 data must account for the unit change.
+    * @param prep      chunk-keyed inputs from [[prepare]], reusable across
+    *                  visits over the same graph; null → built per visit.
     *
     * The Visit's increments read the superstep states after the loop, so a
     * materializer that evicts iterations is refused before any Spark job.
@@ -329,13 +340,14 @@ object BitsetBfs {
       // n/ChunkSize-row distinct.
       val wavePivots = idx.where(col("wave") === w)
       val pivotTiles = wavePivots.select(
-          shiftright(col("pivot"), ChunkBits).as("chunk"),
-          col("pivot").bitwiseAND(lit((ChunkSize - 1).toLong)).cast("int").as("pos"),
-          array((0 until maskCols).map(j =>
-            when(col("mcol") === j, expr("shiftleft(CAST(1 AS BIGINT), mbit)"))
-              .otherwise(lit(0L))): _*).as("masks"))
+          shiftright(col("pivot"), ChunkBits).as("chunk") +:
+            col("pivot").bitwiseAND(lit((ChunkSize - 1).toLong)).cast("int").as("pos") +:
+            ms.zipWithIndex.map { case (m, j) =>
+              when(col("mcol") === j, expr("shiftleft(CAST(1 AS BIGINT), mbit)"))
+                .otherwise(lit(0L)).as(m)
+            }: _*)
         .groupBy("chunk").agg(org.apache.spark.sql.graft.TileAggs
-          .tileOr(col("pos"), col("masks"), maskCols, ChunkSize).as("ptile"))
+          .tileOrCols(col("pos"), ms.map(col), ChunkSize).as("ptile"))
       val allChunks = inputs.chunks
         .unionAll(wavePivots.select(shiftright(col("pivot"), ChunkBits).as("chunk")))
         .distinct()
@@ -365,57 +377,6 @@ object BitsetBfs {
     Visit(idx, ms, incs, statesAcc)
   }
 
-  /** @param adjacency output of Graph.adjacency over SYMMETRIZED edges,
-    *                  persisted by the caller (only read when no `prep` is
-    *                  supplied — the visit then builds and frees its own).
-    * @param pivots    one column `pivot: Long`.
-    * @param maskCols  Long mask columns per wave (64 pivots each).
-    * @param onSuperstep (d, count) per superstep. NOTE: `count` is frontier
-    *                  CHUNK rows (tiles with any new bit), not frontier
-    *                  vertices — ~ChunkSize smaller than the row-BFS
-    *                  frontier size; cross-telemetry comparisons with
-    *                  pre-round-4 data must account for the unit change.
-    * @param prep      chunk-keyed inputs from [[prepare]], reusable across
-    *                  visits over the same graph; null → built per visit.
-    * @return Dist(pivot, id, dist) — same relation as [[MultiBfs.run]].
-    */
-  def run(
-      spark: SparkSession,
-      adjacency: DataFrame,
-      pivots: DataFrame,
-      maskCols: Int = 16,
-      maxIter: Int = 256,
-      mat: Materializer = new LocalMaterializer(window = 0),
-      onSuperstep: (Int, Long) => Unit = (_, _) => (),
-      prep: Prep = null): DataFrame = {
-
-    val raw = visit(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, prep)
-    val ms = raw.maskNames
-
-    if (raw.increments.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row],
-        org.apache.spark.sql.types.StructType.fromDDL("pivot LONG, id LONG, dist INT"))
-
-    // explode tiles → (pivot, id, dist), joined back through the idx map
-    val bitsOf = (m: String) =>
-      expr(s"filter(sequence(0, 63), b -> (shiftright($m, b) & 1) = 1)")
-    raw.increments.groupBy(_._1).toSeq.sortBy(_._1).map { case (w, winc) =>
-      val exploded = winc.map { case (_, d, inc) =>
-        val rows = idRows(inc, "tile", ms.size)
-        ms.zipWithIndex.map { case (m, j) =>
-          rows.where(col(m) =!= 0L)
-            .select(col("id"), lit(d).as("dist"),
-              explode(bitsOf(m)).as("mbit"))
-            .withColumn("mcol", lit(j))
-        }.reduce(_ unionAll _)
-      }.reduce(_ unionAll _)
-      exploded
-        .join(raw.idx.where(col("wave") === w), Seq("mcol", "mbit"))
-        .select(col("pivot"), col("id"), col("dist"))
-    }.reduce(_ unionAll _)
-  }
-
   /** Per-pivot harmonic centrality Σ_v 1/d(pivot,v) WITHOUT materializing the
     * (pivot, id, dist) relation: one distributed aggregate over all waves'
     * tile increments computes the 64·maskCols bit-histogram sums
@@ -426,7 +387,7 @@ object BitsetBfs {
     * 1-partition parallelize — exactly what breaks at the Chechik web-scale
     * sample size).
     *
-    * Identical output to `Geometric.scores(run(...)).select(id, harmonic)`
+    * Identical output to `Geometric.scores` over the row BFS's relation
     * (spec-checked) at O(n·maskCols/64) aggregate ROWS instead of O(P·n).
     */
   def harmonic(

@@ -1,6 +1,6 @@
 package graft.algo
 
-import graft.core.{Materializer, LocalMaterializer}
+import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -29,9 +29,16 @@ import org.apache.spark.sql.expressions.Window
   * per-source aggregate window (partitioned by src — never an unpartitioned
   * window) and reference the previous state only ADDITIVELY (unions and
   * windows, no self-joins), so checkpoint-inherited stats never square
-  * across rounds (STATS DISCIPLINE — see PageRank). The convergence check
-  * (edge set unchanged) joins two already-checkpointed frames into a scalar
-  * and its stats die with the job.
+  * across rounds (STATS DISCIPLINE — see PageRank).
+  *
+  * The loop is [[graft.core.Supersteps.run]]: a round is its `step`, and
+  * its metric is the size of the symmetric difference between the new edge
+  * set and the previous one — a full-outer probe of two distinct'd (hence
+  * duplicate-free) frames, co-partitioned on (src, dst) — which is 0
+  * exactly at the fixpoint. One union job per chunk measures every round of
+  * the chunk; the loop keeps the first round whose edge set is unchanged,
+  * so labels and the round count equal a chunk length of 1. The probe joins
+  * two checkpointed frames into a scalar, and its stats die with the job.
   *
   * Known skew note: the per-src window puts deg(u) rows in one task for a
   * hub u; the contraction itself is the mitigation — after one round every
@@ -42,6 +49,11 @@ object Components {
 
   case class Result(labels: DataFrame, iterations: Int)
 
+  /** @param onSuperstep (round, metric) per round: the metric is the
+    *                    round's changed-edge count, 0 on the last round of a
+    *                    converged run. No caller reads the value; perfbench
+    *                    counts the calls.
+    */
   def run(
       spark: SparkSession,
       adjacency: DataFrame,
@@ -58,7 +70,7 @@ object Components {
       .distinct()
 
     // a fresh run materializes and counts the initial edge state in one job
-    var (iter, edges, edgeCount) = mat.resumeIncrements().lastOption match {
+    val (iter, edges, edgeCount) = mat.resumeIncrements().lastOption match {
       case Some((i, st)) =>
         val e = st.select("src", "dst")
         (i, e, e.count())
@@ -68,9 +80,7 @@ object Components {
     }
 
     val wSrc = Window.partitionBy("src")
-    var converged = edgeCount == 0L
-    while (!converged && iter < maxIter) {
-      iter += 1
+    def step(edges: DataFrame): DataFrame = {
       // large-star over BOTH orientations of each edge
       val bidir = edges.select(col("src"), col("dst"))
         .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -80,40 +90,34 @@ object Components {
         .select(col("dst").as("src"), col("m").as("dst")) // v > u ≥ m ⇒ src > dst
       // small-star on the (src > dst)-oriented result
       val withM = ls.withColumn("m", min("dst").over(wSrc)) // m < src
-      val ss = withM
+      withM
         .where(col("dst") =!= col("m"))
         .select(col("dst").as("src"), col("m").as("dst")) // dst > m
         .unionAll(withM.select(col("src"), col("m").as("dst")))
         .distinct()
-      val state = mat.iterateDeferred(ss, iter, -1.0)
-      // fixpoint ⇔ the edge SET is unchanged. ONE materializing job per
-      // round (round 6): count the new state AND its rows absent from the
-      // previous set in the same aggregate — a co-partitioned left-outer
-      // probe of two distinct'd (hence duplicate-free) frames — instead of
-      // a count job plus, on equal counts, a second anti-join job.
-      // newCount == edgeCount && nothing-fresh ⇔ set equality.
-      val chk = state
-        .join(edges.select(col("src"), col("dst"), lit(1).as("__old")),
-          Seq("src", "dst"), "left_outer")
-        .agg(count(lit(1)).as("n"),
-          count(when(col("__old").isNull, 1)).as("fresh"))
-        .head()
-      val newCount = chk.getLong(0)
-      converged = newCount == edgeCount && chk.getLong(1) == 0L
-      edges = state
-      edgeCount = newCount
-      onSuperstep(iter, newCount)
     }
+
+    // fixpoint ⇔ the edge SET is unchanged ⇔ no row on one side only
+    val changed = (prev: DataFrame, next: DataFrame) =>
+      next.select(col("src"), col("dst"), lit(true).as("__new"))
+        .join(prev.select(col("src"), col("dst"), lit(true).as("__old")),
+          Seq("src", "dst"), "full_outer")
+        .agg(count(when(col("__new").isNull || col("__old").isNull, 1)).as("changed"))
+    // an empty initial edge set is the fixpoint already: no round runs
+    val end = Supersteps.run(mat, edges, iter, maxIter, step,
+      metric = Some(Supersteps.Aggregate(changed)), m0 = edgeCount.toDouble,
+      stop = _ == 0, onStep = (i, _, c) => onSuperstep(i, c.toLong))
+    val fixpoint = end.state
 
     // fixpoint is a star per component: (child, root) edges, root = min id.
     // Vertices absent from the star (isolated after self-loop drop) label
     // themselves.
-    val starLabels = edges.select(col("src").as("id"), col("dst").as("label"))
-      .unionAll(edges.select(col("dst").as("id"), col("dst").as("label")))
+    val starLabels = fixpoint.select(col("src").as("id"), col("dst").as("label"))
+      .unionAll(fixpoint.select(col("dst").as("id"), col("dst").as("label")))
       .distinct()
     val labels = verts
       .join(starLabels, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    Result(labels, iter)
+    Result(labels, end.iter)
   }
 }

@@ -41,12 +41,16 @@ object Geometric {
           .otherwise(1.0))
       .select("id", "farness", "harmonic", "exponential", "reachable", "closeness", "lin")
 
-  /** Reverse farness: Σ over pivots of d(pivot, v), grouped by TARGET — the
+  /** Reverse farness (id, revFarness: Long): Σ over `sources` (one column
+    * `pivot`, distinct) of d(source, v), grouped by TARGET — the
     * accumulation direction of the sampling estimators
-    * (ChechikEstimator.java:145,162-164, TopCloseness.java:154).
+    * (ChechikEstimator.java:145,162-164, TopCloseness.java:154). The visit's
+    * reverse sum with every divisor 1 adds integer distances, exact in a
+    * double below 2⁵³ in both visit forms, so the Long is exact.
     */
-  def reverseFarness(dist: DataFrame): DataFrame =
-    dist.groupBy(col("id")).agg(sum(col("dist")).cast("long").as("revFarness"))
+  def reverseFarness(v: Visit, sources: DataFrame): DataFrame =
+    v.reverseSum(sources.select(col("pivot"), lit(1.0).as("div")))
+      .select(col("id"), col("value").cast("long").as("revFarness"))
 
   /** T6 mergeAndSort (Sorter.java:55-70,80-89): per-vertex normalized
     * closeness — EXACT (n−1)/farness where a full BFS completed, else the

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *  - schedule initialized by degree sort (degree desc, ties asc id —
   *    Sorter.degreeSort, Sorter.java:18-26);
   *  - each batch takes the next `batchSize` scheduled vertices and runs an
-  *    exact BFS from each (one level-synchronous multi-source BFS here);
+  *    exact BFS from each (one multi-source [[Visit]] here);
   *  - farness[s] accumulates the source's own exact farness
   *    (TopCloseness.java:158), approxFarness[v] accumulates d(s,v) over ALL
   *    processed sources (TopCloseness.java:159);
@@ -58,7 +58,11 @@ object Progressive {
   }
 
   /** Run `numBatches` batches of `batchSize` exact BFS; returns the final
-    * farnessSort frame.
+    * farnessSort frame. Each batch is one [[Visit]] from a
+    * [[Visit.Selector]], so the batch size picks its form: the batch's
+    * farness rows join `farness[s]`, and its reverse farness
+    * ([[Geometric.reverseFarness]]) adds into `approxFarness[v]`. Both
+    * accumulators are checkpointed before the visit is released.
     */
   def run(
       spark: SparkSession,
@@ -69,6 +73,7 @@ object Progressive {
       onSuperstep: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
     val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(true)
     val deg = adjacency.select(col("src").as("id"), col("degree")).distinct()
+    val visits = new Visit.Selector(spark, adjacency, verts.count(), onSuperstep)
 
     var exactF: Option[DataFrame] = None // (id, farness) for processed
     var apxF: Option[DataFrame] = None   // (id, r) accumulated reverse farness
@@ -85,21 +90,21 @@ object Progressive {
             .select(col("id"), coalesce(col("r"), lit(0L)).as("r"))
             .orderBy(asc("r"), asc("id")).limit(batchSize)
             .select(col("id").as("pivot"))
-      val dist = MultiBfs.run(spark, adjacency, pivots, onSuperstep = onSuperstep)
-        .localCheckpoint(true)
-      val bf = dist.groupBy(col("pivot").as("id"))
-        .agg(sum("dist").cast("long").as("farness"))
-      val br = dist.groupBy("id").agg(sum("dist").cast("long").as("r"))
+      val v = visits(pivots, batchSize)
+      val bf = v.farness
+      val br = Geometric.reverseFarness(v, pivots).withColumnRenamed("revFarness", "r")
       exactF = Some(exactF.map(_.unionAll(bf)).getOrElse(bf).localCheckpoint(true))
       apxF = Some(apxF
         .map(p => p.unionAll(br).groupBy("id").agg(sum("r").as("r")))
         .getOrElse(br).localCheckpoint(true))
+      v.release()
       snapshotDir.foreach { dir =>
         farnessSort(verts, exactF.get, apxF.get)
           .select("pos", "id")
           .write.mode("overwrite").json(s"$dir/run=${(b + 1) * batchSize}")
       }
     }
+    visits.release()
 
     farnessSort(verts, exactF.get, apxF.get)
   }

@@ -82,11 +82,11 @@ trait Materializer {
   }
 
   /** Materialize lazily where the strategy allows: the returned frame's
-    * FIRST action completes materialization, so a loop whose convergence
-    * check immediately aggregates the new state (CC changed-count, the
-    * metric job of [[Supersteps.run]]) pays ONE job per superstep, not
-    * checkpoint + check. Default: eager (Dir strategy must write parquet
-    * regardless).
+    * FIRST action completes materialization, so the metric job of
+    * [[Supersteps.run]] — the one caller, which runs every loop (MultiBfs,
+    * BitsetBfs, PageRank, LabelProp, Components) — materializes a chunk of
+    * supersteps and checks them in ONE job, not checkpoint + check.
+    * Default: eager (Dir strategy must write parquet regardless).
     */
   def iterateDeferred(df: DataFrame, iter: Int, metric: Double): DataFrame =
     iterate(df, iter, metric)

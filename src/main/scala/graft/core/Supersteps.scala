@@ -3,8 +3,8 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The superstep driver behind every chained loop (MultiBfs, BitsetBfs,
-  * PageRank, LabelProp): level-synchronous supersteps (SURVEY.md §3.4) run
+/** The superstep driver behind every iterative loop (MultiBfs, BitsetBfs,
+  * PageRank, LabelProp, Components): level-synchronous supersteps (SURVEY.md §3.4) run
   * in CHUNKS of `min(DefaultChain, mat.chainCapacity)`. A chunk's u
   * supersteps are built as lazy checkpoints, each planned over the previous
   * one, and ONE union job materializes them all and returns every substep's
@@ -38,7 +38,7 @@ object Supersteps {
   final case class Count(pred: Column) extends Metric
 
   /** A one-row, one-column aggregate of (previous state, new state) — e.g.
-    * PageRank's L∞ delta. A chunk's job is the union of the u one-row
+    * PageRank's L∞ delta, Components' changed-edge count. A chunk's job is the union of the u one-row
     * aggregates. Checkpoints record −1.
     */
   final case class Aggregate(of: (DataFrame, DataFrame) => DataFrame) extends Metric

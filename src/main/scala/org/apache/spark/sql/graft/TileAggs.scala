@@ -40,14 +40,6 @@ object TileAggs {
 
   /** Read-only view of [[colsFastPathEngaged]] for specs. */
   def colsFastPathWasEngaged: Boolean = colsFastPathEngaged
-  /** `groupBy(chunk).agg(tileOr(pos, masks, mc))` → `array<long>` tile of
-    * 64·mc elements, element pos·mc + j = bitwise OR of masks(j) over rows.
-    */
-  def tileOr(pos: Column, masks: Column, maskCols: Int, chunkSize: Int): Column =
-    ExpressionUtils.column(
-      TileOrAgg(ExpressionUtils.expression(pos), ExpressionUtils.expression(masks),
-        maskCols, chunkSize)
-        .toAggregateExpression())
 
   /** `agg(tileBitCount(tile, mc))` → `array<long>` of 64·mc per-pivot-bit
     * counts, cell j·64 + b = Σ over rows of bit b of tile element pos·mc + j.
@@ -56,15 +48,16 @@ object TileAggs {
     ExpressionUtils.column(
       TileBitCountAgg(ExpressionUtils.expression(tile), maskCols).toAggregateExpression())
 
-  /** [[tileOr]] with the mask columns as DIRECT children (`m0..m{mc-1}`)
-    * read UNBOXED off the input row via their bound ordinals: the per-arc
-    * message projection then materializes no `array(...)` (UnsafeArrayData
-    * header + element copy per arc row) and the update boxes nothing —
-    * a plain `getInt` + maskCols × `getLong`. A boxed-eval variant of the
-    * same shape measured 1–2% SLOWER than the array form (BASELINE.md,
-    * varargs A/B): `masks(j).eval` allocates a `java.lang.Long` per mask
-    * per arc, which outweighs the array it saves. The ordinal fast path is
-    * what makes the column form pay.
+  /** `groupBy(chunk).agg(tileOrCols(pos, m0..m{mc-1}))` → `array<long>`
+    * tile of chunkSize·mc elements, element pos·mc + j = bitwise OR of mask
+    * column j over rows. The mask columns are DIRECT children read UNBOXED
+    * off the input row via their bound ordinals: the per-arc message
+    * projection then materializes no `array(...)` (UnsafeArrayData header +
+    * element copy per arc row) and the update boxes nothing — a plain
+    * `getInt` + maskCols × `getLong`. Measured against an array-child form
+    * of the same aggregate (BASELINE.md): the ordinal reads won 0.5–1.6 %,
+    * a boxed-eval variant lost 1–2 % (`masks(j).eval` allocates a
+    * `java.lang.Long` per mask per arc).
     */
   def tileOrCols(pos: Column, masks: Seq[Column], chunkSize: Int): Column =
     ExpressionUtils.column(
@@ -118,63 +111,11 @@ object TileAggs {
   }
 }
 
-/** OR each (pos, masks) message row into a dense 64·maskCols tile — the
-  * map-side-combining message aggregate whose output volume is bounded by
-  * populated CHUNKS per task, never input rows (see BitsetBfs scaladoc).
-  */
-case class TileOrAgg(
-    pos: Expression,
-    masks: Expression,
-    maskCols: Int,
-    chunkSize: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
-
-  override def children: Seq[Expression] = Seq(pos, masks)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "tile_or"
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](chunkSize * maskCols)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    // fail loudly on null inputs: `null.asInstanceOf[Int]` unboxes to 0 and
-    // would silently OR the row into chunk slot 0 (round-4 advice). Current
-    // callers never produce nulls; this guards future nullable children.
-    val p = pos.eval(input)
-    val a = masks.eval(input)
-    if (p == null || a == null)
-      throw new IllegalStateException("tile_or: null pos/masks input row")
-    val base = p.asInstanceOf[Int] * maskCols
-    val arr = a.asInstanceOf[ArrayData]
-    var j = 0
-    while (j < maskCols) { buf(base + j) |= arr.getLong(j); j += 1 }
-    buf
-  }
-
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < a.length) { a(i) |= b(i); i += 1 }
-    a
-  }
-
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-  override def serialize(buf: Array[Long]): Array[Byte] = TileAggs.toBytes(buf)
-  override def deserialize(bytes: Array[Byte]): Array[Long] =
-    TileAggs.fromBytes(bytes, chunkSize * maskCols)
-
-  override def withNewMutableAggBufferOffset(n: Int): TileOrAgg =
-    copy(mutableAggBufferOffset = n)
-  override def withNewInputAggBufferOffset(n: Int): TileOrAgg =
-    copy(inputAggBufferOffset = n)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): TileOrAgg =
-    copy(pos = newChildren(0), masks = newChildren(1))
-}
-
-/** [[TileOrAgg]] with per-column mask children read unboxed via bound
-  * ordinals — see [[TileAggs.tileOrCols]]. At update time the planner has
+/** OR each (pos, m0..) message row into a dense chunkSize·maskCols tile —
+  * the map-side-combining message aggregate whose output volume is bounded
+  * by populated CHUNKS per task, never input rows (see BitsetBfs scaladoc).
+  * Mask children are read unboxed via bound ordinals — see
+  * [[TileAggs.tileOrCols]]. At update time the planner has
   * bound the children to input ordinals ([[BoundReference]]); the fast path
   * reads primitives straight off the row. Any non-bound child (never the
   * case under ObjectHashAggregateExec, but cheap insurance) falls back to

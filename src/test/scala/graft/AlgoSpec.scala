@@ -81,6 +81,24 @@ class AlgoSpec extends SparkTestBase {
     assert(labels === Seq(0L))
   }
 
+  test("components resumes from DirMaterializer after a maxIter cap: same labels and rounds") {
+    // a 64-vertex path needs several rounds; the ER part adds components
+    val edges = erGraph(40, 0.04, seed = 5) ++ (100L until 163L).map(i => i -> (i + 1))
+    val adj = adjOf(edges)
+    def labels(r: Components.Result) =
+      r.labels.collect().map(x => x.getAs[Long]("id") -> x.getAs[Long]("label")).toMap
+    val fresh = Components.run(spark, adj)
+    assert(fresh.iterations > 2, "want the cap to interrupt the run")
+    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    // phase 1: stop after 2 rounds by capping maxIter
+    assert(Components.run(spark, adj, maxIter = 2, mat = new DirMaterializer(spark, dir))
+      .iterations === 2)
+    // phase 2: a NEW run resumes at round 2 and runs to the fixpoint
+    val resumed = Components.run(spark, adj, mat = new DirMaterializer(spark, dir))
+    assert(resumed.iterations === fresh.iterations)
+    assert(labels(resumed) === labels(fresh))
+  }
+
   test("label propagation matches in-memory oracle (4 synchronous rounds)") {
     val edges = erGraph(50, 0.08, seed = 6)
     val got = LabelProp.run(spark, adjOf(edges), rounds = 4)
@@ -96,6 +114,18 @@ class AlgoSpec extends SparkTestBase {
     def leg(mat: Materializer) = LabelProp.run(spark, adj, rounds = 6, mat = mat)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
     assert(leg(new LocalMaterializer(window = 4)) === leg(new LocalMaterializer(window = 1)))
+  }
+
+  test("label propagation resumes from DirMaterializer: 2 rounds then 4 equals 4 rounds") {
+    val adj = adjOf(erGraph(50, 0.08, seed = 6))
+    def labels(df: DataFrame) =
+      df.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
+    val fresh = labels(LabelProp.run(spark, adj, rounds = 4))
+    val dir = java.nio.file.Files.createTempDirectory("graft_lpa_ckpt").toString
+    LabelProp.run(spark, adj, rounds = 2, mat = new DirMaterializer(spark, dir))
+    val resumed = labels(LabelProp.run(spark, adj, rounds = 4, mat = new DirMaterializer(spark, dir)))
+    assert(resumed === fresh)
+    assert(fresh !== labels(LabelProp.run(spark, adj, rounds = 2)), "want rounds 3-4 to change labels")
   }
 
   test("row-bfs chained supersteps: identical dists and telemetry to the eager loop") {
@@ -118,6 +148,26 @@ class AlgoSpec extends SparkTestBase {
     assert(chainRows === eagerRows)
     assert(chainTel === eagerTel)
     assert(eagerTel.last._2 === 0L)
+  }
+
+  test("row-bfs states sit in their asserted hash(pivot, id) partitions") {
+    // stripState asserts HashPartitioning(pivot, id) on every superstep
+    // state; check the rows against the partition Spark's hash exchange
+    // would pick: pmod(Murmur3 seed 42, P), which SQL `hash` computes
+    val adj = adjOf(erGraph(60, 0.07, seed = 10))
+    val pivots = Seq(0L, 7L, 13L).toDF("pivot")
+    for (p <- Seq(3, 7); supersteps <- 1 to 3) {
+      val state = graft.core.Supersteps.withConfs(spark,
+          "spark.sql.shuffle.partitions" -> p.toString) {
+        MultiBfs.run(spark, adj, pivots, maxIter = supersteps)
+      }
+      assert(state.rdd.getNumPartitions === p)
+      val misplaced = state
+        .where(spark_partition_id() =!= pmod(hash(col("pivot"), col("id")), lit(p)))
+        .count()
+      assert(misplaced === 0L, s"P = $p, supersteps = $supersteps")
+      assert(state.where(col("dist") === supersteps).count() > 0L, s"P = $p, supersteps = $supersteps")
+    }
   }
 
   test("triangles: k4 has 4 global, 3 per vertex; matches oracle on ER") {
@@ -294,14 +344,14 @@ class AlgoSpec extends SparkTestBase {
     val pivots40 = (0L until 40L).toDF("pivot")
     val rows = MultiBfs.run(spark, adj, pivots40)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val bits = BitsetBfs.run(spark, adj, pivots40, maskCols = 1)
+    val bits = BitsetRows(BitsetBfs.visit(spark, adj, pivots40, maskCols = 1))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(bits === rows)
 
     val allPivots = Graph.vertices(edgeDf(edges)).select(col("id").as("pivot"))
     val rowsAll = MultiBfs.run(spark, adj, allPivots)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val bitsAll = BitsetBfs.run(spark, adj, allPivots, maskCols = 2) // n≈82 → waves of 128
+    val bitsAll = BitsetRows(BitsetBfs.visit(spark, adj, allPivots, maskCols = 2)) // n≈82 → waves of 128
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(bitsAll === rowsAll)
   }
@@ -314,7 +364,7 @@ class AlgoSpec extends SparkTestBase {
     val edges = erGraph(60, 0.07, seed = 17)
     val adj = adjOf(edges)
     val pivots = (0L until 8L).toDF("pivot")
-    def dists() = BitsetBfs.run(spark, adj, pivots, maskCols = 1)
+    def dists() = BitsetRows(BitsetBfs.visit(spark, adj, pivots, maskCols = 1))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val small = dists() // default cap: driver-numbered local index
     val prior = BitsetBfs.smallPivotCap
@@ -342,8 +392,8 @@ class AlgoSpec extends SparkTestBase {
     }
     def leg(mat: Materializer) = {
       var tel = Vector.empty[(Int, Long)]
-      val rows = BitsetBfs.run(spark, adj, pivots, maskCols = 1, mat = mat,
-        onSuperstep = (d, c) => tel :+= ((d, c)))
+      val rows = BitsetRows(BitsetBfs.visit(spark, adj, pivots, maskCols = 1, mat = mat,
+        onSuperstep = (d, c) => tel :+= ((d, c))))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       (rows, tel)
     }
@@ -409,7 +459,7 @@ class AlgoSpec extends SparkTestBase {
     val pivots = (0L until 70L).toDF("pivot")
     val viaRows = Geometric.scores(MultiBfs.run(spark, adj, pivots))
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Double]("harmonic")).toMap
-    val viaBits = Geometric.scores(BitsetBfs.run(spark, adj, pivots, maskCols = 1))
+    val viaBits = Geometric.scores(BitsetRows(BitsetBfs.visit(spark, adj, pivots, maskCols = 1)))
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Double]("harmonic")).toMap
     assert(viaRows.keySet === viaBits.keySet)
     viaRows.foreach { case (v, h) => assert(approxEqual(h, viaBits(v)), s"harmonic($v)") }
@@ -438,7 +488,7 @@ class AlgoSpec extends SparkTestBase {
     assert(TileAggs.toBytes(dense).length === 4 + 8 * len)
   }
 
-  test("tileOrCols (unboxed column children) equals tileOr (array child)") {
+  test("tileOrCols (unboxed column children) equals an in-memory OR fold of the rows") {
     import org.apache.spark.sql.graft.TileAggs
     val rnd = new scala.util.Random(11)
     val mc = 3
@@ -450,15 +500,20 @@ class AlgoSpec extends SparkTestBase {
     val df = spark.createDataFrame(rows)
       .toDF("chunk", "pos", "m0", "m1", "m2")
     val ms = Seq("m0", "m1", "m2").map(col)
-    val viaArray = df
-      .groupBy("chunk")
-      .agg(TileAggs.tileOr(col("pos"), array(ms: _*), mc, chunkSize).as("tile"))
     val viaCols = df
       .groupBy("chunk")
       .agg(TileAggs.tileOrCols(col("pos"), ms, chunkSize).as("tile"))
-    val a = viaArray.orderBy("chunk").collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
     val c = viaCols.orderBy("chunk").collect().map(r => (r.getLong(0), r.getSeq[Long](1)))
-    assert(a.toSeq === c.toSeq)
+    // independent reference: fold the collected rows into per-chunk tiles,
+    // element pos·mc + j = OR of mask column j
+    val folded = rows.groupBy(_._1).toSeq.sortBy(_._1).map { case (chunk, rs) =>
+      val tile = new Array[Long](chunkSize * mc)
+      rs.foreach { case (_, pos, m0, m1, m2) =>
+        Seq(m0, m1, m2).zipWithIndex.foreach { case (m, j) => tile(pos * mc + j) |= m }
+      }
+      (chunk, tile.toSeq)
+    }
+    assert(c.toSeq === folded)
     // the unboxed bound-ordinal path must actually engage (local mode shares
     // the JVM) — a silent fallback to interpreted eval would invalidate the
     // form's measured advantage without failing anything

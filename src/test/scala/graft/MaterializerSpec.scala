@@ -1,6 +1,6 @@
 package graft
 
-import graft.algo.{BitsetBfs, Chechik, LabelProp, MultiBfs, PageRank}
+import graft.algo.{BitsetBfs, Chechik, Components, LabelProp, MultiBfs, PageRank}
 import graft.core.{DirMaterializer, LocalMaterializer, Supersteps}
 import org.apache.spark.graft.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -58,6 +58,7 @@ class MaterializerSpec extends SparkTestBase {
     assert(loopJobs(() => LabelProp.run(spark, adj, rounds = 1,
       mat = new DirMaterializer(spark,
         java.nio.file.Files.createTempDirectory("graft_lpa_jobs").toString))) === 5, "LabelProp")
+    assert(loopJobs(() => Components.run(spark, adj)) === 36, "Components")
   }
 
   test("chechik with keep-probabilities < 1: Spark jobs per run pinned") {
@@ -76,7 +77,7 @@ class MaterializerSpec extends SparkTestBase {
     adj.count()
     val pivots = Seq(0L, 29L).toDF("pivot")
     val (err, jobs) = jobsDuring(intercept[IllegalArgumentException] {
-      BitsetBfs.run(spark, adj, pivots, maskCols = 1, mat = new LocalMaterializer(window = 1))
+      BitsetBfs.visit(spark, adj, pivots, maskCols = 1, mat = new LocalMaterializer(window = 1))
     })
     assert(jobs === 0)
     assert(err.getMessage.contains("evicts iterations"), err.getMessage)

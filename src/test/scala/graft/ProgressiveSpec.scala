@@ -1,6 +1,6 @@
 package graft
 
-import graft.algo.{MultiBfs, Progressive}
+import graft.algo.{BitsetBfs, MultiBfs, Progressive, Visit}
 import graft.core.DirMaterializer
 import graft.ingest.{GroundTruth, ResultsMerge}
 import org.apache.spark.sql.functions._
@@ -58,6 +58,32 @@ class ProgressiveSpec extends SparkTestBase {
       assert(f === (if (processed(v)) farness(v) else 0L), s"farness($v)")
       assert(x === apx.getOrElse(v, 0L), s"apx($v)")
     }
+  }
+
+  test("progressive loop on bitset visits matches the reference-semantics replication") {
+    // lowering the selector's threshold sends every batch visit to the
+    // bitset form: its farness and reverse farness (a reverse sum with every
+    // divisor 1) must be the same exact integers as the row form's
+    val prior = Visit.bitsetAbove
+    try {
+      Visit.bitsetAbove = 0L
+      val edges = erGraph(60, 0.06, seed = 21)
+      val adj = adjOf(edges)
+      assert(new Visit.Selector(spark, adj, n = 60)(Seq(0L).toDF("pivot"), 1L)
+        .isInstanceOf[BitsetBfs.Visit])
+      val (farness, apx, order, processed) = oracle(edges, batchSize = 5, numBatches = 3)
+      val got = Progressive.run(spark, adj, batchSize = 5, numBatches = 3)
+        .collect().map(r => (r.getAs[Long]("id"),
+          (r.getAs[Long]("processed"), r.getAs[Long]("farness"),
+           r.getAs[Long]("apx_farness"), r.getAs[Long]("pos")))).toMap
+      order.zipWithIndex.foreach { case (v, i) =>
+        val (p, f, x, pos) = got(v)
+        assert(pos === i.toLong, s"pos($v)")
+        assert(p === (if (processed(v)) 1L else 0L), s"processed($v)")
+        assert(f === (if (processed(v)) farness(v) else 0L), s"farness($v)")
+        assert(x === apx.getOrElse(v, 0L), s"apx($v)")
+      }
+    } finally Visit.bitsetAbove = prior
   }
 
   test("snapshot sink + ResultsMerge reproduce per-batch farnessSort orders") {

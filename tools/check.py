@@ -10,12 +10,23 @@ import sys, os, json, glob
 import duckdb
 import pandas as pd
 
+def default_mem_gb():
+    """About 60 % of the host's memory, clamped to [2, 40] GB. A fixed 40 GB
+    let DuckDB grow past a 15 GB host's RAM and thrash it for an hour."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return 2
+    return max(2, min(40, int(kb * 0.6 / 2**20)))
+
 def load(sf_dir, out_dir):
     con = duckdb.connect()
     # Bound DuckDB so heavy recursive-CTE oracles (g12 at sf0.1 needs >95 GB
     # unbounded — OOM-killed 2026-08-19) spill to disk instead of taking the
     # host down. Override via CHECK_MEM_GB.
-    mem_gb = os.environ.get("CHECK_MEM_GB", "40")
+    mem_gb = os.environ.get("CHECK_MEM_GB") or str(default_mem_gb())
+    print(f"check.py: DuckDB memory_limit {mem_gb} GB", file=sys.stderr)
     con.sql(f"SET memory_limit='{mem_gb}GB'")
     con.sql("SET temp_directory='/tmp/duckdb_spill'")
     for p in glob.glob(f"{sf_dir}/*.parquet"):
