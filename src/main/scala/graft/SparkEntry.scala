@@ -1025,6 +1025,9 @@ FROM files"""),
          |SELECT CAST(run AS BIGINT) AS run, CAST(pos AS BIGINT) AS pos, id
          |FROM (SELECT * FROM snap1 UNION ALL SELECT * FROM snap2) ORDER BY run, pos""".stripMargin,
 
+    // distx is read twice (exact farness and the 16 pivots' rows) and DuckDB
+    // inlines a CTE read twice: MATERIALIZED runs the depth-64 walk once.
+    // Inlined, the oracle ran out of a 9 GB memory limit at sf0.01.
     "g22_precision" ->
       s"""WITH RECURSIVE e0 AS ($E0Sparse), e AS ($Sym),
          |verts AS (SELECT DISTINCT src AS id FROM e),
@@ -1035,7 +1038,7 @@ FROM files"""),
          |  UNION
          |  SELECT walkx.pv, e.dst, walkx.d + 1 FROM walkx JOIN e ON walkx.id = e.src WHERE walkx.d < 64
          |),
-         |distx AS (SELECT pv, id, min(d) AS d FROM walkx GROUP BY pv, id),
+         |distx AS MATERIALIZED (SELECT pv, id, min(d) AS d FROM walkx GROUP BY pv, id),
          |farx AS (SELECT pv AS id, sum(d) AS farness FROM distx GROUP BY pv),
          |exact10 AS (SELECT id FROM farx ORDER BY farness, id LIMIT 10),
          |piv AS (SELECT id FROM deg ORDER BY degree DESC, id LIMIT 16),

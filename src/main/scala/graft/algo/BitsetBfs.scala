@@ -331,6 +331,9 @@ object BitsetBfs {
 
     var incs = Vector.empty[(Int, Int, DataFrame)]
     var statesAcc = Vector.empty[DataFrame]
+    // each wave's iterations follow the previous wave's, so no wave rewrites
+    // a checkpoint (a DirMaterializer's iter=*) that earlier waves still read
+    var base = 0
     for (w <- 0 until nWaves) {
       // init: the pivot's own bit set (newly AND visited) in its chunk's
       // tile, distance 0; all other chunks carry zero tiles (dense state).
@@ -357,21 +360,24 @@ object BitsetBfs {
         .select(col("chunk"), col("ptile").as("ns"), col("ptile").as("vs"))
       // a vertex can be several pivots only across waves, never within (idx
       // distinct). NOTE: state frames carry NO dist column — the superstep d
-      // lives in the `incs` tuples (see superstep scaladoc).
-      val (state0, rows0) = mat.iterateCountedWhere(init0, 0, -1.0, tileNonZero("ns"))
-      val start = strip(state0)
+      // = iteration − base lives in the `incs` tuples (see superstep
+      // scaladoc).
+      val start = strip(mat.iterateDeferred(init0, base, -1.0))
       statesAcc :+= start
       incs :+= ((w, 0, newlyTiles(start)))
       // the loop is Supersteps.run: each chunk's one union-multicount job
       // returns every substep's exact frontier-chunk count, and the visit
       // stops at the first empty frontier
-      Supersteps.run(mat, start, 0, maxIter, superstep(_, inputs.cadj, maskCols),
+      val end = Supersteps.run(mat, start, base, base + maxIter,
+        superstep(_, inputs.cadj, maskCols),
         settle = strip, metric = Some(Supersteps.Count(tileNonZero("ns"))),
-        m0 = rows0.toDouble, stop = _ == 0, onStep = (d, st, c) => {
+        stop = _ == 0, onStep = (i, st, c) => {
+          val d = i - base
           statesAcc :+= st
           if (c > 0) incs :+= ((w, d, newlyTiles(st)))
           onSuperstep(d, c.toLong)
         })
+      base = end.iter + 1
     }
     if (inputs != null && prep == null) inputs.release()
     Visit(idx, ms, incs, statesAcc)

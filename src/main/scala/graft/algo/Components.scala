@@ -37,8 +37,11 @@ import org.apache.spark.sql.expressions.Window
   * duplicate-free) frames, co-partitioned on (src, dst) — which is 0
   * exactly at the fixpoint. One union job per chunk measures every round of
   * the chunk; the loop keeps the first round whose edge set is unchanged,
-  * so labels and the round count equal a chunk length of 1. The probe joins
-  * two checkpointed frames into a scalar, and its stats die with the job.
+  * so labels and the round count equal a chunk length of 1. That one rule
+  * holds for every input: an edge set that is already a fixpoint (e.g.
+  * empty, when every edge is a self loop) still runs and keeps one round,
+  * so `iterations` is 1. The probe joins two checkpointed frames into a
+  * scalar, and its stats die with the job.
   *
   * Known skew note: the per-src window puts deg(u) rows in one task for a
   * hub u; the contraction itself is the mitigation — after one round every
@@ -69,15 +72,7 @@ object Components {
       .where(col("src") > col("dst"))
       .distinct()
 
-    // a fresh run materializes and counts the initial edge state in one job
-    val (iter, edges, edgeCount) = mat.resumeIncrements().lastOption match {
-      case Some((i, st)) =>
-        val e = st.select("src", "dst")
-        (i, e, e.count())
-      case None =>
-        val (e, n) = mat.iterateCounted(init, 0, -1.0)
-        (0, e, n)
-    }
+    val (iter, edges) = Supersteps.start(mat, init)
 
     val wSrc = Window.partitionBy("src")
     def step(edges: DataFrame): DataFrame = {
@@ -103,9 +98,8 @@ object Components {
         .join(prev.select(col("src"), col("dst"), lit(true).as("__old")),
           Seq("src", "dst"), "full_outer")
         .agg(count(when(col("__new").isNull || col("__old").isNull, 1)).as("changed"))
-    // an empty initial edge set is the fixpoint already: no round runs
     val end = Supersteps.run(mat, edges, iter, maxIter, step,
-      metric = Some(Supersteps.Aggregate(changed)), m0 = edgeCount.toDouble,
+      metric = Some(Supersteps.Aggregate(changed)),
       stop = _ == 0, onStep = (i, _, c) => onSuperstep(i, c.toLong))
     val fixpoint = end.state
 

@@ -23,11 +23,9 @@ object LabelProp {
       rounds: Int,
       mat: Materializer = new LocalMaterializer(window = Materializer.DefaultChain)): DataFrame = {
 
-    val (iter, labels) = mat.resumeIncrements().lastOption.getOrElse {
-      val init = adjacency.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("label"))
-      (0, mat.iterate(init, 0, -1.0))
-    }
+    val init = adjacency.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label"))
+    val (iter, labels) = Supersteps.start(mat, init)
 
     // every vertex of the adjacency has ≥1 neighbor (vertex set = its
     // sources, symmetrized), so winners covers ALL vertices and no

@@ -49,7 +49,11 @@ import org.apache.spark.sql.functions._
   *
   * The loop itself is [[graft.core.Supersteps.run]]: chunks of lazily
   * checkpointed supersteps, one job per chunk counting every substep's
-  * frontier, stopping at the first empty one.
+  * frontier, stopping at the first empty one. It starts at
+  * [[graft.core.Supersteps.start]]: iteration 0 (the pivots at dist 0) is
+  * deferred, and the first chunk's job materializes it and counts it as
+  * its starting frontier; an empty source set stops there, with no
+  * superstep reported.
   *
   * The dist=0 row is the source itself (the reference excludes the source
   * from distance sums but counts it as reachable —
@@ -83,22 +87,14 @@ object MultiBfs {
       mat: Materializer = new LocalMaterializer(window = Materializer.DefaultChain),
       onSuperstep: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
 
-    val resumed = mat.resumeIncrements().lastOption
-    val (d, state, frontierRows) = resumed match {
-      case Some((i, st)) =>
-        val s = st.select("pivot", "id", "dist", "isNew")
-        (i, s, s.where(col("isNew")).count())
-      case None =>
-        val init = sources
-          .select(col("pivot").cast("long").as("pivot"))
-          .distinct()
-          .select(col("pivot"), col("pivot").as("id"),
-            lit(0).as("dist"), lit(true).as("isNew"))
-        val (st, n) = mat.iterateCountedWhere(init, 0, -1.0, col("isNew"))
-        (0, st, n)
-    }
+    val init = sources
+      .select(col("pivot").cast("long").as("pivot"))
+      .distinct()
+      .select(col("pivot"), col("pivot").as("id"),
+        lit(0).as("dist"), lit(true).as("isNew"))
 
-    // AQE off while the loop's supersteps plan AND materialize: stripState's
+    // AQE off while the loop's supersteps plan AND materialize (iteration 0
+    // too, so its distinct runs inside the first chunk's job): stripState's
     // asserted hash(pivot, id) placement is exactly what the merge join's
     // static plan produces; an AQE-coalesced or skew-split shuffle would
     // place rows by a partitioning that HashPartitioning cannot describe,
@@ -106,9 +102,10 @@ object MultiBfs {
     // driver materializes every state it keeps, so restoring on exit leaves
     // no lazy superstep to plan under AQE.
     Supersteps.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
+      val (d, state) = Supersteps.start(mat, init)
       Supersteps.run(mat, state, d, maxIter, step(_, adjacency), settle = stripState,
-        metric = Some(Supersteps.Count(col("isNew"))), m0 = frontierRows.toDouble,
-        stop = _ == 0, onStep = (i, _, c) => onSuperstep(i, c.toLong))
+        metric = Some(Supersteps.Count(col("isNew"))), stop = _ == 0,
+        onStep = (i, _, c) => onSuperstep(i, c.toLong))
     }.state.select("pivot", "id", "dist")
   }
 

@@ -37,10 +37,7 @@ object PageRank {
     val n = verts.count()
     val nInv = 1.0 / n
 
-    val resumed = mat.resumeIncrements()
-    val (iter, ranks) = resumed.lastOption.getOrElse {
-      (0, mat.iterate(verts.select(col("id"), lit(nInv).as("pr")), 0, Double.MaxValue))
-    }
+    val (iter, ranks) = Supersteps.start(mat, verts.select(col("id"), lit(nInv).as("pr")))
 
     // STATS DISCIPLINE: localCheckpoint carries originStats into the new
     // LogicalRDD and join sizeInBytes MULTIPLY — a superstep referencing
@@ -70,7 +67,7 @@ object PageRank {
         .agg(max(abs(col("pr") - col("prevPr"))).as("d"))
     val end = Supersteps.run(mat, ranks, iter, maxIter, step,
       metric = if (tol > 0) Some(Supersteps.Aggregate(delta)) else None,
-      m0 = Double.MaxValue, stop = _ <= tol, onStep = (i, _, d) => onSuperstep(i, d))
+      stop = _ <= tol, onStep = (i, _, d) => onSuperstep(i, d))
     Result(end.state, end.iter, end.metric)
   }
 

@@ -17,6 +17,8 @@ import org.apache.spark.sql.functions._
   * reports `(iter, metric)` for every substep up to and including that one,
   * so results and telemetry equal a chunk length of 1. The overshoot
   * substeps after it were computed by the chunk's job and are released.
+  * Every loop starts at [[start]], so no loop counts or eagerly checkpoints
+  * its starting state: the first chunk's job does.
   *
   * A chunk of length 1 (`DirMaterializer`, or `LocalMaterializer` with
   * `window = 1`) is the eager loop: one checkpoint and one metric job per
@@ -33,7 +35,10 @@ object Supersteps {
     * frontier sends no messages, so counts are monotone to zero within a
     * chunk and the overshoot substeps are identity maps. The first substep
     * of a chunk records the previous count, the frontier it stepped from,
-    * in its checkpoint's metadata.
+    * in its checkpoint's metadata — except in a run's first chunk, whose job
+    * counts the starting frontier too, so the count is not known when that
+    * substep is written: a `DirMaterializer`'s iteration 1 (or the first
+    * after a resume) records −1.
     */
   final case class Count(pred: Column) extends Metric
 
@@ -46,18 +51,32 @@ object Supersteps {
   /** Where the loop stopped: the kept state, its iteration, its metric. */
   final case class Result(state: DataFrame, iter: Int, metric: Double)
 
-  /** Run supersteps from `state` (materialized, iteration `iter`) until
-    * `maxIter` or a substep whose metric satisfies `stop`.
+  /** Where a loop starts: the last increment `mat` resumes, projected to
+    * `init`'s columns, or else `init` deferred as iteration 0 — the first
+    * chunk's job of [[run]] materializes it (and, for a [[Count]] loop,
+    * counts its frontier).
+    */
+  def start(mat: Materializer, init: DataFrame): (Int, DataFrame) =
+    mat.resumeIncrements().lastOption match {
+      case Some((i, st)) => (i, st.select(init.columns.toSeq.map(col): _*))
+      case None => (0, mat.iterateDeferred(init, 0, -1.0))
+    }
+
+  /** Run supersteps from `state` (iteration `iter`, e.g. from [[start]])
+    * until `maxIter` or a substep whose metric satisfies `stop`. A [[Count]]
+    * loop's first chunk also counts the frontier of `state` in its job, as
+    * substep k = 0: if that figure satisfies `stop`, the chunk's substeps
+    * are released and `state` is returned at `iter`. `state` never goes
+    * through `settle` (iteration 0 need not have a settled state's
+    * placement). [[Aggregate]] and fixed-round loops start from
+    * `Double.MaxValue`, which is never a stop.
     *
     * @param step   plans the next state over a materialized one
-    * @param settle applied to every checkpointed frame before it becomes the
-    *               state (e.g. a stats strip)
+    * @param settle applied to every checkpointed substep before it becomes
+    *               the state (e.g. a stats strip)
     * @param metric the per-substep figure; None for fixed rounds, whose
     *               chunk is materialized by checkpointing its last substep
-    *               eagerly
-    * @param m0     the figure of `state`: tested by `stop` before the first
-    *               superstep, and reported for every substep when `metric`
-    *               is None
+    *               eagerly, and which report `Double.MaxValue` per substep
     * @param onStep (iter, state, metric) for every kept substep, in order
     */
   def run(
@@ -68,11 +87,12 @@ object Supersteps {
       step: DataFrame => DataFrame,
       settle: DataFrame => DataFrame = identity,
       metric: Option[Metric] = None,
-      m0: Double = -1.0,
       stop: Double => Boolean = _ => false,
       onStep: (Int, DataFrame, Double) => Unit = (_, _, _) => ()): Result = {
     val chunk = math.max(1, math.min(Materializer.DefaultChain, mat.chainCapacity))
-    var cur = Result(state, iter, m0)
+    // true until a Count loop's first chunk has counted the starting frontier
+    var countStart = metric.exists(_.isInstanceOf[Count])
+    var cur = Result(state, iter, Double.MaxValue)
     while (cur.iter < maxIter && !stop(cur.metric)) {
       val u = math.min(chunk, maxIter - cur.iter)
       var built = Vector.empty[DataFrame]
@@ -82,37 +102,43 @@ object Supersteps {
         built :+= settle(metric match {
           // fixed rounds: the last substep's eager checkpoint is the chunk's job
           case None if k == u => mat.iterate(next, i, -1.0)
-          case Some(Count(_)) if k == 1 => mat.iterateDeferred(next, i, cur.metric)
+          case Some(Count(_)) if k == 1 && !countStart => mat.iterateDeferred(next, i, cur.metric)
           case _ => mat.iterateDeferred(next, i, -1.0)
         })
       }
-      val figures = metric.fold(Vector.fill(u)(cur.metric))(measure(_, cur.state, built))
-      val kept = figures.indexWhere(stop) + 1 match { case 0 => u; case n => n }
-      for (k <- 0 until kept) onStep(cur.iter + k + 1, built(k), figures(k))
+      // substep k is states(k) with figure figures(k); k = 0 is the chunk's input
+      val states = cur.state +: built
+      val figures = metric.fold(Vector.fill(u + 1)(cur.metric))(measure(_, states, countStart))
+      // kept = 0 only when the counted start already stops the loop
+      val kept = figures.indexWhere(stop, if (countStart) 0 else 1) match { case -1 => u; case n => n }
+      countStart = false
+      for (k <- 1 to kept) onStep(cur.iter + k, states(k), figures(k))
       built.drop(kept).foreach(Materializer.unpersistCheckpoint(_))
-      cur = Result(built(kept - 1), cur.iter + kept, figures(kept - 1))
+      cur = Result(states(kept), cur.iter + kept, figures(kept))
     }
     cur
   }
 
-  /** The chunk's one job: every substep's figure, in order. */
-  private def measure(metric: Metric, prev: DataFrame, built: Vector[DataFrame]): Vector[Double] = {
+  /** The chunk's one job: the figure of every substep k ≥ 1 of `states`
+    * at index k, and with `withStart` (a [[Count]] only) that of k = 0.
+    */
+  private def measure(metric: Metric, states: Vector[DataFrame], withStart: Boolean): Vector[Double] = {
     val byK = metric match {
       case Count(pred) =>
-        built.zipWithIndex
-          .map { case (st, i) => st.where(pred).select(lit(i + 1).as("k")) }
+        states.indices.drop(if (withStart) 0 else 1)
+          .map(k => states(k).where(pred).select(lit(k).as("k")))
           .reduce(_ unionAll _)
           .groupBy("k").agg(count(lit(1)))
       case Aggregate(of) =>
-        built.zipWithIndex
-          .map { case (st, i) =>
-            val m = of(if (i == 0) prev else built(i - 1), st)
-            m.select(lit(i + 1).as("k"), m.col(m.columns.head))
+        (1 until states.size)
+          .map { k =>
+            val m = of(states(k - 1), states(k))
+            m.select(lit(k).as("k"), m.col(m.columns.head))
           }
           .reduce(_ unionAll _)
     }
     val got = byK.collect().map(r => r.getInt(0) -> r.getAs[Number](1).doubleValue).toMap
-    Vector.tabulate(built.size)(i => got.getOrElse(i + 1, 0.0))
+    Vector.tabulate(states.size)(got.getOrElse(_, 0.0))
   }
 
   /** Run `body` with `confs` set on the session, then restore each key's

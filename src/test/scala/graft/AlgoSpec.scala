@@ -99,6 +99,15 @@ class AlgoSpec extends SparkTestBase {
     assert(labels(resumed) === labels(fresh))
   }
 
+  test("components on a self-loop-only graph: own-id labels, one kept round") {
+    // every edge is a self loop, so the oriented edge set is empty and
+    // already the fixpoint: the first round finds it unchanged and is kept
+    val res = Components.run(spark, adjOf(Seq(0L -> 0L, 1L -> 1L, 2L -> 2L)))
+    val got = res.labels.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
+    assert(got === Map(0L -> 0L, 1L -> 1L, 2L -> 2L))
+    assert(res.iterations === 1)
+  }
+
   test("label propagation matches in-memory oracle (4 synchronous rounds)") {
     val edges = erGraph(50, 0.08, seed = 6)
     val got = LabelProp.run(spark, adjOf(edges), rounds = 4)
@@ -321,6 +330,42 @@ class AlgoSpec extends SparkTestBase {
     }
   }
 
+  test("pagerank resumes from the iteration before a checkpoint without metadata") {
+    // a run cut between the parquet commit and the metadata write leaves its
+    // last iter=* directory without _graft_meta.json: a resumed run must
+    // start from the iteration before it and still equal an uninterrupted run
+    val adj = adjOf(erGraph(50, 0.08, seed = 9))
+    def ranks(r: PageRank.Result) =
+      r.ranks.collect().map(x => x.getAs[Long]("id") -> x.getAs[Double]("pr")).toMap
+    val dirFull = java.nio.file.Files.createTempDirectory("graft_ckpt_full").toString
+    val full = ranks(PageRank.run(spark, adj, maxIter = 8, tol = 0.0,
+      mat = new DirMaterializer(spark, dirFull)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_nometa").toString
+    PageRank.run(spark, adj, maxIter = 3, tol = 0.0, mat = new DirMaterializer(spark, dir))
+    val meta = java.nio.file.Paths.get(f"$dir/iter=${3}%05d/_graft_meta.json")
+    java.nio.file.Files.delete(meta)
+    var steps = Vector.empty[Int]
+    val resumed = PageRank.run(spark, adj, maxIter = 8, tol = 0.0,
+      mat = new DirMaterializer(spark, dir), onSuperstep = (i, _) => steps :+= i)
+    assert(steps === (3 to 8), "resume from iteration 2, the last one with metadata")
+    assert(resumed.iterations === 8)
+    val got = ranks(resumed)
+    full.foreach { case (v, e) =>
+      assert(java.lang.Double.doubleToLongBits(got(v)) === java.lang.Double.doubleToLongBits(e),
+        s"resume not bit-identical at $v")
+    }
+  }
+
+  test("multi-source BFS over an empty source set: no rows, no superstep") {
+    // the first chunk's job counts the empty starting frontier and stops
+    val adj = adjOf(path4)
+    var steps = Vector.empty[(Int, Long)]
+    val rows = MultiBfs.run(spark, adj, Seq.empty[Long].toDF("pivot"),
+      onSuperstep = (d, c) => steps :+= ((d, c))).collect()
+    assert(rows.isEmpty)
+    assert(steps.isEmpty)
+  }
+
   test("multi-source BFS distances match oracle on ER graph") {
     val edges = erGraph(60, 0.07, seed = 10)
     val adj = adjOf(edges)
@@ -354,6 +399,20 @@ class AlgoSpec extends SparkTestBase {
     val bitsAll = BitsetRows(BitsetBfs.visit(spark, adj, allPivots, maskCols = 2)) // n≈82 → waves of 128
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(bitsAll === rowsAll)
+  }
+
+  test("bitset BFS over two waves on a DirMaterializer: same farness as local checkpoints") {
+    // 100 pivots at 64 per wave: wave 1's iterations must not rewrite the
+    // iter=* directories wave 0's increments still read
+    val adj = adjOf(erGraph(200, 0.03, seed = 12))
+    val pivots = (0L until 100L).toDF("pivot")
+    def farness(mat: Materializer) =
+      BitsetBfs.visit(spark, adj, pivots, maskCols = 1, mat = mat).farness
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dir = java.nio.file.Files.createTempDirectory("graft_bitset_dir").toString
+    val local = farness(new LocalMaterializer(window = 0))
+    assert(local.size === 100)
+    assert(farness(new DirMaterializer(spark, dir)) === local)
   }
 
   test("large-P distributed pivot minting ≡ small-P driver fast path") {

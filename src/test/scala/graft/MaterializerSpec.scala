@@ -50,15 +50,15 @@ class MaterializerSpec extends SparkTestBase {
     val adj = adjOf((0L until 29L).map(i => i -> (i + 1)))
     adj.count()
     val pivots = Seq(0L, 29L).toDF("pivot")
-    assert(loopJobs(() => MultiBfs.run(spark, adj, pivots)) === 43, "row BFS")
+    assert(loopJobs(() => MultiBfs.run(spark, adj, pivots)) === 40, "row BFS")
     assert(loopJobs(() => MultiBfs.run(spark, adj, pivots,
-      mat = new LocalMaterializer(window = 1))) === 63, "row BFS, window = 1")
-    assert(loopJobs(() => BitsetBfs.visit(spark, adj, pivots, maskCols = 1)) === 13, "bitset BFS")
-    assert(loopJobs(() => PageRank.run(spark, adj, maxIter = 2, tol = 1e-6)) === 15, "PageRank")
+      mat = new LocalMaterializer(window = 1))) === 60, "row BFS, window = 1")
+    assert(loopJobs(() => BitsetBfs.visit(spark, adj, pivots, maskCols = 1)) === 12, "bitset BFS")
+    assert(loopJobs(() => PageRank.run(spark, adj, maxIter = 2, tol = 1e-6)) === 14, "PageRank")
     assert(loopJobs(() => LabelProp.run(spark, adj, rounds = 1,
       mat = new DirMaterializer(spark,
         java.nio.file.Files.createTempDirectory("graft_lpa_jobs").toString))) === 5, "LabelProp")
-    assert(loopJobs(() => Components.run(spark, adj)) === 36, "Components")
+    assert(loopJobs(() => Components.run(spark, adj)) === 34, "Components")
   }
 
   test("chechik with keep-probabilities < 1: Spark jobs per run pinned") {
@@ -68,7 +68,7 @@ class MaterializerSpec extends SparkTestBase {
     adj.count()
     val jobs = loopJobs(() =>
       Chechik.topkCloseness(spark, adj, k = 5, eps = 0.5, batchSize = 5)._1.collect())
-    assert(jobs === 254)
+    assert(jobs === 219)
   }
 
   test("BitsetBfs.visit refuses an evicting materializer before any Spark job") {

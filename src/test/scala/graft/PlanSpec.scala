@@ -111,8 +111,8 @@ class PlanSpec extends SparkTestBase {
         lit(0).as("dist"), lit(true).as("isNew"))
       .localCheckpoint(true)
     val mat = new graft.core.LocalMaterializer(window = 0)
-    val (st1raw, n1) = mat.iterateCountedWhere(
-      graft.algo.MultiBfs.step(init, adj), 1, -1.0, col("isNew"))
+    val st1raw = mat.iterateDeferred(graft.algo.MultiBfs.step(init, adj), 1, -1.0)
+    val n1 = st1raw.where(col("isNew")).count()
     assert(n1 == 2L) // 4-cycle: superstep 1 from 0 discovers 1 and 3
     val st1 = graft.algo.MultiBfs.stripState(st1raw)
     val next = graft.algo.MultiBfs.step(st1, adj)
