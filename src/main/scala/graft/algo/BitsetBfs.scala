@@ -3,6 +3,7 @@ package graft.algo
 import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointStats.bind
 
 /** Bitset multi-source BFS — the scale path for many-pivot visits.
   *
@@ -247,15 +248,12 @@ object BitsetBfs {
     * The Visit's increments read the superstep states after the loop, so a
     * materializer that evicts iterations is refused before any Spark job.
     *
-    * Three session confs the tile loop NEEDS while its supersteps plan and
-    * run are pinned for the visit and restored on exit
-    * ([[graft.core.Supersteps.withConfs]]; a permanent mutation silently
-    * changed spill/co-partition behavior of unrelated queries on the shared
-    * session). Restoring at the end is safe: every superstep plan is
-    * materialized inside the loop, and the Visit's lazy increment
-    * projections are plain scans + aggregates over checkpointed frames —
-    * none of the confs affects them.
-    *  - adaptive execution off: as in [[MultiBfs.run]], the loop's plans are
+    * The visit runs on its own session ([[graft.core.Supersteps.session]])
+    * with the three confs below; its pivots, adjacency and `prep` are bound
+    * there. The caller's session is never written to, and the Visit's
+    * frames are bound back to it, so its lazy aggregates (plain scans and
+    * aggregates over checkpointed frames) plan under the caller's confs.
+    *  - adaptive execution off (every loop's session): the loop's plans are
     *    the static ones PlanSpec asserts, and AQE would submit each query
     *    stage of a chunk as its own Spark job.
     *  - fallbackThreshold: the tile aggregate's map-side hash map
@@ -278,13 +276,13 @@ object BitsetBfs {
       maxIter: Int = 256,
       mat: Materializer = new LocalMaterializer(window = 0),
       onSuperstep: (Int, Long) => Unit = (_, _) => (),
-      prep: Prep = null): Visit = Supersteps.withConfs(spark,
-    "spark.sql.adaptive.enabled" -> "false",
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> (1 << 22).toString,
-    "spark.sql.requireAllClusterKeysForCoPartition" -> "false") {
+      prep: Prep = null): Visit = {
     require(!mat.evictsIterations,
       "BitsetBfs.visit reads every superstep state after its loop; a materializer " +
         "that evicts iterations (LocalMaterializer with window > 0) would free them")
+    val sess = Supersteps.session(spark,
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> (1 << 22).toString,
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
 
     val waveBits = 64L * maskCols
     val ms = (0 until maskCols).map(j => s"m$j")
@@ -299,12 +297,11 @@ object BitsetBfs {
     //    legs can't parallelize away.
     //  - large-P path: distributed range minting — the Chechik sample at
     //    web scale is K·E[λ] ≈ ln(n)/ε² · E[λ] · n rows, too big to collect.
-    val distinctPivots = pivots.select(col("pivot").cast("long").as("pivot")).distinct()
+    val distinctPivots = bind(pivots, sess).select(col("pivot").cast("long").as("pivot")).distinct()
     val collected = distinctPivots.limit(smallPivotCap + 1).collect()
     val (idx, nWaves) =
       if (collected.length <= smallPivotCap) {
         val ids = collected.map(_.getLong(0)).sorted
-        val sess = spark
         import sess.implicits._
         val local = ids.toSeq.zipWithIndex.map { case (p, i) =>
           (p, i.toLong, (i / waveBits).toInt, ((i % waveBits) / 64).toInt, (i % 64).toInt)
@@ -326,8 +323,8 @@ object BitsetBfs {
 
     val inputs =
       if (nWaves == 0) null
-      else if (prep != null) prep
-      else prepare(adjacency)
+      else if (prep != null) Prep(bind(prep.cadj, sess), bind(prep.chunks, sess))
+      else prepare(bind(adjacency, sess))
 
     var incs = Vector.empty[(Int, Int, DataFrame)]
     var statesAcc = Vector.empty[DataFrame]
@@ -362,7 +359,7 @@ object BitsetBfs {
       // distinct). NOTE: state frames carry NO dist column — the superstep d
       // = iteration − base lives in the `incs` tuples (see superstep
       // scaladoc).
-      val start = strip(mat.iterateDeferred(init0, base, -1.0))
+      val start = strip(bind(mat.iterateDeferred(init0, base, -1.0), sess))
       statesAcc :+= start
       incs :+= ((w, 0, newlyTiles(start)))
       // the loop is Supersteps.run: each chunk's one union-multicount job
@@ -380,7 +377,7 @@ object BitsetBfs {
       base = end.iter + 1
     }
     if (inputs != null && prep == null) inputs.release()
-    Visit(idx, ms, incs, statesAcc)
+    Visit(bind(idx, spark), ms, incs.map { case (w, d, inc) => (w, d, bind(inc, spark)) }, statesAcc)
   }
 
   /** Per-pivot harmonic centrality Σ_v 1/d(pivot,v) WITHOUT materializing the

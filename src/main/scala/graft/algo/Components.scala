@@ -3,6 +3,7 @@ package graft.algo
 import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointStats.bind
 import org.apache.spark.sql.expressions.Window
 
 /** Connected components by alternating large-star / small-star contraction
@@ -112,6 +113,6 @@ object Components {
     val labels = verts
       .join(starLabels, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    Result(labels, end.iter)
+    Result(bind(labels, spark), end.iter)
   }
 }

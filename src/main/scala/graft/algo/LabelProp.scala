@@ -3,6 +3,7 @@ package graft.algo
 import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointStats.bind
 
 /** Synchronous label propagation (community detection; north rule,
   * SURVEY.md §2.12 G3). Deterministic by construction:
@@ -49,7 +50,7 @@ object LabelProp {
     // Rounds are FIXED (no per-round metric): Supersteps.run builds each
     // chunk's rounds as lazy checkpoints and checkpoints its last round
     // eagerly, one job per chunk.
-    Supersteps.run(mat, labels, iter, rounds, step).state
+    bind(Supersteps.run(mat, labels, iter, rounds, step).state, spark)
   }
 
   /** DuckDB oracle: the same synchronous rounds unrolled in SQL. */

@@ -3,6 +3,7 @@ package graft.algo
 import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointStats.bind
 
 /** Level-synchronous multi-source BFS.
   *
@@ -36,8 +37,8 @@ import org.apache.spark.sql.functions._
   * to either input, so the checkpoint records UnknownPartitioning even
   * though every row physically sits in its hash(pivot, id) partition —
   * [[org.apache.spark.sql.graft.CheckpointStats.stripHashPartitioned]]
-  * restores the truth, and the loop pins AQE off for its duration
-  * ([[graft.core.Supersteps.withConfs]]) so no runtime coalesce/skew rewrite
+  * restores the truth, and the loop's session has AQE off
+  * ([[graft.core.Supersteps.session]]) so no runtime coalesce/skew rewrite
   * can invalidate the assertion. The pre-round-6
   * shape (state ∪ messages → one big groupBy) re-shuffled AND re-aggregated
   * |V| + Σ deg rows every superstep: at a 1266-pivot Chechik sample visit
@@ -75,9 +76,6 @@ object MultiBfs {
     *                   persisted by the caller (reused every superstep).
     * @param sources    one column `pivot: Long`.
     * @return Dist(pivot, id, dist) for every vertex reachable from each pivot.
-    *
-    * The AQE capture/restore around the loop assumes one driver thread: no
-    * concurrent runs (or other queries) on a shared session.
     */
   def run(
       spark: SparkSession,
@@ -93,20 +91,13 @@ object MultiBfs {
       .select(col("pivot"), col("pivot").as("id"),
         lit(0).as("dist"), lit(true).as("isNew"))
 
-    // AQE off while the loop's supersteps plan AND materialize (iteration 0
-    // too, so its distinct runs inside the first chunk's job): stripState's
-    // asserted hash(pivot, id) placement is exactly what the merge join's
-    // static plan produces; an AQE-coalesced or skew-split shuffle would
-    // place rows by a partitioning that HashPartitioning cannot describe,
-    // and the assertion would silently misjoin the next superstep. The
-    // driver materializes every state it keeps, so restoring on exit leaves
-    // no lazy superstep to plan under AQE.
-    Supersteps.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
-      val (d, state) = Supersteps.start(mat, init)
-      Supersteps.run(mat, state, d, maxIter, step(_, adjacency), settle = stripState,
-        metric = Some(Supersteps.Count(col("isNew"))), stop = _ == 0,
-        onStep = (i, _, c) => onSuperstep(i, c.toLong))
-    }.state.select("pivot", "id", "dist")
+    // the loop's session has AQE off (iteration 0's distinct runs inside the
+    // first chunk's job): stripState asserts the static plan's placement
+    val (d, state) = Supersteps.start(mat, init)
+    val end = Supersteps.run(mat, state, d, maxIter, step(_, adjacency), settle = stripState,
+      metric = Some(Supersteps.Count(col("isNew"))), stop = _ == 0,
+      onStep = (i, _, c) => onSuperstep(i, c.toLong))
+    bind(end.state.select("pivot", "id", "dist"), spark)
   }
 
   /** [[run]] as a [[graft.algo.Visit]]: its aggregates group the

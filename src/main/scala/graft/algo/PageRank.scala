@@ -3,6 +3,7 @@ package graft.algo
 import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointStats.bind
 
 /** PageRank as iterative Dataset joins (north rule; no reference counterpart
   * — SURVEY.md §2.12 G3).
@@ -68,7 +69,7 @@ object PageRank {
     val end = Supersteps.run(mat, ranks, iter, maxIter, step,
       metric = if (tol > 0) Some(Supersteps.Aggregate(delta)) else None,
       stop = _ <= tol, onStep = (i, _, d) => onSuperstep(i, d))
-    Result(end.state, end.iter, end.metric)
+    Result(bind(end.state, spark), end.iter, end.metric)
   }
 
   /** DuckDB oracle: the identical recurrence unrolled as plain SQL CTEs

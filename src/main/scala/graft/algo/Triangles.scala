@@ -39,33 +39,30 @@ object Triangles {
           col("dst")).otherwise(col("src")).as("hi"))
   }
 
-  /** Global triangle count (one row, column `triangles`). */
-  def globalCount(spark: SparkSession, canonEdges: DataFrame): DataFrame = {
+  /** Every triangle once, as (a, b, c): wedges a→b, a→c (b < c, which also
+    * dedups the unordered wedge pair) centered at the LOW endpoint a of the
+    * oriented edges, closed by an oriented edge between b and c.
+    */
+  private def triangles(canonEdges: DataFrame): DataFrame = {
     val o = orient(canonEdges).localCheckpoint(true)
-    val w1 = o.select(col("lo").as("a"), col("hi").as("b"))
-    val w2 = o.select(col("lo").as("a"), col("hi").as("c"))
-    // wedges centered at the LOW endpoint (b != c avoided via b < c which
-    // also dedups the unordered wedge pair), closed by an oriented edge b→c
-    val wedges = w1.join(w2, "a").where(col("b") < col("c"))
+    val wedges = o.select(col("lo").as("a"), col("hi").as("b"))
+      .join(o.select(col("lo").as("a"), col("hi").as("c")), "a")
+      .where(col("b") < col("c"))
     val closing = o.select(col("lo").as("b"), col("hi").as("c"))
       .unionAll(o.select(col("hi").as("b"), col("lo").as("c")))
     wedges.join(closing, Seq("b", "c"))
-      .agg(count(lit(1)).as("triangles"))
   }
+
+  /** Global triangle count (one row, column `triangles`). */
+  def globalCount(spark: SparkSession, canonEdges: DataFrame): DataFrame =
+    triangles(canonEdges).agg(count(lit(1)).as("triangles"))
 
   /** Per-vertex triangle counts (id, triangles); vertices in no triangle are
     * absent (join with the vertex set for zero-filled output).
     */
-  def perVertex(spark: SparkSession, canonEdges: DataFrame): DataFrame = {
-    val o = orient(canonEdges).localCheckpoint(true)
-    val w1 = o.select(col("lo").as("a"), col("hi").as("b"))
-    val w2 = o.select(col("lo").as("a"), col("hi").as("c"))
-    val wedges = w1.join(w2, "a").where(col("b") < col("c"))
-    val closing = o.select(col("lo").as("b"), col("hi").as("c"))
-      .unionAll(o.select(col("hi").as("b"), col("lo").as("c")))
-    val tris = wedges.join(closing, Seq("b", "c"))
-    tris.select(explode(array(col("a"), col("b"), col("c"))).as("id"))
+  def perVertex(spark: SparkSession, canonEdges: DataFrame): DataFrame =
+    triangles(canonEdges)
+      .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
       .groupBy("id")
       .agg(count(lit(1)).as("triangles"))
-  }
 }

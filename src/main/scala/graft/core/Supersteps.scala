@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointStats.{bind, cloneSession}
 
 /** The superstep driver behind every iterative loop (MultiBfs, BitsetBfs,
   * PageRank, LabelProp, Components): level-synchronous supersteps (SURVEY.md §3.4) run
@@ -19,6 +20,12 @@ import org.apache.spark.sql.functions._
   * substeps after it were computed by the chunk's job and are released.
   * Every loop starts at [[start]], so no loop counts or eagerly checkpoints
   * its starting state: the first chunk's job does.
+  *
+  * Every loop runs on its own [[session]], a clone of the caller's with AQE
+  * off: a chunk is then one job (AQE would submit each query stage as its
+  * own), and MultiBfs's asserted state placement is the static plan's. The
+  * caller's session is never written to, and each loop hands its result
+  * back bound to it.
   *
   * A chunk of length 1 (`DirMaterializer`, or `LocalMaterializer` with
   * `window = 1`) is the eager loop: one checkpoint and one metric job per
@@ -51,16 +58,28 @@ object Supersteps {
   /** Where the loop stopped: the kept state, its iteration, its metric. */
   final case class Result(state: DataFrame, iter: Int, metric: Double)
 
-  /** Where a loop starts: the last increment `mat` resumes, projected to
-    * `init`'s columns, or else `init` deferred as iteration 0 — the first
-    * chunk's job of [[run]] materializes it (and, for a [[Count]] loop,
-    * counts its frontier).
+  /** A clone of `spark` (same SparkContext and CacheManager, every conf
+    * copied) with AQE off and `confs` set: the loop's own session.
     */
-  def start(mat: Materializer, init: DataFrame): (Int, DataFrame) =
-    mat.resumeIncrements().lastOption match {
+  def session(spark: SparkSession, confs: (String, String)*): SparkSession = {
+    val s = cloneSession(spark)
+    (("spark.sql.adaptive.enabled" -> "false") +: confs).foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** Where a loop starts, bound to a new [[session]] of `init`'s: the last
+    * increment `mat` resumes, projected to `init`'s columns, or else `init`
+    * deferred as iteration 0 — the first chunk's job of [[run]]
+    * materializes it (and, for a [[Count]] loop, counts its frontier).
+    */
+  def start(mat: Materializer, init: DataFrame): (Int, DataFrame) = {
+    val s = session(init.sparkSession)
+    val (i, st) = mat.resumeIncrements().lastOption match {
       case Some((i, st)) => (i, st.select(init.columns.toSeq.map(col): _*))
-      case None => (0, mat.iterateDeferred(init, 0, -1.0))
+      case None => (0, mat.iterateDeferred(bind(init, s), 0, -1.0))
     }
+    (i, bind(st, s))
+  }
 
   /** Run supersteps from `state` (iteration `iter`, e.g. from [[start]])
     * until `maxIter` or a substep whose metric satisfies `stop`. A [[Count]]
@@ -70,6 +89,10 @@ object Supersteps {
     * through `settle` (iteration 0 need not have a settled state's
     * placement). [[Aggregate]] and fixed-round loops start from
     * `Double.MaxValue`, which is never a stop.
+    *
+    * Every substep is planned on `state`'s session, the loop's [[session]]:
+    * each `step` output, and each frame `mat` hands back (a
+    * `DirMaterializer` reads back through its own session), is bound to it.
     *
     * @param step   plans the next state over a materialized one
     * @param settle applied to every checkpointed substep before it becomes
@@ -90,6 +113,7 @@ object Supersteps {
       stop: Double => Boolean = _ => false,
       onStep: (Int, DataFrame, Double) => Unit = (_, _, _) => ()): Result = {
     val chunk = math.max(1, math.min(Materializer.DefaultChain, mat.chainCapacity))
+    val s = state.sparkSession
     // true until a Count loop's first chunk has counted the starting frontier
     var countStart = metric.exists(_.isInstanceOf[Count])
     var cur = Result(state, iter, Double.MaxValue)
@@ -97,14 +121,14 @@ object Supersteps {
       val u = math.min(chunk, maxIter - cur.iter)
       var built = Vector.empty[DataFrame]
       for (k <- 1 to u) {
-        val next = step(built.lastOption.getOrElse(cur.state))
+        val next = bind(step(built.lastOption.getOrElse(cur.state)), s)
         val i = cur.iter + k
-        built :+= settle(metric match {
+        built :+= settle(bind(metric match {
           // fixed rounds: the last substep's eager checkpoint is the chunk's job
           case None if k == u => mat.iterate(next, i, -1.0)
           case Some(Count(_)) if k == 1 && !countStart => mat.iterateDeferred(next, i, cur.metric)
           case _ => mat.iterateDeferred(next, i, -1.0)
-        })
+        }, s))
       }
       // substep k is states(k) with figure figures(k); k = 0 is the chunk's input
       val states = cur.state +: built
@@ -139,17 +163,5 @@ object Supersteps {
     }
     val got = byK.collect().map(r => r.getInt(0) -> r.getAs[Number](1).doubleValue).toMap
     Vector.tabulate(states.size)(got.getOrElse(_, 0.0))
-  }
-
-  /** Run `body` with `confs` set on the session, then restore each key's
-    * prior value, or unset a key that had none, also when `body` throws.
-    * Assumes one driver thread: concurrent queries on the same session see
-    * the pinned values while `body` runs.
-    */
-  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
-    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 }

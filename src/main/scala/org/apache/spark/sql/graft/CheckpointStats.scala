@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -35,6 +36,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * unknown sizes) — loop joins over stripped state must say
   * `.hint("shuffle_hash")` explicitly. Explicit `broadcast(...)` hints are
   * unaffected.
+  *
+  * [[cloneSession]] and [[bind]] (`private[sql]` `cloneSession` and
+  * `Dataset.ofRows`) are the session shims behind
+  * `graft.core.Supersteps.session`: every superstep loop runs on its own
+  * clone of the caller's session.
   */
 object CheckpointStats {
 
@@ -43,20 +49,7 @@ object CheckpointStats {
     * not a bare `LogicalRDD` (e.g. a `DirMaterializer` parquet round-trip,
     * whose scan stats are real file sizes and reset naturally).
     */
-  def strip(df: DataFrame): DataFrame = df.queryExecution.logical match {
-    case lr: LogicalRDD =>
-      val spark = df.sparkSession.asInstanceOf[ClassicSession]
-      Dataset.ofRows(
-        spark,
-        LogicalRDD(
-          lr.output,
-          lr.rdd,
-          lr.outputPartitioning,
-          lr.outputOrdering,
-          lr.isStreaming,
-          lr.stream)(spark, None, None))
-    case _ => df
-  }
+  def strip(df: DataFrame): DataFrame = rebuild(df, None)
 
   /** [[strip]], additionally ASSERTING that the checkpointed rows are
     * hash-partitioned by `keys` with the RDD's own partition count.
@@ -71,34 +64,50 @@ object CheckpointStats {
     * (projected) output of a co-partitioned join/aggregate keyed on `keys`,
     * planned with AQE off (coalesced or skew-split partitions are NOT a
     * `HashPartitioning` — asserting one over them would silently misjoin).
-    * Used by the MultiBfs superstep loop, which pins AQE off for its
-    * duration. No-op for plans that are not a bare `LogicalRDD`.
+    * Used by the MultiBfs superstep loop, whose session has AQE off
+    * (`graft.core.Supersteps.session`). No-op for plans that are not a bare
+    * `LogicalRDD`.
     *
-    * @throws IllegalStateException if `spark.sql.adaptive.enabled` is true
-    *         at call time — the misuse that would otherwise misjoin silently.
+    * @throws IllegalStateException if AQE is on for the frame's session —
+    *         the misuse that would otherwise misjoin silently.
     */
   def stripHashPartitioned(df: DataFrame, keys: Seq[String]): DataFrame = {
     if (df.sparkSession.asInstanceOf[ClassicSession].sessionState.conf.adaptiveExecutionEnabled)
       throw new IllegalStateException(
         "stripHashPartitioned: spark.sql.adaptive.enabled is true; the asserted " +
           "hash partitioning is only valid for frames planned with AQE off")
+    rebuild(df, Some(keys))
+  }
+
+  /** The one `LogicalRDD` rebuild: no origin stats or constraints, and the
+    * RDD's own partitioning, or hash(`keys`) over its partition count.
+    */
+  private def rebuild(df: DataFrame, keys: Option[Seq[String]]): DataFrame =
     df.queryExecution.logical match {
       case lr: LogicalRDD =>
         val spark = df.sparkSession.asInstanceOf[ClassicSession]
-        val attrs = keys.map(k => lr.output.find(_.name == k).getOrElse(
-          throw new IllegalArgumentException(
-            s"stripHashPartitioned: no column '$k' in ${lr.output.map(_.name)}")))
-        Dataset.ofRows(
-          spark,
-          LogicalRDD(
-            lr.output,
-            lr.rdd,
-            org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(
-              attrs, lr.rdd.getNumPartitions),
-            lr.outputOrdering,
-            lr.isStreaming,
-            lr.stream)(spark, None, None))
+        val partitioning = keys.fold(lr.outputPartitioning) { ks =>
+          HashPartitioning(ks.map(k => lr.output.find(_.name == k).getOrElse(
+            throw new IllegalArgumentException(
+              s"stripHashPartitioned: no column '$k' in ${lr.output.map(_.name)}"))),
+            lr.rdd.getNumPartitions)
+        }
+        Dataset.ofRows(spark, LogicalRDD(lr.output, lr.rdd, partitioning,
+          lr.outputOrdering, lr.isStreaming, lr.stream)(spark, None, None))
       case _ => df
     }
-  }
+
+  /** A new session over `spark`'s SparkContext and shared state (so its
+    * CacheManager too) that starts with a copy of every conf of `spark`:
+    * a conf set on one never reaches the other.
+    */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[ClassicSession].cloneSession()
+
+  /** `df`'s analyzed plan as a frame of `spark`: later operators on it are
+    * planned, and its actions run, under `spark`'s confs.
+    */
+  def bind(df: DataFrame, spark: SparkSession): DataFrame =
+    if (df.sparkSession eq spark) df
+    else Dataset.ofRows(spark.asInstanceOf[ClassicSession], df.queryExecution.analyzed)
 }

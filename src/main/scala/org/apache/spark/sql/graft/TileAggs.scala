@@ -29,18 +29,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * ApproximatePercentile/HyperLogLogPlusPlus.
   */
 object TileAggs {
-  /** Set when a [[TileOrColsAgg]] resolves its bound-ordinal fast path
-    * (written once per task at first update, not per row) — local-mode
-    * spec insurance that the unboxed path actually engages; if a Spark
-    * upgrade stops handing the aggregate BoundReference children, the
-    * equivalence spec fails loudly instead of the perf silently regressing
-    * to interpreted eval.
-    */
-  @volatile private[sql] var colsFastPathEngaged: Boolean = false
-
-  /** Read-only view of [[colsFastPathEngaged]] for specs. */
-  def colsFastPathWasEngaged: Boolean = colsFastPathEngaged
-
   /** `agg(tileBitCount(tile, mc))` → `array<long>` of 64·mc per-pivot-bit
     * counts, cell j·64 + b = Σ over rows of bit b of tile element pos·mc + j.
     */
@@ -116,10 +104,10 @@ object TileAggs {
   * by populated CHUNKS per task, never input rows (see BitsetBfs scaladoc).
   * Mask children are read unboxed via bound ordinals — see
   * [[TileAggs.tileOrCols]]. At update time the planner has
-  * bound the children to input ordinals ([[BoundReference]]); the fast path
-  * reads primitives straight off the row. Any non-bound child (never the
-  * case under ObjectHashAggregateExec, but cheap insurance) falls back to
-  * boxed eval with identical semantics.
+  * bound the children to input ordinals ([[BoundReference]]), and `update`
+  * reads primitives straight off the row; a child that is not bound (never
+  * the case under ObjectHashAggregateExec) is refused with
+  * `IllegalStateException`.
   */
 case class TileOrColsAgg(
     pos: Expression,
@@ -137,44 +125,25 @@ case class TileOrColsAgg(
 
   // Resolved on the executor at first update, AFTER binding (the bound copy
   // is produced by withNewChildrenInternal post-deserialization).
-  @transient private lazy val boundOrds: Array[Int] = {
-    val all = pos +: masks
-    val ords =
-      if (all.forall(_.isInstanceOf[BoundReference]))
-        all.map(_.asInstanceOf[BoundReference].ordinal).toArray
-      else null
-    if (ords != null) TileAggs.colsFastPathEngaged = true
-    ords
-  }
+  @transient private lazy val boundOrds: Array[Int] = (pos +: masks).map {
+    case b: BoundReference => b.ordinal
+    case e =>
+      throw new IllegalStateException(s"tile_or_cols: child $e is not bound to an input ordinal")
+  }.toArray
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](chunkSize * maskCols)
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val ords = boundOrds
-    if (ords != null) {
-      // null guard: one bitmap-word test per row (~1 cycle vs the DRAM RMW
-      // below) — a null pos would otherwise unbox to 0 and silently corrupt
-      // chunk slot 0 (round-4 advice). Fields other than (pos, masks) in the
-      // agg input row (the chunk key) are never null in any caller.
-      if (input.anyNull)
-        throw new IllegalStateException("tile_or_cols: null input field")
-      val base = input.getInt(ords(0)) * maskCols
-      var j = 0
-      while (j < maskCols) { buf(base + j) |= input.getLong(ords(j + 1)); j += 1 }
-    } else {
-      val p = pos.eval(input)
-      if (p == null)
-        throw new IllegalStateException("tile_or_cols: null pos input")
-      val base = p.asInstanceOf[Int] * maskCols
-      var j = 0
-      while (j < maskCols) {
-        val m = masks(j).eval(input)
-        if (m == null)
-          throw new IllegalStateException("tile_or_cols: null mask input")
-        buf(base + j) |= m.asInstanceOf[Long]
-        j += 1
-      }
-    }
+    // null guard: one bitmap-word test per row (~1 cycle vs the DRAM RMW
+    // below) — a null pos would otherwise unbox to 0 and silently corrupt
+    // chunk slot 0 (round-4 advice). Fields other than (pos, masks) in the
+    // agg input row (the chunk key) are never null in any caller.
+    if (input.anyNull)
+      throw new IllegalStateException("tile_or_cols: null input field")
+    val base = input.getInt(ords(0)) * maskCols
+    var j = 0
+    while (j < maskCols) { buf(base + j) |= input.getLong(ords(j + 1)); j += 1 }
     buf
   }
 

@@ -5,6 +5,12 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name>/ parquet (Spark result), runs the matching
 oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB with the sfDir
 tables registered by name, sorts columns by name + rows, and diffs.
+
+Every oracle query with no Spark output is reported MISSING and fails the
+check: graft.Verify logs a query that throws and writes nothing for it.
+SPARK_GRAFT_VERIFY_ONLY=g4,g6,... restricts the expected queries with
+Verify's own rule (name == prefix, or name starts with prefix + "_"). A
+query with no oracle (g18) is not covered by this check.
 """
 import sys, os, json, glob
 import duckdb
@@ -36,6 +42,14 @@ def load(sf_dir, out_dir):
         oracles = json.load(f)
     return con, oracles
 
+def selected(name):
+    """Verify's SPARK_GRAFT_VERIFY_ONLY prefix rule; unset = every query."""
+    only = os.environ.get("SPARK_GRAFT_VERIFY_ONLY")
+    if only is None:
+        return True
+    prefixes = [p.strip() for p in only.split(",") if p.strip()]
+    return any(name == p or name.startswith(p + "_") for p in prefixes)
+
 def canon(df):
     df = df[sorted(df.columns)]
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
@@ -45,6 +59,12 @@ def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con, oracles = load(sf_dir, out_dir)
     fails = 0
+    # oracle_sql.json lists each query twice: bare and with ".parquet"
+    expected = {n for n in oracles if not n.endswith(".parquet") and selected(n)}
+    for name in sorted(expected):
+        if not os.path.isdir(f"{out_dir}/{name}.parquet"):
+            print(f"{name:28s} MISSING: no Spark output (the query failed or was not run)")
+            fails += 1
     for d in sorted(glob.glob(f"{out_dir}/*/")):
         name = os.path.basename(d.rstrip("/"))
         if name.endswith(".parquet"):
