@@ -245,8 +245,9 @@ object BitsetBfs {
     * @param prep      chunk-keyed inputs from [[prepare]], reusable across
     *                  visits over the same graph; null → built per visit.
     *
-    * The Visit's increments read the superstep states after the loop, so a
-    * materializer that evicts iterations is refused before any Spark job.
+    * The Visit's increments read the superstep states after the loop, so
+    * the loop retains them (`Supersteps.run`'s `retain`) and
+    * [[Visit.release]] frees them.
     *
     * The visit runs on its own session ([[graft.core.Supersteps.session]])
     * with the three confs below; its pivots, adjacency and `prep` are bound
@@ -274,12 +275,9 @@ object BitsetBfs {
       pivots: DataFrame,
       maskCols: Int = 16,
       maxIter: Int = 256,
-      mat: Materializer = new LocalMaterializer(window = 0),
+      mat: Materializer = new LocalMaterializer(),
       onSuperstep: (Int, Long) => Unit = (_, _) => (),
       prep: Prep = null): Visit = {
-    require(!mat.evictsIterations,
-      "BitsetBfs.visit reads every superstep state after its loop; a materializer " +
-        "that evicts iterations (LocalMaterializer with window > 0) would free them")
     val sess = Supersteps.session(spark,
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> (1 << 22).toString,
       "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
@@ -373,7 +371,7 @@ object BitsetBfs {
           statesAcc :+= st
           if (c > 0) incs :+= ((w, d, newlyTiles(st)))
           onSuperstep(d, c.toLong)
-        })
+        }, retain = true)
       base = end.iter + 1
     }
     if (inputs != null && prep == null) inputs.release()
@@ -399,7 +397,7 @@ object BitsetBfs {
       pivots: DataFrame,
       maskCols: Int = 16,
       maxIter: Int = 256,
-      mat: Materializer = new LocalMaterializer(window = 0),
+      mat: Materializer = new LocalMaterializer(),
       onSuperstep: (Int, Long) => Unit = (_, _) => (),
       prep: Prep = null): DataFrame =
     visit(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, prep).harmonic

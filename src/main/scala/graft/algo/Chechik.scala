@@ -81,7 +81,7 @@ object Chechik {
       eps: Double = 0.1,
       seed: Int = 42,
       batchSize: Int = 128,
-      mat: Materializer = new LocalMaterializer(window = 0)): (DataFrame, Telemetry) = {
+      mat: Materializer = new LocalMaterializer()): (DataFrame, Telemetry) = {
 
     var supersteps = 0L
 
@@ -98,8 +98,9 @@ object Chechik {
       if (allSampled) 0L
       else math.max(math.ceil(math.log(n.toDouble) / math.log(2)).toLong, 2L).min(n)
 
-    val (sample, sampleSize) =
-      if (allSampled) (verts.select(col("id"), lit(1.0).as("p")), n)
+    // `probs` reads `verts` and the estimator's checkpointed ratios
+    val (sample, sampleSize, probs) =
+      if (allSampled) (verts.select(col("id"), lit(1.0).as("p")), n, None)
       else {
         // 1. uniform pivot sample without replacement, seeded (R1)
         val pivots = verts
@@ -112,7 +113,7 @@ object Chechik {
         vPivots.release()
         // 4. Bernoulli sample S (R2)
         val s = probs.where(u01(seed + 1, col("id")) < col("p")).localCheckpoint(eager = false)
-        (s, s.count())
+        (s, s.count(), Some(probs))
       }
     val unsampled = n - sampleSize
 
@@ -130,21 +131,28 @@ object Chechik {
         .localCheckpoint(true))
     vSample.release()
 
-    // 5. certification loop over V∖S only (nothing to certify when S = V)
-    var processed = sampleFarness
-    var exactBfs = 0L
-    apxFarness.foreach { apx =>
-      // Schedule position via distributed range minting (Rank.globalRank) —
-      // the schedule is |V∖S| rows and a global row_number window would sort
-      // all of them through ONE task at scale.
-      val schedule = graft.core.Rank.globalRank(
+    // 5. certification loop over V∖S only (nothing to certify when S = V).
+    // Schedule position via distributed range minting (Rank.globalRank) —
+    // the schedule is |V∖S| rows and a global row_number window would sort
+    // all of them through ONE task at scale.
+    val schedule = apxFarness.map { apx =>
+      val ranked = graft.core.Rank.globalRank(
         verts
           .join(sample.select("id"), Seq("id"), "left_anti")
           .join(apx, Seq("id"), "left")
           .select(col("id"), coalesce(col("apxF"), lit(Double.MaxValue)).as("apxF")),
         "pos", asc("apxF"), asc("id"))
-        .localCheckpoint(true)
+      val out = ranked.localCheckpoint(true)
+      Materializer.unpersistCheckpoint(ranked)
+      out
+    }
+    // the sample's farness and the schedule are checkpointed: certification
+    // and the top-k read nothing else of the set-up
+    (Seq(verts, sample) ++ probs ++ apxFarness).foreach(Materializer.unpersistCheckpoint(_))
 
+    var processed = sampleFarness
+    var exactBfs = 0L
+    schedule.foreach { schedule =>
       // processed vertices whose exact closeness is ≥ (1+ε)·the largest
       // estimated closeness among unprocessed positions ≥ l. ONE aggregate
       // job: the 1-row remainder aggregate broadcasts into a crossJoin and
@@ -174,17 +182,20 @@ object Chechik {
           .select(col("id").as("pivot"))
         // exact farness per batch pivot
         val vBatch = visits(batchIds, batch)
-        processed = mat.iterate(processed.unionAll(vBatch.farness), (l / batch).toInt,
+        val next = mat.iterate(processed.unionAll(vBatch.farness), (l / batch).toInt,
           certified.toDouble)
-        // `processed` is materialized (mat.iterate is eager): the batch
-        // visit's cached state is dead now
+        // `next` is materialized (mat.iterate is eager): the batch visit's
+        // cached state and the processed set it replaces are dead now
         vBatch.release()
+        Materializer.unpersistCheckpoint(processed)
+        processed = next
         // positions are dense 0..|V∖S|-1, so [l, l+batch) holds
         // min(batch, |V∖S|−l) ids — no count job in the loop
         exactBfs += math.min(batch, unsampled - l)
         l += batch
         certified = certifiedFrom(l)
       }
+      Materializer.unpersistCheckpoint(schedule)
     }
 
     // top-k among processed, ties on the k-th farness extended (T5,

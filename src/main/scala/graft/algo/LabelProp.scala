@@ -22,7 +22,7 @@ object LabelProp {
       spark: SparkSession,
       adjacency: DataFrame,
       rounds: Int,
-      mat: Materializer = new LocalMaterializer(window = Materializer.DefaultChain)): DataFrame = {
+      mat: Materializer = new LocalMaterializer()): DataFrame = {
 
     val init = adjacency.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))

@@ -64,8 +64,8 @@ import org.apache.spark.sql.graft.CheckpointStats.bind
   * hash(src) partitioning; dist advances as `frontier.dist + 1` so the loop
   * plan carries NO per-superstep literal (codegen caches hit from superstep
   * 2 on — a varying `lit(d)` would force a janino recompile per superstep,
-  * serial driver time). State checkpoints are REPLACED (window
-  * [[graft.core.Materializer.DefaultChain]] by default), so live
+  * serial driver time). State checkpoints are REPLACED, and the driver
+  * frees each one the next kept state replaces, so live
   * memory is O(|V|), not O(supersteps·|V|); with a DirMaterializer the
   * per-iteration state parquet is self-contained, so resume needs only the
   * last completed iteration.
@@ -82,7 +82,7 @@ object MultiBfs {
       adjacency: DataFrame,
       sources: DataFrame,
       maxIter: Int = 256,
-      mat: Materializer = new LocalMaterializer(window = Materializer.DefaultChain),
+      mat: Materializer = new LocalMaterializer(),
       onSuperstep: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
 
     val init = sources

@@ -30,7 +30,7 @@ object PageRank {
       damping: Double = 0.85,
       maxIter: Int = 100,
       tol: Double = 1e-6,
-      mat: Materializer = new LocalMaterializer(window = Materializer.DefaultChain),
+      mat: Materializer = new LocalMaterializer(),
       onSuperstep: (Int, Double) => Unit = (_, _) => ()): Result = {
 
     // lazy checkpoint: the count is the materializing action (one job)
@@ -69,6 +69,9 @@ object PageRank {
     val end = Supersteps.run(mat, ranks, iter, maxIter, step,
       metric = if (tol > 0) Some(Supersteps.Aggregate(delta)) else None,
       stop = _ <= tol, onStep = (i, _, d) => onSuperstep(i, d))
+    // a kept iteration is a materialized checkpoint; only the deferred
+    // start, returned when no iteration ran, still reads `verts`
+    if (end.iter > iter) Materializer.unpersistCheckpoint(verts)
     Result(bind(end.state, spark), end.iter, end.metric)
   }
 

@@ -1,6 +1,6 @@
 package graft.algo
 
-import graft.core.Rank
+import graft.core.{Materializer, Rank}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,7 +62,8 @@ object Progressive {
     * [[Visit.Selector]], so the batch size picks its form: the batch's
     * farness rows join `farness[s]`, and its reverse farness
     * ([[Geometric.reverseFarness]]) adds into `approxFarness[v]`. Both
-    * accumulators are checkpointed before the visit is released.
+    * accumulators are checkpointed before the visit, and the accumulators
+    * they replace, are released.
     */
   def run(
       spark: SparkSession,
@@ -93,11 +94,16 @@ object Progressive {
       val v = visits(pivots, batchSize)
       val bf = v.farness
       val br = Geometric.reverseFarness(v, pivots).withColumnRenamed("revFarness", "r")
-      exactF = Some(exactF.map(_.unionAll(bf)).getOrElse(bf).localCheckpoint(true))
-      apxF = Some(apxF
+      val nextExact = exactF.map(_.unionAll(bf)).getOrElse(bf).localCheckpoint(true)
+      val nextApx = apxF
         .map(p => p.unionAll(br).groupBy("id").agg(sum("r").as("r")))
-        .getOrElse(br).localCheckpoint(true))
+        .getOrElse(br).localCheckpoint(true)
+      // both accumulators are materialized: the visit and the ones they
+      // replace are dead
       v.release()
+      (exactF ++ apxF).foreach(Materializer.unpersistCheckpoint(_))
+      exactF = Some(nextExact)
+      apxF = Some(nextApx)
       snapshotDir.foreach { dir =>
         farnessSort(verts, exactF.get, apxF.get)
           .select("pos", "id")

@@ -2,7 +2,6 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import java.nio.file.{Files, Paths, Path}
-import scala.collection.mutable
 
 /** Per-iteration materialization for driver-side iterative algorithms.
   *
@@ -15,12 +14,13 @@ import scala.collection.mutable
   * frontier; PageRank: the new rank vector) — never rewrite accumulated
   * state, which at 100 TB would mean re-writing the world every superstep.
   *
+  * No materializer frees a frame: the code that replaces a checkpoint frees
+  * it, and for every superstep loop that is [[Supersteps.run]].
+  *
   * Two strategies:
-  *   - [[LocalMaterializer]]: eager `localCheckpoint` per iteration;
-  *     `window > 0` evicts all but the last `window` iterations (for
-  *     algorithms whose state is replaced, e.g. PageRank), `window = 0`
-  *     keeps everything (for accumulating state, e.g. BFS visited-set
-  *     increments, which stay live until the final aggregate).
+  *   - [[LocalMaterializer]]: `localCheckpoint` per iteration, eager from
+  *     `iterate` and lazy from `iterateDeferred`; `window > 0` caps the
+  *     chain length.
   *   - [[DirMaterializer]]: parquet per iteration under `dir/iter=NNNN/`
   *     plus `_graft_meta.json` (iteration, convergence metric, partition
   *     count, wall time) — the north rule's "checkpointed per-iteration with
@@ -42,7 +42,8 @@ object Materializer {
     * storage is RDD-level, so walk the plan for its LogicalRDD nodes and
     * unpersist those RDDs directly. The frame is UNRECOVERABLE afterwards
     * (checkpointing truncated its lineage) — call only once every consumer
-    * is done with it.
+    * is done with it. A frame with no LogicalRDD, such as a
+    * `DirMaterializer` parquet read, is left as it is.
     */
   def unpersistCheckpoint(df: DataFrame, blocking: Boolean = false): Unit =
     df.queryExecution.logical.foreach {
@@ -92,18 +93,11 @@ trait Materializer {
   /** How many [[iterateDeferred]] frames may be CHAINED — each built over
     * the previous — with no intervening action, so one downstream job
     * materializes them all. [[Supersteps.run]] chunks its supersteps at
-    * `min(DefaultChain, chainCapacity)`. 1 by default
-    * (no chaining): `DirMaterializer` writes eagerly with a per-iteration
-    * metric a chain cannot know yet, and `LocalMaterializer` with an
-    * eviction window is only safe up to the window length — a longer chain
-    * could evict a frame the chunk's job still needs (either not yet
-    * materialized, or the chunk input whose lineage was truncated),
-    * silently forfeiting its checkpoint.
+    * `min(DefaultChain, chainCapacity)`. 1 by default (no chaining):
+    * `DirMaterializer` writes eagerly with a per-iteration metric a chain
+    * cannot know yet.
     */
   def chainCapacity: Int = 1
-
-  /** Whether later iterations free earlier ones (see [[LocalMaterializer]]). */
-  private[graft] def evictsIterations: Boolean = false
 
   /** Previously completed increments (iter → frame), ascending, for resume. */
   def resumeIncrements(): Seq[(Int, DataFrame)] = Seq.empty
@@ -111,47 +105,20 @@ trait Materializer {
   def close(): Unit = ()
 }
 
+/** Spark-managed local checkpoints: `iterate` is an eager `localCheckpoint`,
+  * `iterateDeferred` a lazy one. `window` caps [[chainCapacity]], the
+  * supersteps per job of [[Supersteps.run]]; 0 means no cap (the driver's
+  * default chunk). `window = 1` is the eager loop, one superstep per job.
+  * (`window` keeps its name because callers pass it by name.)
+  */
 final class LocalMaterializer(window: Int = 0) extends Materializer {
-  private val live = mutable.Queue.empty[DataFrame]
-  // Deferred frames enter the eviction window only at the NEXT iterate*
-  // call: by then the loop has run its materializing action (or built the
-  // next state over this frame, whose own action materializes it), so the
-  // window never unpersists a lazily-checkpointed frame before it
-  // materialized — which would silently forfeit the checkpoint and replay
-  // lineage (round-2 advice on LocalMaterializer window eviction).
-  private var pending: Option[DataFrame] = None
-  private def flushPending(): Unit = { pending.foreach(track); pending = None }
-  private def track(out: DataFrame): DataFrame = {
-    if (window > 0) {
-      live.enqueue(out)
-      // RDD-level unpersist: Dataset.unpersist is a no-op for checkpoints
-      // (round-3 advice — the eviction window silently leaked every frame)
-      while (live.size > window) Materializer.unpersistCheckpoint(live.dequeue())
-    }
-    out
-  }
-  override def iterate(df: DataFrame, iter: Int, metric: Double): DataFrame = {
-    flushPending()
-    track(df.localCheckpoint(true))
-  }
+  override def iterate(df: DataFrame, iter: Int, metric: Double): DataFrame =
+    df.localCheckpoint(true)
 
-  override def iterateDeferred(df: DataFrame, iter: Int, metric: Double): DataFrame = {
-    flushPending()
-    val out = df.localCheckpoint(false)
-    pending = Some(out)
-    out
-  }
+  override def iterateDeferred(df: DataFrame, iter: Int, metric: Double): DataFrame =
+    df.localCheckpoint(false)
 
-  /** Unbounded without an eviction window. With one, a chunk's materializing
-    * job needs at most `window` frames alive in the window simultaneously
-    * (the chunk's input state + its u−1 flushed intermediates, u ≤ window;
-    * the newest frame is still pending): eviction is oldest-first, so only
-    * frames from completed chunks — materialized and no longer referenced —
-    * ever reach the dequeue (see trait scaladoc).
-    */
   override def chainCapacity: Int = if (window == 0) Int.MaxValue else window
-
-  override private[graft] def evictsIterations: Boolean = window > 0
 }
 
 final class DirMaterializer(spark: SparkSession, dir: String) extends Materializer {

@@ -17,7 +17,9 @@ import org.apache.spark.sql.graft.CheckpointStats.{bind, cloneSession}
   * The loop keeps the state of the FIRST substep whose metric stops it, and
   * reports `(iter, metric)` for every substep up to and including that one,
   * so results and telemetry equal a chunk length of 1. The overshoot
-  * substeps after it were computed by the chunk's job and are released.
+  * substeps after it were computed by the chunk's job and are released,
+  * and so is every state it replaced (see [[run]]): a loop's live states
+  * stay at one chunk, as the reference reuses one distance array per visit.
   * Every loop starts at [[start]], so no loop counts or eagerly checkpoints
   * its starting state: the first chunk's job does.
   *
@@ -94,6 +96,11 @@ object Supersteps {
     * each `step` output, and each frame `mat` hands back (a
     * `DirMaterializer` reads back through its own session), is bound to it.
     *
+    * The loop owns its states: once a chunk's job has run, it frees
+    * ([[Materializer.unpersistCheckpoint]]) the overshoot substeps and
+    * every state the kept substep replaced, `state` included. The returned
+    * state is never freed; the caller frees it when done.
+    *
     * @param step   plans the next state over a materialized one
     * @param settle applied to every checkpointed substep before it becomes
     *               the state (e.g. a stats strip)
@@ -101,6 +108,8 @@ object Supersteps {
     *               chunk is materialized by checkpointing its last substep
     *               eagerly, and which report `Double.MaxValue` per substep
     * @param onStep (iter, state, metric) for every kept substep, in order
+    * @param retain keep every kept substep and `state` alive for the caller,
+    *               who reads them after the loop and frees them (BitsetBfs)
     */
   def run(
       mat: Materializer,
@@ -111,7 +120,8 @@ object Supersteps {
       settle: DataFrame => DataFrame = identity,
       metric: Option[Metric] = None,
       stop: Double => Boolean = _ => false,
-      onStep: (Int, DataFrame, Double) => Unit = (_, _, _) => ()): Result = {
+      onStep: (Int, DataFrame, Double) => Unit = (_, _, _) => (),
+      retain: Boolean = false): Result = {
     val chunk = math.max(1, math.min(Materializer.DefaultChain, mat.chainCapacity))
     val s = state.sparkSession
     // true until a Count loop's first chunk has counted the starting frontier
@@ -137,7 +147,8 @@ object Supersteps {
       val kept = figures.indexWhere(stop, if (countStart) 0 else 1) match { case -1 => u; case n => n }
       countStart = false
       for (k <- 1 to kept) onStep(cur.iter + k, states(k), figures(k))
-      built.drop(kept).foreach(Materializer.unpersistCheckpoint(_))
+      val freed = if (retain) built.drop(kept) else states.patch(kept, Nil, 1)
+      freed.foreach(Materializer.unpersistCheckpoint(_))
       cur = Result(states(kept), cur.iter + kept, figures(kept))
     }
     cur

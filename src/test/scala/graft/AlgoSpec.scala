@@ -440,10 +440,8 @@ class AlgoSpec extends SparkTestBase {
     // frontier on the final chunk — results and reported (step, count)
     // telemetry must still match the eager loop exactly (counts within a
     // chunk are monotone to zero: an empty frontier sends no messages).
-    // The visit reads every superstep state after its loop, so a windowed
-    // LocalMaterializer would evict states it still needs: the eager leg's
-    // materializer checkpoints eagerly, keeps everything and has the
-    // default chain capacity of 1.
+    // The eager leg's materializer checkpoints eagerly and has the default
+    // chain capacity of 1.
     val path = (0L until 29L).map(i => i -> (i + 1))
     val adj = adjOf(path)
     val pivots = Seq(0L, 29L).toDF("pivot")

@@ -72,16 +72,45 @@ class MaterializerSpec extends SparkTestBase {
     assert(jobs === 219)
   }
 
-  test("BitsetBfs.visit refuses an evicting materializer before any Spark job") {
+  test("BitsetBfs.visit on LocalMaterializer(window = 1): the default's farness") {
+    import spark.implicits._
+    val adj = adjOf((0L until 29L).map(i => i -> (i + 1)))
+    val pivots = Seq(0L, 29L).toDF("pivot")
+    def farness(v: graft.algo.Visit) =
+      v.farness.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("farness")).toMap
+    val eager = farness(BitsetBfs.visit(spark, adj, pivots, maskCols = 1,
+      mat = new LocalMaterializer(window = 1)))
+    assert(eager === farness(BitsetBfs.visit(spark, adj, pivots, maskCols = 1)))
+    assert(eager === Map(0L -> (1L to 29L).sum, 29L -> (1L to 29L).sum))
+  }
+
+  /** Persistent RDDs `body` adds and leaves behind while its result is held. */
+  private def leftDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = body
+    (out, sc.getPersistentRDDs.keys.count(!before(_)))
+  }
+
+  test("superstep loops leave only the checkpoints their results read") {
     import spark.implicits._
     val adj = adjOf((0L until 29L).map(i => i -> (i + 1)))
     adj.count()
     val pivots = Seq(0L, 29L).toDF("pivot")
-    val (err, jobs) = jobsDuring(intercept[IllegalArgumentException] {
-      BitsetBfs.visit(spark, adj, pivots, maskCols = 1, mat = new LocalMaterializer(window = 1))
-    })
-    assert(jobs === 0)
-    assert(err.getMessage.contains("evicts iterations"), err.getMessage)
+    // each result reads its final state; the driver freed every state before it
+    assert(leftDuring(MultiBfs.run(spark, adj, pivots))._2 === 1, "MultiBfs")
+    assert(leftDuring(PageRank.run(spark, adj, maxIter = 10))._2 === 1, "PageRank")
+    assert(leftDuring(Components.run(spark, adj))._2 === 1, "Components")
+    assert(leftDuring(LabelProp.run(spark, adj, rounds = 9))._2 === 1, "LabelProp")
+
+    val er = adjOf(erGraph(80, 0.06, seed = 8))
+    er.count()
+    // Chechik's top-k reads the last processed set; Progressive's order reads
+    // the vertex set, both accumulators and its rank's checkpoint
+    assert(leftDuring(Chechik.topkCloseness(spark, er, k = 5, eps = 0.5, batchSize = 5))._2 === 1,
+      "Chechik")
+    assert(leftDuring(graft.algo.Progressive.run(spark, er, batchSize = 5, numBatches = 3))._2 === 4,
+      "Progressive")
   }
 
   test("MultiBfs.run and BitsetBfs.visit leave the session confs they pin as they found them") {
