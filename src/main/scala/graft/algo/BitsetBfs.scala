@@ -3,7 +3,7 @@ package graft.algo
 import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointStats.bind
+import org.apache.spark.sql.graft.CheckpointStats.{bind, strip}
 
 /** Bitset multi-source BFS — the scale path for many-pivot visits.
   *
@@ -94,10 +94,13 @@ object BitsetBfs {
   }
 
   /** Build a [[Prep]] from `Graph.adjacency` output (src, salt?, neighbors,
-    * degree): one arcs-row repartition to hash(chunk), checkpointed.
+    * degree): one arcs-row repartition to hash(chunk), checkpointed on a new
+    * [[session]], which every visit over the Prep runs on.
     */
-  def prepare(adjacency: DataFrame): Prep = {
-    val cadj = adjacency.select(
+  def prepare(adjacency: DataFrame): Prep = prepare(adjacency, session(adjacency.sparkSession))
+
+  private def prepare(adjacency: DataFrame, sess: SparkSession): Prep = {
+    val cadj = bind(adjacency, sess).select(
         shiftright(col("src"), ChunkBits).as("chunk"),
         col("src").bitwiseAND(lit((ChunkSize - 1).toLong)).cast("int").as("pos"),
         col("neighbors"))
@@ -106,6 +109,25 @@ object BitsetBfs {
     val chunks = cadj.select(col("chunk")).distinct().localCheckpoint(true)
     Prep(cadj, chunks)
   }
+
+  /** The bitset loop's session: a [[graft.core.Supersteps.session]] of
+    * `spark` with two tile confs.
+    *  - adaptive execution off (every loop's session): the plans are the
+    *    static ones PlanSpec asserts; under AQE, `cadj` would be coalesced
+    *    to an unknown partitioning that every superstep re-shuffles.
+    *  - fallbackThreshold: the tile aggregate's map-side hash map holds up
+    *    to n/ChunkSize keys per task; at the default (128 keys) every
+    *    superstep would silently sort its raw message rows instead.
+    *  - requireAllClusterKeysForCoPartition=false: frontier ⋈ cadj joins on
+    *    (chunk, pos) with BOTH sides hash(chunk)-partitioned, a key-subset
+    *    co-partitioning Spark accepts only with this off; with it on, every
+    *    superstep re-exchanges both sides on (chunk, pos), exactly the n-row
+    *    reshuffle the tile layout removes.
+    */
+  private def session(spark: SparkSession): SparkSession =
+    Supersteps.session(spark,
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> (1 << 22).toString,
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
 
   /** Handle to a completed bitset visit: pivot→(wave,mcol,mbit) index map
     * and per-superstep newly-bit TILE frames (wave, dist, frame(chunk, tile))
@@ -229,8 +251,9 @@ object BitsetBfs {
           .otherwise(expr("zip_with(vs, atile, (v, a) -> v | a)")).as("vs"))
   }
 
-  /** Run the wave BFS and return the [[Visit]] handle for histogram/reverse
-    * consumers.
+  /** Run the wave BFS to the empty frontier of every wave — no depth limit,
+    * as the reference's visit (GeometricCentralities.java:151-207) — and
+    * return the [[Visit]] handle for histogram/reverse consumers.
     *
     * @param adjacency output of Graph.adjacency over SYMMETRIZED edges,
     *                  persisted by the caller (only read when no `prep` is
@@ -249,38 +272,21 @@ object BitsetBfs {
     * the loop retains them (`Supersteps.run`'s `retain`) and
     * [[Visit.release]] frees them.
     *
-    * The visit runs on its own session ([[graft.core.Supersteps.session]])
-    * with the three confs below; its pivots, adjacency and `prep` are bound
-    * there. The caller's session is never written to, and the Visit's
-    * frames are bound back to it, so its lazy aggregates (plain scans and
-    * aggregates over checkpointed frames) plan under the caller's confs.
-    *  - adaptive execution off (every loop's session): the loop's plans are
-    *    the static ones PlanSpec asserts, and AQE would submit each query
-    *    stage of a chunk as its own Spark job.
-    *  - fallbackThreshold: the tile aggregate's map-side hash map
-    *    legitimately holds up to n/ChunkSize keys per task; the default
-    *    ObjectHashAggregate fallback (128 keys) would silently degrade every
-    *    superstep to sort-based aggregation — sorting the raw message rows
-    *    each superstep.
-    *  - requireAllClusterKeysForCoPartition=false: frontier ⋈ cadj joins on
-    *    (chunk, pos) with BOTH sides hash(chunk)-partitioned — a key-subset
-    *    co-partitioning Spark only accepts with this (conservative-by-
-    *    default) flag off; without it EnsureRequirements re-exchanges both
-    *    sides on (chunk, pos) every superstep, exactly the n-row reshuffle
-    *    the tile layout removes.
+    * The visit runs on its Prep's session: `prep`'s, or else a new
+    * [[session]] of `spark` where it builds its own Prep once it has pivots.
+    * The Visit's frames are bound back to `spark`, so its lazy aggregates
+    * (plain scans and aggregates over checkpointed frames) plan under the
+    * caller's confs.
     */
   def visit(
       spark: SparkSession,
       adjacency: DataFrame,
       pivots: DataFrame,
       maskCols: Int = 16,
-      maxIter: Int = 256,
       mat: Materializer = new LocalMaterializer(),
       onSuperstep: (Int, Long) => Unit = (_, _) => (),
       prep: Prep = null): Visit = {
-    val sess = Supersteps.session(spark,
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> (1 << 22).toString,
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
+    val sess = if (prep != null) prep.cadj.sparkSession else session(spark)
 
     val waveBits = 64L * maskCols
     val ms = (0 until maskCols).map(j => s"m$j")
@@ -316,13 +322,8 @@ object BitsetBfs {
 
     def newlyTiles(state: DataFrame): DataFrame =
       state.where(tileNonZero("ns")).select(col("chunk"), col("ns").as("tile"))
-    def strip(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.CheckpointStats.strip(df)
 
-    val inputs =
-      if (nWaves == 0) null
-      else if (prep != null) Prep(bind(prep.cadj, sess), bind(prep.chunks, sess))
-      else prepare(bind(adjacency, sess))
+    val inputs = if (nWaves == 0 || prep != null) prep else prepare(adjacency, sess)
 
     var incs = Vector.empty[(Int, Int, DataFrame)]
     var statesAcc = Vector.empty[DataFrame]
@@ -361,9 +362,9 @@ object BitsetBfs {
       statesAcc :+= start
       incs :+= ((w, 0, newlyTiles(start)))
       // the loop is Supersteps.run: each chunk's one union-multicount job
-      // returns every substep's exact frontier-chunk count, and the visit
-      // stops at the first empty frontier
-      val end = Supersteps.run(mat, start, base, base + maxIter,
+      // returns every substep's exact frontier-chunk count, and the wave
+      // stops only at its first empty frontier
+      val end = Supersteps.run(mat, start, base, Int.MaxValue,
         superstep(_, inputs.cadj, maskCols),
         settle = strip, metric = Some(Supersteps.Count(tileNonZero("ns"))),
         stop = _ == 0, onStep = (i, st, c) => {
@@ -374,7 +375,7 @@ object BitsetBfs {
         }, retain = true)
       base = end.iter + 1
     }
-    if (inputs != null && prep == null) inputs.release()
+    if (inputs ne prep) inputs.release()
     Visit(bind(idx, spark), ms, incs.map { case (w, d, inc) => (w, d, bind(inc, spark)) }, statesAcc)
   }
 
@@ -396,11 +397,10 @@ object BitsetBfs {
       adjacency: DataFrame,
       pivots: DataFrame,
       maskCols: Int = 16,
-      maxIter: Int = 256,
       mat: Materializer = new LocalMaterializer(),
       onSuperstep: (Int, Long) => Unit = (_, _) => (),
       prep: Prep = null): DataFrame =
-    visit(spark, adjacency, pivots, maskCols, maxIter, mat, onSuperstep, prep).harmonic
+    visit(spark, adjacency, pivots, maskCols, mat, onSuperstep, prep).harmonic
 
   /** Shared histogram assembly in two stages. The expensive pass reduces
     * each (wave, dist) group of tile increments to 64·maskCols integer bit

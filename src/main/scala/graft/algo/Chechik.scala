@@ -134,20 +134,16 @@ object Chechik {
     // 5. certification loop over V∖S only (nothing to certify when S = V).
     // Schedule position via distributed range minting (Rank.globalRank) —
     // the schedule is |V∖S| rows and a global row_number window would sort
-    // all of them through ONE task at scale.
-    val schedule = apxFarness.map { apx =>
-      val ranked = graft.core.Rank.globalRank(
-        verts
-          .join(sample.select("id"), Seq("id"), "left_anti")
-          .join(apx, Seq("id"), "left")
-          .select(col("id"), coalesce(col("apxF"), lit(Double.MaxValue)).as("apxF")),
-        "pos", asc("apxF"), asc("id"))
-      val out = ranked.localCheckpoint(true)
-      Materializer.unpersistCheckpoint(ranked)
-      out
-    }
-    // the sample's farness and the schedule are checkpointed: certification
-    // and the top-k read nothing else of the set-up
+    // all of them through ONE task at scale. Its frame reads only the
+    // checkpoint globalRank builds, freed with the schedule below.
+    val schedule = apxFarness.map(apx => graft.core.Rank.globalRank(
+      verts
+        .join(sample.select("id"), Seq("id"), "left_anti")
+        .join(apx, Seq("id"), "left")
+        .select(col("id"), coalesce(col("apxF"), lit(Double.MaxValue)).as("apxF")),
+      "pos", asc("apxF"), asc("id")))
+    // the sample's farness and the schedule's rank are checkpointed:
+    // certification and the top-k read nothing else of the set-up
     (Seq(verts, sample) ++ probs ++ apxFarness).foreach(Materializer.unpersistCheckpoint(_))
 
     var processed = sampleFarness

@@ -37,8 +37,9 @@ import org.apache.spark.sql.expressions.Window
   * set and the previous one — a full-outer probe of two distinct'd (hence
   * duplicate-free) frames, co-partitioned on (src, dst) — which is 0
   * exactly at the fixpoint. One union job per chunk measures every round of
-  * the chunk; the loop keeps the first round whose edge set is unchanged,
-  * so labels and the round count equal a chunk length of 1. That one rule
+  * the chunk; the loop stops only at the first round whose edge set is
+  * unchanged, and keeps it, so labels and the round count equal a chunk
+  * length of 1. That one rule
   * holds for every input: an edge set that is already a fixpoint (e.g.
   * empty, when every edge is a self loop) still runs and keeps one round,
   * so `iterations` is 1. The probe joins two checkpointed frames into a
@@ -61,7 +62,6 @@ object Components {
   def run(
       spark: SparkSession,
       adjacency: DataFrame,
-      maxIter: Int = 64,
       mat: Materializer = new LocalMaterializer(window = 3),
       onSuperstep: (Int, Long) => Unit = (_, _) => ()): Result = {
 
@@ -99,7 +99,7 @@ object Components {
         .join(prev.select(col("src"), col("dst"), lit(true).as("__old")),
           Seq("src", "dst"), "full_outer")
         .agg(count(when(col("__new").isNull || col("__old").isNull, 1)).as("changed"))
-    val end = Supersteps.run(mat, edges, iter, maxIter, step,
+    val end = Supersteps.run(mat, edges, iter, Int.MaxValue, step,
       metric = Some(Supersteps.Aggregate(changed)),
       stop = _ == 0, onStep = (i, _, c) => onSuperstep(i, c.toLong))
     val fixpoint = end.state

@@ -50,11 +50,12 @@ import org.apache.spark.sql.graft.CheckpointStats.bind
   *
   * The loop itself is [[graft.core.Supersteps.run]]: chunks of lazily
   * checkpointed supersteps, one job per chunk counting every substep's
-  * frontier, stopping at the first empty one. It starts at
-  * [[graft.core.Supersteps.start]]: iteration 0 (the pivots at dist 0) is
-  * deferred, and the first chunk's job materializes it and counts it as
-  * its starting frontier; an empty source set stops there, with no
-  * superstep reported.
+  * frontier. It stops only at the first empty one: like the reference's
+  * visit, which dequeues every reachable vertex, it has no depth limit. It
+  * starts at [[graft.core.Supersteps.start]]: iteration 0 (the pivots at
+  * dist 0) is deferred, and the first chunk's job materializes it and
+  * counts it as its starting frontier; an empty source set stops there,
+  * with no superstep reported.
   *
   * The dist=0 row is the source itself (the reference excludes the source
   * from distance sums but counts it as reachable —
@@ -81,7 +82,6 @@ object MultiBfs {
       spark: SparkSession,
       adjacency: DataFrame,
       sources: DataFrame,
-      maxIter: Int = 256,
       mat: Materializer = new LocalMaterializer(),
       onSuperstep: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
 
@@ -94,7 +94,7 @@ object MultiBfs {
     // the loop's session has AQE off (iteration 0's distinct runs inside the
     // first chunk's job): stripState asserts the static plan's placement
     val (d, state) = Supersteps.start(mat, init)
-    val end = Supersteps.run(mat, state, d, maxIter, step(_, adjacency), settle = stripState,
+    val end = Supersteps.run(mat, state, d, Int.MaxValue, step(_, adjacency), settle = stripState,
       metric = Some(Supersteps.Count(col("isNew"))), stop = _ == 0,
       onStep = (i, _, c) => onSuperstep(i, c.toLong))
     bind(end.state.select("pivot", "id", "dist"), spark)

@@ -70,11 +70,10 @@ object Progressive {
       adjacency: DataFrame,
       batchSize: Int,
       numBatches: Int,
-      snapshotDir: Option[String] = None,
-      onSuperstep: (Int, Long) => Unit = (_, _) => ()): DataFrame = {
+      snapshotDir: Option[String] = None): DataFrame = {
     val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(true)
     val deg = adjacency.select(col("src").as("id"), col("degree")).distinct()
-    val visits = new Visit.Selector(spark, adjacency, verts.count(), onSuperstep)
+    val visits = new Visit.Selector(spark, adjacency, verts.count())
 
     var exactF: Option[DataFrame] = None // (id, farness) for processed
     var apxF: Option[DataFrame] = None   // (id, r) accumulated reverse farness

@@ -52,7 +52,8 @@ object Visit {
     * way.
     *
     * Bitset visits share one [[BitsetBfs.Prep]], built on the first of them
-    * and freed by [[release]]. `onSuperstep` sees every visit's supersteps.
+    * and freed by [[release]], and run on the session its `prepare` opened.
+    * Every visit stops only at its empty frontier; `onSuperstep` sees all.
     */
   final class Selector(
       spark: SparkSession,

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * (= partitionId·2^33 + local row index, assigned AFTER the sort in the
   * same stage), then add per-partition prefix-sum offsets. The offsets are
   * ≤ numShufflePartitions scalars — computed on the driver, like the
-  * reference's cumulative-count pass — so the plan contains NO
-  * single-partition exchange at any row count.
+  * reference's cumulative-count pass, and added from an array literal — so
+  * the plan contains NO single-partition exchange at any row count.
   *
   * Correctness does not depend on where the range boundaries fall: the
   * concatenation of (range-ordered partitions, each sorted) IS the total
@@ -38,24 +38,21 @@ object Rank {
       .withColumn("__mid", monotonically_increasing_id())
       .localCheckpoint(true)
     // per-partition (count, base-mid): ≤ `parts` rows → prefix sums on the
-    // driver (scalars only), broadcast back
+    // driver (scalars only), added from an array literal indexed by
+    // partition: no join, so a read of the result submits no broadcast job
     val stats = ranged
       .groupBy(shiftright(col("__mid"), 33).as("__part"))
       .agg(count(lit(1)).as("__cnt"), min("__mid").as("__base"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1)
+    val shift = new Array[Long](parts)
     var acc = 0L
-    val offsets = stats.map { case (part, cnt, base) =>
-      val o = (part, base, acc); acc += cnt; o
-    }.toSeq
-    import spark.implicits._
-    val offDf = offsets.toDF("__part", "__base", "__off")
+    stats.foreach { case (part, cnt, base) => shift(part.toInt) = acc - base; acc += cnt }
     ranged
-      .withColumn("__part", shiftright(col("__mid"), 33))
-      .join(broadcast(offDf), "__part")
-      .withColumn(posCol, col("__off") + col("__mid") - col("__base"))
-      .drop("__mid", "__part", "__base", "__off")
+      .withColumn(posCol, col("__mid") +
+        element_at(typedLit(shift.toSeq), shiftright(col("__mid"), 33).cast("int") + 1))
+      .drop("__mid")
   }
 
   /** `rank() <= k` with tie extension, distributed: TakeOrderedAndProject

@@ -24,10 +24,12 @@ import org.apache.spark.sql.graft.CheckpointStats.{bind, cloneSession}
   * its starting state: the first chunk's job does.
   *
   * Every loop runs on its own [[session]], a clone of the caller's with AQE
-  * off: a chunk is then one job (AQE would submit each query stage as its
-  * own), and MultiBfs's asserted state placement is the static plan's. The
-  * caller's session is never written to, and each loop hands its result
-  * back bound to it.
+  * off: a chunk is then one job if its plan has no broadcast join (AQE
+  * would submit each query stage as its own; planning a lazy checkpoint
+  * submits a job per `BroadcastExchange`, and the union job broadcasts
+  * again), and MultiBfs's asserted state placement is the static plan's.
+  * The caller's session is never written to, and each loop hands its
+  * result back bound to it.
   *
   * A chunk of length 1 (`DirMaterializer`, or `LocalMaterializer` with
   * `window = 1`) is the eager loop: one checkpoint and one metric job per
@@ -40,9 +42,10 @@ object Supersteps {
   sealed trait Metric
 
   /** Rows of the new state matching `pred` — a BFS frontier. A chunk's job
-    * counts every substep in one union aggregate keyed by substep. An empty
-    * frontier sends no messages, so counts are monotone to zero within a
-    * chunk and the overshoot substeps are identity maps. The first substep
+    * (one, if broadcast-free) counts every substep in one union aggregate
+    * keyed by substep. An empty frontier sends no messages, so counts are
+    * monotone to zero within a chunk and the overshoot substeps are
+    * identity maps. The first substep
     * of a chunk records the previous count, the frontier it stepped from,
     * in its checkpoint's metadata — except in a run's first chunk, whose job
     * counts the starting frontier too, so the count is not known when that

@@ -82,19 +82,26 @@ class AlgoSpec extends SparkTestBase {
   }
 
   test("components resumes from DirMaterializer after a maxIter cap: same labels and rounds") {
-    // a 64-vertex path needs several rounds; the ER part adds components
+    // a 64-vertex path needs several rounds; the ER part adds components.
+    // Components.run takes no round cap, so the cap is made on the
+    // checkpoints: every round after 2 is deleted before the resume
     val edges = erGraph(40, 0.04, seed = 5) ++ (100L until 163L).map(i => i -> (i + 1))
     val adj = adjOf(edges)
     def labels(r: Components.Result) =
       r.labels.collect().map(x => x.getAs[Long]("id") -> x.getAs[Long]("label")).toMap
     val fresh = Components.run(spark, adj)
-    assert(fresh.iterations > 2, "want the cap to interrupt the run")
+    assert(fresh.iterations > 2, "want the interruption to cut the run short")
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
-    // phase 1: stop after 2 rounds by capping maxIter
-    assert(Components.run(spark, adj, maxIter = 2, mat = new DirMaterializer(spark, dir))
-      .iterations === 2)
+    // phase 1: a complete run, then every round after 2 deleted, as a run
+    // interrupted after round 2 leaves its checkpoints
+    assert(Components.run(spark, adj, mat = new DirMaterializer(spark, dir))
+      .iterations === fresh.iterations)
+    truncateIters(dir, keep = 2)
     // phase 2: a NEW run resumes at round 2 and runs to the fixpoint
-    val resumed = Components.run(spark, adj, mat = new DirMaterializer(spark, dir))
+    var rounds = Vector.empty[Int]
+    val resumed = Components.run(spark, adj, mat = new DirMaterializer(spark, dir),
+      onSuperstep = (i, _) => rounds :+= i)
+    assert(rounds === (3 to fresh.iterations))
     assert(resumed.iterations === fresh.iterations)
     assert(labels(resumed) === labels(fresh))
   }
@@ -161,22 +168,31 @@ class AlgoSpec extends SparkTestBase {
 
   test("row-bfs states sit in their asserted hash(pivot, id) partitions") {
     // stripState asserts HashPartitioning(pivot, id) on every superstep
-    // state; check the rows against the partition Spark's hash exchange
-    // would pick: pmod(Murmur3 seed 42, P), which SQL `hash` computes
-    val adj = adjOf(erGraph(60, 0.07, seed = 10))
-    val pivots = Seq(0L, 7L, 13L).toDF("pivot")
+    // state; check the rows of the kept state against the partition Spark's
+    // hash exchange would pick: pmod(Murmur3 seed 42, P), which SQL `hash`
+    // computes. A path from pivot 100 one to four hops longer than any ER
+    // distance sets the visit's depth, so the kept state (the first empty
+    // frontier) falls at each position of a chunk of 4.
+    val er = erGraph(60, 0.07, seed = 10)
+    val a = InMemoryOracle.adj(er)
+    val erDepth = Seq(0L, 7L, 13L).map(p => InMemoryOracle.bfs(a, p).values.max).max
+    val pivots = Seq(0L, 7L, 13L, 100L).toDF("pivot")
     // the loop's session inherits the partition count from the caller's
     val prior = spark.conf.get("spark.sql.shuffle.partitions")
-    for (p <- Seq(3, 7); supersteps <- 1 to 3) {
-      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-      val state = try MultiBfs.run(spark, adj, pivots, maxIter = supersteps)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prior)
-      assert(state.rdd.getNumPartitions === p)
-      val misplaced = state
-        .where(spark_partition_id() =!= pmod(hash(col("pivot"), col("id")), lit(p)))
-        .count()
-      assert(misplaced === 0L, s"P = $p, supersteps = $supersteps")
-      assert(state.where(col("dist") === supersteps).count() > 0L, s"P = $p, supersteps = $supersteps")
+    for (depth <- erDepth + 1 to erDepth + 4) {
+      val adj = adjOf(er ++ (100L until 100L + depth).map(i => i -> (i + 1)))
+      for (p <- Seq(3, 7)) {
+        spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+        val state = try MultiBfs.run(spark, adj, pivots)
+          finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+        assert(state.rdd.getNumPartitions === p)
+        val misplaced = state
+          .where(spark_partition_id() =!= pmod(hash(col("pivot"), col("id")), lit(p)))
+          .count()
+        assert(misplaced === 0L, s"P = $p, depth = $depth")
+        assert(state.agg(max("dist")).head().getInt(0) === depth, s"P = $p, depth = $depth")
+      }
+      adj.unpersist()
     }
   }
 
@@ -365,6 +381,18 @@ class AlgoSpec extends SparkTestBase {
       onSuperstep = (d, c) => steps :+= ((d, c))).collect()
     assert(rows.isEmpty)
     assert(steps.isEmpty)
+  }
+
+  test("both visit forms reach every vertex of a 300-hop path at its exact distance") {
+    // no depth limit: like the reference's visit, each form stops only at
+    // its empty frontier, here 300 supersteps from vertex 0
+    val adj = adjOf((0L until 300L).map(i => i -> (i + 1)))
+    val pivots = Seq(0L).toDF("pivot")
+    val expected = (0L to 300L).map(v => (0L, v, v.toInt)).toSet
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(rows(MultiBfs.run(spark, adj, pivots)) === expected, "row BFS")
+    assert(rows(BitsetRows(BitsetBfs.visit(spark, adj, pivots, maskCols = 1))) === expected,
+      "bitset BFS")
   }
 
   test("multi-source BFS distances match oracle on ER graph") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.algo.{BitsetBfs, Chechik, Components, LabelProp, MultiBfs, PageRank}
+import graft.algo.{BitsetBfs, Chechik, Components, LabelProp, MultiBfs, PageRank, Visit}
 import graft.core.{DirMaterializer, LocalMaterializer, Supersteps}
 import org.apache.spark.graft.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -67,9 +67,12 @@ class MaterializerSpec extends SparkTestBase {
     // batches of k = 5, then the caller's collect
     val adj = adjOf(erGraph(80, 0.06, seed = 8))
     adj.count()
-    val jobs = loopJobs(() =>
-      Chechik.topkCloseness(spark, adj, k = 5, eps = 0.5, batchSize = 5)._1.collect())
-    assert(jobs === 219)
+    val run = () => Chechik.topkCloseness(spark, adj, k = 5, eps = 0.5, batchSize = 5)._1.collect()
+    assert(loopJobs(run) === 217, "row visits")
+    // every visit on the bitset form, all on the session of the one Prep
+    val prior = Visit.bitsetAbove
+    val bitsetJobs = try { Visit.bitsetAbove = 0L; loopJobs(run) } finally Visit.bitsetAbove = prior
+    assert(bitsetJobs === 181, "bitset visits")
   }
 
   test("BitsetBfs.visit on LocalMaterializer(window = 1): the default's farness") {

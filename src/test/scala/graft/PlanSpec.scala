@@ -39,25 +39,27 @@ class PlanSpec extends SparkTestBase {
     // adjacency from BitsetBfs.prepare, a superstep's only Exchange is the
     // tile-message groupBy — the frontier⋈cadj (on chunk, pos) and
     // state⟕messages (on chunk) joins are both co-partitioned shuffled-hash.
-    // Assert it on the real physical plan in a bench-shaped session (AQE
-    // off, fixed partitions).
-    val s = spark.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    // the loop sets this itself (BitsetBfs.waves); superstep is called
-    // directly here
-    s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    import s.implicits._
+    // Assert it on the real physical plan, on the session of a Prep built
+    // from the AQE-on suite session: prepare opens the loop's own session,
+    // so cadj keeps its hash(chunk) partitioning at the shuffle-partition
+    // count instead of an AQE-coalesced one every superstep re-shuffles.
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
     val prep = graft.algo.BitsetBfs.prepare(
-      graft.core.Graph.adjacency(graft.core.Graph.symmetrize(
-        Seq(0L -> 1L, 1L -> 2L, 2L -> 3L, 3L -> 0L).toDF("src", "dst"))))
+      graft.core.Graph.adjacency(graft.core.Graph.symmetrize(spark.createDataFrame(
+        Seq(0L -> 1L, 1L -> 2L, 2L -> 3L, 3L -> 0L)).toDF("src", "dst"))))
+    val loop = prep.cadj.sparkSession
+    prep.cadj.queryExecution.executedPlan.outputPartitioning match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        assert(h.numPartitions === spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      case other => fail(s"cadj partitioning $other")
+    }
     // one chunk tile at the REAL chunk width (round-4 advice: a 64-element
     // fixture only passed because the plan was never run), vertex 0's bit 0
     // newly set
     val cs = graft.algo.BitsetBfs.ChunkSize
     val tile = (0 until cs).map(i => if (i == 0) 1L else 0L)
     val state = org.apache.spark.sql.graft.CheckpointStats.strip(
-      Seq((0L, tile, tile))
+      loop.createDataFrame(Seq((0L, tile, tile)))
         .toDF("chunk", "ns", "vs")
         .repartition(col("chunk"))
         .localCheckpoint(true))

@@ -154,12 +154,17 @@ class ProgressiveSpec extends SparkTestBase {
     val full = MultiBfs.run(spark, adj, pivots)
       .collect().map(r => (r.getAs[Long]("pivot"), r.getAs[Long]("id")) -> r.getAs[Int]("dist")).toMap
 
-    // phase 1: stop after 2 supersteps by capping maxIter
+    // phase 1: a complete run, then every superstep after 2 deleted, as a
+    // run interrupted after superstep 2 leaves its checkpoints
     val dir = java.nio.file.Files.createTempDirectory("graft_bfs_ckpt").toString
-    MultiBfs.run(spark, adj, pivots, maxIter = 2, mat = new DirMaterializer(spark, dir))
+    MultiBfs.run(spark, adj, pivots, mat = new DirMaterializer(spark, dir))
+    truncateIters(dir, keep = 2)
     // phase 2: a NEW run resumes from the checkpoints and completes
-    val resumed = MultiBfs.run(spark, adj, pivots, mat = new DirMaterializer(spark, dir))
+    var steps = Vector.empty[Int]
+    val resumed = MultiBfs.run(spark, adj, pivots, mat = new DirMaterializer(spark, dir),
+      onSuperstep = (i, _) => steps :+= i)
       .collect().map(r => (r.getAs[Long]("pivot"), r.getAs[Long]("id")) -> r.getAs[Int]("dist")).toMap
+    assert(steps.head === 3)
     assert(resumed === full)
   }
 

@@ -48,6 +48,17 @@ trait SparkTestBase extends AnyFunSuite {
     } yield (i.toLong, j.toLong)).toSeq
   }
 
+  /** Delete a `DirMaterializer`'s `iter=*` directories after iteration
+    * `keep`: what a run interrupted there leaves behind.
+    */
+  def truncateIters(dir: String, keep: Int): Unit = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    Files.list(Paths.get(dir)).iterator.asScala.toSeq
+      .filter(_.getFileName.toString.stripPrefix("iter=").toIntOption.exists(_ > keep))
+      .foreach(d => Files.walk(d).iterator.asScala.toSeq.reverse.foreach(Files.delete(_)))
+  }
+
   def approxEqual(a: Double, b: Double, tol: Double = 1e-6): Boolean =
     math.abs(a - b) <= tol * math.max(1.0, math.max(math.abs(a), math.abs(b)))
 }
