@@ -363,7 +363,7 @@ object SparkEntry {
       val verts = Graph.vertices(sym).localCheckpoint(true)
       val n = verts.count()
       val pivots = verts.orderBy("id").limit(16).select(col("id").as("pivot"))
-      val visits = new Visit.Selector(s, adj, n)
+      val visits = new Visit.Selector(adj, n)
       val v = visits(pivots, math.min(16L, n))
       val coef = Chechik.estimatorCoefficients(v, verts, n)
       v.release()

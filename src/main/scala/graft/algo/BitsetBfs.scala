@@ -94,12 +94,13 @@ object BitsetBfs {
   }
 
   /** Build a [[Prep]] from `Graph.adjacency` output (src, salt?, neighbors,
-    * degree): one arcs-row repartition to hash(chunk), checkpointed on a new
-    * [[session]], which every visit over the Prep runs on.
+    * degree): one arcs-row repartition to hash(chunk), checkpointed on the
+    * bitset [[session]] of the adjacency's session, which every visit over
+    * the Prep runs on. Inside a run that session is cloned once from the
+    * run's; an adjacency already on a bitset session keeps it.
     */
-  def prepare(adjacency: DataFrame): Prep = prepare(adjacency, session(adjacency.sparkSession))
-
-  private def prepare(adjacency: DataFrame, sess: SparkSession): Prep = {
+  def prepare(adjacency: DataFrame): Prep = {
+    val sess = session(adjacency.sparkSession)
     val cadj = bind(adjacency, sess).select(
         shiftright(col("src"), ChunkBits).as("chunk"),
         col("src").bitwiseAND(lit((ChunkSize - 1).toLong)).cast("int").as("pos"),
@@ -111,7 +112,9 @@ object BitsetBfs {
   }
 
   /** The bitset loop's session: a [[graft.core.Supersteps.session]] of
-    * `spark` with two tile confs.
+    * `spark` with two tile confs, `spark` itself if it is one. A run's
+    * session cannot carry them: with the co-partitioning rule off, the row
+    * BFS's first merge keeps iteration 0's hash(pivot) placement.
     *  - adaptive execution off (every loop's session): the plans are the
     *    static ones PlanSpec asserts; under AQE, `cadj` would be coalesced
     *    to an unknown partitioning that every superstep re-shuffles.
@@ -272,11 +275,12 @@ object BitsetBfs {
     * the loop retains them (`Supersteps.run`'s `retain`) and
     * [[Visit.release]] frees them.
     *
-    * The visit runs on its Prep's session: `prep`'s, or else a new
-    * [[session]] of `spark` where it builds its own Prep once it has pivots.
-    * The Visit's frames are bound back to `spark`, so its lazy aggregates
-    * (plain scans and aggregates over checkpointed frames) plan under the
-    * caller's confs.
+    * The visit runs on its Prep's session: `prep`'s, or else the bitset
+    * [[session]] of `spark` (a clone, unless `spark` is one), where it
+    * builds its own Prep once it has pivots. The Visit's frames are bound
+    * back to `spark`, so its lazy aggregates (plain scans and aggregates
+    * over checkpointed frames) plan under `spark`'s confs: a run's session
+    * inside a run, else the caller's.
     */
   def visit(
       spark: SparkSession,
@@ -323,7 +327,7 @@ object BitsetBfs {
     def newlyTiles(state: DataFrame): DataFrame =
       state.where(tileNonZero("ns")).select(col("chunk"), col("ns").as("tile"))
 
-    val inputs = if (nWaves == 0 || prep != null) prep else prepare(adjacency, sess)
+    val inputs = if (nWaves == 0 || prep != null) prep else prepare(bind(adjacency, sess))
 
     var incs = Vector.empty[(Int, Int, DataFrame)]
     var statesAcc = Vector.empty[DataFrame]

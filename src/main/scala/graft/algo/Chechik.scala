@@ -1,8 +1,9 @@
 package graft.algo
 
-import graft.core.{Materializer, LocalMaterializer}
+import graft.core.{Materializer, LocalMaterializer, Supersteps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointStats.bind
 
 /** Chechik–Cohen–Kaplan sampled top-k closeness (the reference's flagship,
   * ChechikEstimator.java + ChechikFarnessEstimator.java +
@@ -31,6 +32,13 @@ import org.apache.spark.sql.functions._
   * Every BFS of a run — estimator, sample, one per certification batch —
   * comes from one [[Visit.Selector]], which picks its physical form and
   * states what the forms agree on.
+  *
+  * A run is planned on one loop session ([[graft.core.Supersteps.session]],
+  * AQE off and the co-partitioning rule pinned), opened at its entry: the
+  * set-up, the certification checks, the top-k boundary and every row
+  * visit plan there, so a run submits the same jobs whatever the caller's
+  * AQE setting. Bitset visits run on their Prep's bitset session, cloned
+  * once from the run's. The top-k is bound back to the caller's session.
   *
   * Determinism: the reference uses Math.random() (ChechikEstimator.java:60);
   * we use xxhash64-derived uniforms keyed by (seed, vertex id) — fully
@@ -84,11 +92,13 @@ object Chechik {
       mat: Materializer = new LocalMaterializer()): (DataFrame, Telemetry) = {
 
     var supersteps = 0L
+    val sess = Supersteps.session(spark)
+    val adj = bind(adjacency, sess)
 
     // lazy checkpoint: the count is the one job that materializes it
-    val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(eager = false)
+    val verts = adj.select(col("src").as("id")).distinct().localCheckpoint(eager = false)
     val n = verts.count()
-    val visits = new Visit.Selector(spark, adjacency, n, (_, _) => supersteps += 1)
+    val visits = new Visit.Selector(adj, n, (_, _) => supersteps += 1)
 
     // steps 1-3 and the Bernoulli draw are skipped when K ≥ n: λ_v ≥ 1/n
     // makes every p_v = min(1, K·λ_v) equal to 1, and u01 < 1, so the
@@ -178,8 +188,9 @@ object Chechik {
           .select(col("id").as("pivot"))
         // exact farness per batch pivot
         val vBatch = visits(batchIds, batch)
-        val next = mat.iterate(processed.unionAll(vBatch.farness), (l / batch).toInt,
-          certified.toDouble)
+        // a DirMaterializer reads back through its own session
+        val next = bind(mat.iterate(processed.unionAll(vBatch.farness), (l / batch).toInt,
+          certified.toDouble), sess)
         // `next` is materialized (mat.iterate is eager): the batch visit's
         // cached state and the processed set it replaces are dead now
         vBatch.release()
@@ -213,6 +224,6 @@ object Chechik {
       n = n, initialPivots = nPivots, sampleSize = sampleSize,
       exactBfs = exactBfs, totalBfs = nPivots + sampleSize + exactBfs,
       supersteps = supersteps)
-    (topk, telemetry)
+    (bind(topk, spark), telemetry)
   }
 }

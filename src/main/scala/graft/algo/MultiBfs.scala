@@ -37,9 +37,11 @@ import org.apache.spark.sql.graft.CheckpointStats.bind
   * to either input, so the checkpoint records UnknownPartitioning even
   * though every row physically sits in its hash(pivot, id) partition —
   * [[org.apache.spark.sql.graft.CheckpointStats.stripHashPartitioned]]
-  * restores the truth, and the loop's session has AQE off
-  * ([[graft.core.Supersteps.session]]) so no runtime coalesce/skew rewrite
-  * can invalidate the assertion. The pre-round-6
+  * restores the truth, and the loop's session has AQE off and
+  * `requireAllClusterKeysForCoPartition` on
+  * ([[graft.core.Supersteps.session]]), so neither a runtime coalesce/skew
+  * rewrite nor a merge that keeps a hash(pivot) side can invalidate the
+  * assertion. The pre-round-6
   * shape (state ∪ messages → one big groupBy) re-shuffled AND re-aggregated
   * |V| + Σ deg rows every superstep: at a 1266-pivot Chechik sample visit
   * over the sf0.1 sparse graph that was ~19M state rows × 11 supersteps of
@@ -91,8 +93,9 @@ object MultiBfs {
       .select(col("pivot"), col("pivot").as("id"),
         lit(0).as("dist"), lit(true).as("isNew"))
 
-    // the loop's session has AQE off (iteration 0's distinct runs inside the
-    // first chunk's job): stripState asserts the static plan's placement
+    // the loop's session has AQE off and the co-partitioning rule on
+    // (iteration 0's distinct runs inside the first chunk's job): stripState
+    // asserts the static plan's placement
     val (d, state) = Supersteps.start(mat, init)
     val end = Supersteps.run(mat, state, d, Int.MaxValue, step(_, adjacency), settle = stripState,
       metric = Some(Supersteps.Count(col("isNew"))), stop = _ == 0,

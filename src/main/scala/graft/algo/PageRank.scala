@@ -19,6 +19,11 @@ import org.apache.spark.sql.graft.CheckpointStats.bind
   * (the reference's `volatile stop` analogue, SURVEY.md §3.4); or fixed
   * `maxIter` when `tol <= 0` (used by the DuckDB-oracle query, which unrolls
   * the same recurrence in SQL).
+  *
+  * A run plans on one loop session ([[graft.core.Supersteps.session]]),
+  * opened at its entry: the vertex count and every superstep plan there,
+  * whatever the caller's AQE setting, and the ranks are bound back to the
+  * caller's session.
   */
 object PageRank {
 
@@ -33,8 +38,9 @@ object PageRank {
       mat: Materializer = new LocalMaterializer(),
       onSuperstep: (Int, Double) => Unit = (_, _) => ()): Result = {
 
+    val adj = bind(adjacency, Supersteps.session(spark))
     // lazy checkpoint: the count is the materializing action (one job)
-    val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(false)
+    val verts = adj.select(col("src").as("id")).distinct().localCheckpoint(false)
     val n = verts.count()
     val nInv = 1.0 / n
 
@@ -48,7 +54,7 @@ object PageRank {
     // delta joins two already-checkpointed frames and yields a scalar, so
     // its (large) join stats die with the job.
     def step(prev: DataFrame): DataFrame = {
-      val msgs = prev.join(adjacency, prev("id") === adjacency("src"))
+      val msgs = prev.join(adj, prev("id") === adj("src"))
         .select(explode(col("neighbors")).as("id"), (col("pr") / col("degree")).as("w"))
         .groupBy("id")
         .agg(sum("w").as("msg"))

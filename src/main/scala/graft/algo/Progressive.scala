@@ -1,8 +1,9 @@
 package graft.algo
 
-import graft.core.{Materializer, Rank}
+import graft.core.{Materializer, Rank, Supersteps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointStats.bind
 
 /** R3 — the progressive-sampling driver loop (the reference's TopCloseness
   * variant, TopCloseness.java:76-107 + Sorter.java:36-53):
@@ -64,6 +65,12 @@ object Progressive {
     * ([[Geometric.reverseFarness]]) adds into `approxFarness[v]`. Both
     * accumulators are checkpointed before the visit, and the accumulators
     * they replace, are released.
+    *
+    * The run plans on one loop session ([[graft.core.Supersteps.session]]:
+    * AQE off, co-partitioning rule pinned), opened here: the vertex count,
+    * pivot picks, accumulators, ranks and snapshots plan there, and so do
+    * row visits; bitset visits run on the bitset session of their shared
+    * Prep, cloned once from it. The result is bound back to `spark`.
     */
   def run(
       spark: SparkSession,
@@ -71,9 +78,10 @@ object Progressive {
       batchSize: Int,
       numBatches: Int,
       snapshotDir: Option[String] = None): DataFrame = {
-    val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(true)
-    val deg = adjacency.select(col("src").as("id"), col("degree")).distinct()
-    val visits = new Visit.Selector(spark, adjacency, verts.count())
+    val adj = bind(adjacency, Supersteps.session(spark))
+    val verts = adj.select(col("src").as("id")).distinct().localCheckpoint(true)
+    val deg = adj.select(col("src").as("id"), col("degree")).distinct()
+    val visits = new Visit.Selector(adj, verts.count())
 
     var exactF: Option[DataFrame] = None // (id, farness) for processed
     var apxF: Option[DataFrame] = None   // (id, r) accumulated reverse farness
@@ -111,6 +119,6 @@ object Progressive {
     }
     visits.release()
 
-    farnessSort(verts, exactF.get, apxF.get)
+    bind(farnessSort(verts, exactF.get, apxF.get), spark)
   }
 }

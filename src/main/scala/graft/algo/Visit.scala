@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** A completed multi-source BFS, read through aggregates only: each source's
   * exact farness and the per-target sums and maxima of the sampling
@@ -51,12 +51,15 @@ object Visit {
     * are not bit-identical across forms; a certified top-k is exact either
     * way.
     *
-    * Bitset visits share one [[BitsetBfs.Prep]], built on the first of them
-    * and freed by [[release]], and run on the session its `prepare` opened.
-    * Every visit stops only at its empty frontier; `onSuperstep` sees all.
+    * Every visit plans on `adjacency`'s session and binds its result to it.
+    * Inside a run (Chechik, Progressive) that is the run's loop session
+    * ([[graft.core.Supersteps.session]]): row visits loop on it, and bitset
+    * visits share one [[BitsetBfs.Prep]], built on the first of them and
+    * freed by [[release]], and loop on the bitset session its `prepare`
+    * cloned from the run's once. Every visit stops only at its empty
+    * frontier; `onSuperstep` sees all.
     */
   final class Selector(
-      spark: SparkSession,
       adjacency: DataFrame,
       n: Long,
       onSuperstep: (Int, Long) => Unit = (_, _) => ()) {
@@ -72,9 +75,9 @@ object Visit {
     def apply(sources: DataFrame, count: Long): Visit =
       if (useBitset(count)) {
         if (prep == null) prep = BitsetBfs.prepare(adjacency)
-        BitsetBfs.visit(spark, adjacency, sources, maskCols = maskColsFor(count),
+        BitsetBfs.visit(adjacency.sparkSession, adjacency, sources, maskCols = maskColsFor(count),
           onSuperstep = onSuperstep, prep = prep)
-      } else MultiBfs.visit(spark, adjacency, sources, onSuperstep)
+      } else MultiBfs.visit(adjacency.sparkSession, adjacency, sources, onSuperstep)
 
     def release(): Unit = if (prep != null) { prep.release(); prep = null }
   }

@@ -83,9 +83,6 @@ object Ann {
       when(emb.getItem(band * nBits + i) > 0f, lit(1L << i)).otherwise(0L)
     }.reduce(_ + _)
 
-  /** Single-band convenience (band 0). */
-  def signBucket(emb: Column, nBits: Int): Column = bandBucket(emb, 0, nBits)
-
   /** (vec_id, band, bucket) — one row per (vector, band). */
   private def bandBuckets(embs: DataFrame, nBits: Int, bands: Int): DataFrame =
     embs.select(col("vec_id"), explode(array((0 until bands).map { bd =>

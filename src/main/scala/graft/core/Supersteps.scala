@@ -23,13 +23,16 @@ import org.apache.spark.sql.graft.CheckpointStats.{bind, cloneSession}
   * Every loop starts at [[start]], so no loop counts or eagerly checkpoints
   * its starting state: the first chunk's job does.
   *
-  * Every loop runs on its own [[session]], a clone of the caller's with AQE
-  * off: a chunk is then one job if its plan has no broadcast join (AQE
-  * would submit each query stage as its own; planning a lazy checkpoint
-  * submits a job per `BroadcastExchange`, and the union job broadcasts
-  * again), and MultiBfs's asserted state placement is the static plan's.
-  * The caller's session is never written to, and each loop hands its
-  * result back bound to it.
+  * Every loop runs on a loop [[session]], a clone of the caller's with AQE
+  * off and the co-partitioning rule pinned: a chunk is then one job if its
+  * plan has no broadcast join (AQE would submit each query stage as its
+  * own; planning a lazy checkpoint submits a job per `BroadcastExchange`,
+  * and the union job broadcasts again), and MultiBfs's asserted state
+  * placement is the static plan's. An algorithm run (Chechik, Progressive,
+  * PageRank) opens one at its entry point and plans its set-up there; every
+  * loop and visit inside the run gets that session back from [[session]]
+  * instead of cloning its own. The caller's session is never written to,
+  * and each run hands its result back bound to it.
   *
   * A chunk of length 1 (`DirMaterializer`, or `LocalMaterializer` with
   * `window = 1`) is the eager loop: one checkpoint and one metric job per
@@ -63,19 +66,42 @@ object Supersteps {
   /** Where the loop stopped: the kept state, its iteration, its metric. */
   final case class Result(state: DataFrame, iter: Int, metric: Double)
 
-  /** A clone of `spark` (same SparkContext and CacheManager, every conf
-    * copied) with AQE off and `confs` set: the loop's own session.
+  /** The loop sessions [[session]] made, held weakly and told apart by
+    * identity: a caller's session is never one of them, whatever its confs.
+    */
+  private val made = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(new java.util.WeakHashMap[SparkSession, java.lang.Boolean]))
+
+  /** A loop session: `spark` itself if it is one this method made with the
+    * same confs, else a clone of `spark` (same SparkContext and
+    * CacheManager, every conf copied) with them set. The confs are AQE off,
+    * `requireAllClusterKeysForCoPartition` on (a join on (pivot, id)
+    * re-exchanges a side hash-partitioned on pivot alone, so MultiBfs's
+    * first merge cannot keep iteration 0's hash(pivot) placement under the
+    * hash(pivot, id) that `stripState` asserts), then `confs`, which may
+    * override both. There are two kinds: a run's session, with no
+    * `confs`, and the bitset session a [[graft.algo.BitsetBfs.Prep]] plans
+    * on, with its two tile confs. Reusing a run's session is what makes it
+    * one session per run; a caller's session is always cloned, so a caller
+    * that changes its own confs never reaches a running loop.
     */
   def session(spark: SparkSession, confs: (String, String)*): SparkSession = {
-    val s = cloneSession(spark)
-    (("spark.sql.adaptive.enabled" -> "false") +: confs).foreach { case (k, v) => s.conf.set(k, v) }
-    s
+    val pinned = (Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "true") ++ confs).toMap
+    if (made.contains(spark) && pinned.forall { case (k, v) => spark.conf.getOption(k).contains(v) }) spark
+    else {
+      val s = cloneSession(spark)
+      pinned.foreach { case (k, v) => s.conf.set(k, v) }
+      made.add(s)
+      s
+    }
   }
 
-  /** Where a loop starts, bound to a new [[session]] of `init`'s: the last
-    * increment `mat` resumes, projected to `init`'s columns, or else `init`
-    * deferred as iteration 0 — the first chunk's job of [[run]]
-    * materializes it (and, for a [[Count]] loop, counts its frontier).
+  /** Where a loop starts, bound to the [[session]] of `init`'s session
+    * (inside a run, the run's own): the last increment `mat` resumes,
+    * projected to `init`'s columns, or else `init` deferred as iteration 0
+    * — the first chunk's job of [[run]] materializes it (and, for a
+    * [[Count]] loop, counts its frontier).
     */
   def start(mat: Materializer, init: DataFrame): (Int, DataFrame) = {
     val s = session(init.sparkSession)

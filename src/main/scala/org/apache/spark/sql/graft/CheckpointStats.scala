@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.internal.SQLConf
 
 /** Catalyst plumbing that needs `private[sql]` access (`Dataset.ofRows`), so
   * it lives in an `org.apache.spark.sql` subpackage — a plain shim over the
@@ -39,8 +40,9 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * [[cloneSession]] and [[bind]] (`private[sql]` `cloneSession` and
   * `Dataset.ofRows`) are the session shims behind
-  * `graft.core.Supersteps.session`: every superstep loop runs on its own
-  * clone of the caller's session.
+  * `graft.core.Supersteps.session`: every superstep loop runs on a loop
+  * session cloned from the caller's, one per algorithm run (plus the
+  * bitset session of a run's bitset visits).
   */
 object CheckpointStats {
 
@@ -63,19 +65,27 @@ object CheckpointStats {
     * caller must guarantee exactly that invariant: the frame is the
     * (projected) output of a co-partitioned join/aggregate keyed on `keys`,
     * planned with AQE off (coalesced or skew-split partitions are NOT a
-    * `HashPartitioning` — asserting one over them would silently misjoin).
-    * Used by the MultiBfs superstep loop, whose session has AQE off
-    * (`graft.core.Supersteps.session`). No-op for plans that are not a bare
-    * `LogicalRDD`.
+    * `HashPartitioning` — asserting one over them would silently misjoin)
+    * and with `requireAllClusterKeysForCoPartition` on (off, a join on
+    * `keys` may keep a side's placement on a subset of them). Used by the
+    * MultiBfs superstep loop, whose session pins both
+    * (`graft.core.Supersteps.session`). No-op for plans that are not a
+    * bare `LogicalRDD`.
     *
-    * @throws IllegalStateException if AQE is on for the frame's session —
-    *         the misuse that would otherwise misjoin silently.
+    * @throws IllegalStateException if the frame's session has AQE on or
+    *         the co-partitioning rule off — the misuses that would
+    *         otherwise misjoin silently.
     */
   def stripHashPartitioned(df: DataFrame, keys: Seq[String]): DataFrame = {
-    if (df.sparkSession.asInstanceOf[ClassicSession].sessionState.conf.adaptiveExecutionEnabled)
+    val conf = df.sparkSession.asInstanceOf[ClassicSession].sessionState.conf
+    if (conf.adaptiveExecutionEnabled)
       throw new IllegalStateException(
         "stripHashPartitioned: spark.sql.adaptive.enabled is true; the asserted " +
           "hash partitioning is only valid for frames planned with AQE off")
+    if (!conf.getConf(SQLConf.REQUIRE_ALL_CLUSTER_KEYS_FOR_CO_PARTITION))
+      throw new IllegalStateException(
+        "stripHashPartitioned: spark.sql.requireAllClusterKeysForCoPartition is false; " +
+          "the asserted hash partitioning is only valid for frames planned with it true")
     rebuild(df, Some(keys))
   }
 

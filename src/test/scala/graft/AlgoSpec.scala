@@ -237,7 +237,7 @@ class AlgoSpec extends SparkTestBase {
     try {
       Visit.bitsetAbove = 0L
       val adj = adjOf(path4)
-      assert(new Visit.Selector(spark, adj, n = 4)(Seq(0L).toDF("pivot"), 1L)
+      assert(new Visit.Selector(adj, n = 4)(Seq(0L).toDF("pivot"), 1L)
         .isInstanceOf[BitsetBfs.Visit])
       keepProbabilitiesBelowOne()
     } finally Visit.bitsetAbove = prior

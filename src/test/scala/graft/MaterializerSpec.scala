@@ -45,9 +45,9 @@ class MaterializerSpec extends SparkTestBase {
   test("superstep loops: Spark jobs per run pinned for each loop and materializer") {
     import spark.implicits._
     // 29-hop path from both endpoints: BFS depth 29, the last chunk of 4
-    // overshoots. The suite session runs with AQE on and every loop on its
-    // own AQE-off session, so only set-up outside a loop (PageRank's vertex
-    // count) adds query-stage jobs.
+    // overshoots. The suite session runs with AQE on, and every loop and
+    // PageRank's vertex count plan on an AQE-off loop session, so no count
+    // below holds a query-stage job.
     val adj = adjOf((0L until 29L).map(i => i -> (i + 1)))
     adj.count()
     val pivots = Seq(0L, 29L).toDF("pivot")
@@ -55,11 +55,17 @@ class MaterializerSpec extends SparkTestBase {
     assert(loopJobs(() => MultiBfs.run(spark, adj, pivots,
       mat = new LocalMaterializer(window = 1))) === 60, "row BFS, window = 1")
     assert(loopJobs(() => BitsetBfs.visit(spark, adj, pivots, maskCols = 1)) === 12, "bitset BFS")
-    assert(loopJobs(() => PageRank.run(spark, adj, maxIter = 2, tol = 1e-6)) === 8, "PageRank")
+    assert(loopJobs(() => PageRank.run(spark, adj, maxIter = 2, tol = 1e-6)) === 7, "PageRank")
     assert(loopJobs(() => LabelProp.run(spark, adj, rounds = 1,
       mat = new DirMaterializer(spark,
         java.nio.file.Files.createTempDirectory("graft_lpa_jobs").toString))) === 3, "LabelProp")
     assert(loopJobs(() => Components.run(spark, adj)) === 2, "Components")
+  }
+
+  /** `body` with every visit a `Visit.Selector` makes on the bitset form. */
+  private def onBitset[T](body: => T): T = {
+    val prior = Visit.bitsetAbove
+    try { Visit.bitsetAbove = 0L; body } finally Visit.bitsetAbove = prior
   }
 
   test("chechik with keep-probabilities < 1: Spark jobs per run pinned") {
@@ -68,11 +74,33 @@ class MaterializerSpec extends SparkTestBase {
     val adj = adjOf(erGraph(80, 0.06, seed = 8))
     adj.count()
     val run = () => Chechik.topkCloseness(spark, adj, k = 5, eps = 0.5, batchSize = 5)._1.collect()
-    assert(loopJobs(run) === 217, "row visits")
+    assert(loopJobs(run) === 164, "row visits")
     // every visit on the bitset form, all on the session of the one Prep
-    val prior = Visit.bitsetAbove
-    val bitsetJobs = try { Visit.bitsetAbove = 0L; loopJobs(run) } finally Visit.bitsetAbove = prior
-    assert(bitsetJobs === 181, "bitset visits")
+    assert(onBitset(loopJobs(run)) === 121, "bitset visits")
+  }
+
+  test("a chechik run submits the same jobs from an AQE-on and an AQE-off caller") {
+    // the run plans on its own loop session, whatever the caller's AQE; the
+    // caller's collect is not counted, since it plans on the caller's session
+    val adj = adjOf(erGraph(80, 0.06, seed = 8))
+    adj.count()
+    val off = spark.newSession()
+    off.conf.set("spark.sql.adaptive.enabled", "false")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    def jobs(caller: org.apache.spark.sql.SparkSession) =
+      loopJobs(() => Chechik.topkCloseness(caller, adj, k = 5, eps = 0.5, batchSize = 5))
+    assert(jobs(spark) === jobs(off), "row visits")
+    val (bitsetOn, bitsetOff) = onBitset((jobs(spark), jobs(off)))
+    assert(bitsetOn === bitsetOff, "bitset visits")
+  }
+
+  test("progressive: Spark jobs per run pinned on both visit forms") {
+    // 3 batches of 5 on ER(80), then the caller's collect
+    val adj = adjOf(erGraph(80, 0.06, seed = 8))
+    adj.count()
+    val run = () => graft.algo.Progressive.run(spark, adj, batchSize = 5, numBatches = 3).collect()
+    assert(loopJobs(run) === 45, "row visits")
+    assert(onBitset(loopJobs(run)) === 35, "bitset visits")
   }
 
   test("BitsetBfs.visit on LocalMaterializer(window = 1): the default's farness") {
@@ -126,10 +154,53 @@ class MaterializerSpec extends SparkTestBase {
     assert(before.head === Some("true"), "the suite session runs with AQE on")
     val adj = adjOf(path4)
     val pivots = Seq(0L).toDF("pivot")
-    MultiBfs.run(spark, adj, pivots)
-    assert(confs() === before, "after MultiBfs.run")
-    BitsetBfs.visit(spark, adj, pivots, maskCols = 1)
-    assert(confs() === before, "after BitsetBfs.visit")
+    val runs: Seq[(String, () => Any)] = Seq(
+      "MultiBfs.run" -> (() => MultiBfs.run(spark, adj, pivots)),
+      "BitsetBfs.visit" -> (() => BitsetBfs.visit(spark, adj, pivots, maskCols = 1)),
+      "PageRank.run" -> (() => PageRank.run(spark, adj, maxIter = 2)),
+      "Components.run" -> (() => Components.run(spark, adj)),
+      "LabelProp.run" -> (() => LabelProp.run(spark, adj, rounds = 1)),
+      "Chechik.topkCloseness" -> (() => Chechik.topkCloseness(spark, adj, k = 2, eps = 1.5)),
+      "Progressive.run" -> (() => graft.algo.Progressive.run(spark, adj, batchSize = 1, numBatches = 2)))
+    runs.foreach { case (name, run) =>
+      run()
+      assert(confs() === before, s"after $name")
+    }
+  }
+
+  test("Supersteps.session reuses a loop session it made and clones every caller's") {
+    val rule = "spark.sql.requireAllClusterKeysForCoPartition"
+    val run = Supersteps.session(spark)
+    assert(!(run eq spark))
+    assert(Supersteps.session(run) eq run, "a run's session")
+    val tile = Seq("spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "4194304", rule -> "false")
+    val bitset = Supersteps.session(run, tile: _*)
+    assert(!(bitset eq run), "a run's session, asked for other confs")
+    assert(Supersteps.session(bitset, tile: _*) eq bitset, "a bitset session")
+    assert(Supersteps.session(bitset).conf.get(rule) === "true", "a bitset session, asked for a run's")
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.adaptive.enabled", "false")
+    caller.conf.set(rule, "true")
+    assert(!(Supersteps.session(caller) eq caller), "a caller's session with every loop conf set")
+  }
+
+  test("MultiBfs.run is exact from a caller whose co-partitioning rule is off") {
+    // off, the first merge join could keep iteration 0's hash(pivot)
+    // placement, under the hash(pivot, id) the loop asserts for its state
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "3")
+    caller.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
+    import caller.implicits._
+    val edges = erGraph(60, 0.07, seed = 10)
+    val adj = graft.core.Graph.adjacency(graft.core.Graph.symmetrize(edges.toDF("src", "dst"))).cache()
+    val pivots = Seq(0L, 7L, 13L)
+    val got = MultiBfs.run(caller, adj, pivots.toDF("pivot")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    val oracle = InMemoryOracle.adj(edges)
+    val want = pivots.flatMap(p => InMemoryOracle.bfs(oracle, p).map { case (v, d) => (p, v, d) })
+    assert(got.size === want.size)
+    assert(got.toSet === want.toSet)
+    adj.unpersist()
   }
 
   test("concurrent MultiBfs.run and BitsetBfs.visit calls on one session: exact, and the caller's AQE never changes") {

@@ -143,6 +143,10 @@ class PlanSpec extends SparkTestBase {
       .localCheckpoint(true)
     intercept[IllegalStateException](graft.algo.MultiBfs.stripState(st))
     s.conf.set("spark.sql.adaptive.enabled", "false")
+    // and with the co-partitioning rule off, which the loop session pins on
+    s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
+    intercept[IllegalStateException](graft.algo.MultiBfs.stripState(st))
+    s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "true")
     assert(graft.algo.MultiBfs.stripState(st).collect().length == 1)
   }
 }

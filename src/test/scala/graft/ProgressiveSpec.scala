@@ -69,7 +69,7 @@ class ProgressiveSpec extends SparkTestBase {
       Visit.bitsetAbove = 0L
       val edges = erGraph(60, 0.06, seed = 21)
       val adj = adjOf(edges)
-      assert(new Visit.Selector(spark, adj, n = 60)(Seq(0L).toDF("pivot"), 1L)
+      assert(new Visit.Selector(adj, n = 60)(Seq(0L).toDF("pivot"), 1L)
         .isInstanceOf[BitsetBfs.Visit])
       val (farness, apx, order, processed) = oracle(edges, batchSize = 5, numBatches = 3)
       val got = Progressive.run(spark, adj, batchSize = 5, numBatches = 3)
