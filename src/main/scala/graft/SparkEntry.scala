@@ -111,8 +111,8 @@ object SparkEntry {
         .orderBy("id")
     }),
 
-    // G1/G2: connected components = min vertex ID per component (hash-min
-    // label propagation; reference prints the count, Main.java:59)
+    // G1/G2: connected components = min vertex ID per component
+    // (large-star/small-star contraction; reference prints the count, Main.java:59)
     "g6_cc" -> ((s, dir) => {
       val sym = Graph.symmetrize(Tpch.sparseEdges(s, dir, maxQty = 1.0))
       val adj = Graph.adjacency(sym).persist()

@@ -33,17 +33,19 @@ import org.apache.spark.sql.expressions.Window
   * across rounds (STATS DISCIPLINE — see PageRank).
   *
   * The loop is [[graft.core.Supersteps.run]]: a round is its `step`, and
-  * its metric is the size of the symmetric difference between the new edge
-  * set and the previous one — a full-outer probe of two distinct'd (hence
-  * duplicate-free) frames, co-partitioned on (src, dst) — which is 0
-  * exactly at the fixpoint. One union job per chunk measures every round of
-  * the chunk; the loop stops only at the first round whose edge set is
-  * unchanged, and keeps it, so labels and the round count equal a chunk
-  * length of 1. That one rule
-  * holds for every input: an edge set that is already a fixpoint (e.g.
-  * empty, when every edge is a self loop) still runs and keeps one round,
-  * so `iterations` is 1. The probe joins two checkpointed frames into a
-  * scalar, and its stats die with the job.
+  * its metric reads the new edge set alone — the count of vertices that
+  * break the star-forest shape, a child (`src`) that is also a root (`dst`)
+  * or a child with two roots. The round's output is distinct'd, so that is
+  * one grouped count per vertex. It is 0 exactly when the edge set is a
+  * forest of stars, which is the contraction's fixpoint: a star maps to
+  * itself. Contraction preserves connectivity and keeps every edge
+  * oriented src > dst, so each star is one component rooted at its
+  * minimum. One union job per chunk measures every round of the chunk; the
+  * loop stops at the first round whose edge set is a star forest, and
+  * keeps it, so labels and the round count equal a chunk length of 1. That
+  * one rule holds for every input: an edge set that already is a star
+  * forest (e.g. empty, when every edge is a self loop) still runs and keeps
+  * one round, so `iterations` is 1.
   *
   * Known skew note: the per-src window puts deg(u) rows in one task for a
   * hub u; the contraction itself is the mitigation — after one round every
@@ -54,10 +56,10 @@ object Components {
 
   case class Result(labels: DataFrame, iterations: Int)
 
-  /** @param onSuperstep (round, metric) per round: the metric is the
-    *                    round's changed-edge count, 0 on the last round of a
-    *                    converged run. No caller reads the value; perfbench
-    *                    counts the calls.
+  /** @param onSuperstep (round, metric) per round: the metric is the count
+    *                    of vertices that break the round's star shape, 0 on
+    *                    the last round of a converged run. No caller reads
+    *                    the value; perfbench counts the calls.
     */
   def run(
       spark: SparkSession,
@@ -67,11 +69,12 @@ object Components {
 
     val verts = adjacency.select(col("src").as("id")).distinct()
 
-    // edges oriented large→small; self loops drop (they never change labels)
+    // edges oriented large→small; self loops drop (they never change labels).
+    // A symmetrized adjacency holds each (src, dst) once; a duplicate never
+    // reaches the star check, which reads only `step`'s distinct'd outputs
     val init = adjacency
       .select(col("src"), explode(col("neighbors")).as("dst"))
       .where(col("src") > col("dst"))
-      .distinct()
 
     val (iter, edges) = Supersteps.start(mat, init)
 
@@ -93,25 +96,21 @@ object Components {
         .distinct()
     }
 
-    // fixpoint ⇔ the edge SET is unchanged ⇔ no row on one side only
-    val changed = (prev: DataFrame, next: DataFrame) =>
-      next.select(col("src"), col("dst"), lit(true).as("__new"))
-        .join(prev.select(col("src"), col("dst"), lit(true).as("__old")),
-          Seq("src", "dst"), "full_outer")
-        .agg(count(when(col("__new").isNull || col("__old").isNull, 1)).as("changed"))
+    // a star forest ⇔ no vertex is a child twice, or both a child and a root
+    val brokenStars = (_: DataFrame, next: DataFrame) =>
+      next.select(col("src").as("v"), lit(1).as("o"), lit(0).as("i"))
+        .unionAll(next.select(col("dst").as("v"), lit(0).as("o"), lit(1).as("i")))
+        .groupBy("v").agg(sum("o").as("o"), max("i").as("i"))
+        .agg(count(when(col("o") > 1 || (col("o") > 0 && col("i") > 0), 1)).as("broken"))
     val end = Supersteps.run(mat, edges, iter, Int.MaxValue, step,
-      metric = Some(Supersteps.Aggregate(changed)),
+      metric = Some(Supersteps.Aggregate(brokenStars)),
       stop = _ == 0, onStep = (i, _, c) => onSuperstep(i, c.toLong))
-    val fixpoint = end.state
+    val star = end.state
 
-    // fixpoint is a star per component: (child, root) edges, root = min id.
-    // Vertices absent from the star (isolated after self-loop drop) label
-    // themselves.
-    val starLabels = fixpoint.select(col("src").as("id"), col("dst").as("label"))
-      .unionAll(fixpoint.select(col("dst").as("id"), col("dst").as("label")))
-      .distinct()
+    // each child has exactly one root, the component minimum; a root, and a
+    // vertex absent from the star (isolated after self-loop drop), labels itself
     val labels = verts
-      .join(starLabels, Seq("id"), "left")
+      .join(star.select(col("src").as("id"), col("dst").as("label")), Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
     Result(bind(labels, spark), end.iter)
   }

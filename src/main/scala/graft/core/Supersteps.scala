@@ -58,8 +58,9 @@ object Supersteps {
   final case class Count(pred: Column) extends Metric
 
   /** A one-row, one-column aggregate of (previous state, new state) — e.g.
-    * PageRank's L∞ delta, Components' changed-edge count. A chunk's job is the union of the u one-row
-    * aggregates. Checkpoints record −1.
+    * PageRank's L∞ delta, or Components' count of vertices that break the
+    * star shape, which reads the new state alone. A chunk's job is the
+    * union of the u one-row aggregates. Checkpoints record −1.
     */
   final case class Aggregate(of: (DataFrame, DataFrame) => DataFrame) extends Metric
 

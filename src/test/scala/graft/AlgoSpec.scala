@@ -60,15 +60,60 @@ class AlgoSpec extends SparkTestBase {
   }
 
   test("components: exact labels on twocomp and disconnected ER") {
-    val l1 = Components.run(spark, adjOf(twocomp)).labels
-      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
-    assert(l1 === Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 2L))
+    // also stars, a path, a cycle, K5, ER graphs at two densities and a
+    // hand-built adjacency with duplicated neighbours
+    def check(name: String, adj: DataFrame, edges: Seq[(Long, Long)]): Components.Result = {
+      val res = Components.run(spark, adj)
+      val got = res.labels.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
+      assert(got === InMemoryOracle.components(InMemoryOracle.adj(edges), InMemoryOracle.nodes(edges)), name)
+      res
+    }
+    def shape(name: String, edges: Seq[(Long, Long)]) = check(name, adjOf(edges), edges)
+    shape("twocomp", twocomp)
+    shape("sparse ER", erGraph(40, 0.04, seed = 5)) // several components
+    assert(shape("star", star5).iterations === 1, "an input that already is a star keeps one round")
+    assert(shape("two disjoint stars", star5 ++ (11L to 14L).map(10L -> _)).iterations === 1)
+    shape("path", (0L until 20L).map(i => i -> (i + 1)))
+    shape("cycle", (0L until 12L).map(i => i -> ((i + 1) % 12)))
+    shape("K5", for (i <- 0L until 5L; j <- (i + 1) until 5L) yield i -> j)
+    for (seed <- 1 to 5; p <- Seq(0.04, 0.12)) shape(s"ER(40, $p) seed $seed", erGraph(40, p, seed))
+    // the path 0-1-2-3 with every neighbour listed twice: the contraction
+    // reads the duplicates, the star check only distinct'd rounds
+    val dup = Seq(0L -> Seq(1L, 1L), 1L -> Seq(0L, 2L, 0L, 2L), 2L -> Seq(1L, 3L, 3L, 1L), 3L -> Seq(2L, 2L))
+      .toDF("src", "neighbors")
+    check("duplicated neighbours", dup, path4)
+  }
 
-    val edges = erGraph(40, 0.04, seed = 5) // sparse → several components
-    val got = Components.run(spark, adjOf(edges)).labels
-      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
-    val exp = InMemoryOracle.components(InMemoryOracle.adj(edges), InMemoryOracle.nodes(edges))
-    assert(got === exp)
+  /** A `LocalMaterializer` that counts the rounds a loop computes: every
+    * checkpoint after iteration 0.
+    */
+  private final class RoundCounter(window: Int) extends Materializer {
+    private val local = new LocalMaterializer(window)
+    var computed = 0
+    private def counted(df: DataFrame, iter: Int) = { if (iter > 0) computed += 1; df }
+    override def iterate(df: DataFrame, iter: Int, metric: Double): DataFrame =
+      counted(local.iterate(df, iter, metric), iter)
+    override def iterateDeferred(df: DataFrame, iter: Int, metric: Double): DataFrame =
+      counted(local.iterateDeferred(df, iter, metric), iter)
+    override def chainCapacity: Int = local.chainCapacity
+  }
+
+  test("components: rounds kept against rounds computed") {
+    // the loop keeps the first star-forest round; the rest of its chunk is
+    // computed and released, so an input that already is a star still
+    // pays a whole chunk
+    def path(n: Long) = (0L until n - 1).map(i => i -> (i + 1))
+    val cases = Seq(
+      ("256-vertex path", path(256), 3, (8, 9)),
+      ("256-vertex path, chunks of 4", path(256), 0, (8, 8)),
+      ("30-vertex path", path(30), 3, (5, 6)),
+      ("20-leaf star", (1L to 20L).map(0L -> _), 3, (1, 3)),
+      ("self loops only", Seq(0L -> 0L, 1L -> 1L, 2L -> 2L), 3, (1, 3)))
+    cases.foreach { case (name, edges, window, want) =>
+      val mat = new RoundCounter(window)
+      val res = Components.run(spark, adjOf(edges), mat = mat)
+      assert((res.iterations, mat.computed) === want, s"$name: (kept, computed)")
+    }
   }
 
   test("components: large-star/small-star rounds ≪ diameter on a path graph") {
@@ -108,7 +153,7 @@ class AlgoSpec extends SparkTestBase {
 
   test("components on a self-loop-only graph: own-id labels, one kept round") {
     // every edge is a self loop, so the oriented edge set is empty and
-    // already the fixpoint: the first round finds it unchanged and is kept
+    // already a star forest: the first round passes the check and is kept
     val res = Components.run(spark, adjOf(Seq(0L -> 0L, 1L -> 1L, 2L -> 2L)))
     val got = res.labels.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("label")).toMap
     assert(got === Map(0L -> 0L, 1L -> 1L, 2L -> 2L))

@@ -39,8 +39,10 @@ class MaterializerSpec extends SparkTestBase {
     assert(out.count() === 200L)
   }
 
-  /** Jobs of a loop's SECOND run: the first pays any first-use set-up jobs. */
-  private def loopJobs(run: () => Any): Int = { run(); jobsDuring(run())._2 }
+  /** Jobs of one run of a loop. A first run submits the same jobs as a
+    * second, also as the first loop in a fresh JVM, so no run goes unmeasured.
+    */
+  private def loopJobs(run: () => Any): Int = jobsDuring(run())._2
 
   test("superstep loops: Spark jobs per run pinned for each loop and materializer") {
     import spark.implicits._
